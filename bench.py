@@ -847,97 +847,6 @@ def run_degrade_job(
     return out
 
 
-def _shuffle_write_bytes(spark) -> int:
-    """Total shuffle-write bytes across completed stages, via the local
-    status REST API (requires ``spark.ui.enabled=true`` in the session).
-    Used only by benches that report shuffle volume as evidence."""
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app_id}/stages?status=complete") as r:
-        stages = json.loads(r.read())
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-
-
-def run_vertex_degrade_job(
-    spark,
-    cpus: int,
-    n_points: int = 2_000_000,
-    n_polys: int = 1_000,
-    n_vertices: int = 1_024,
-) -> dict:
-    """VERDICT r4 #1 evidence: ``pip_join_shuffle`` at REALISTIC vertex
-    counts (an OSM coastline multipolygon has 10^4+ vertices — the r4
-    degrade bench used 5-vertex squares). Runs the identical
-    1k-polygon × ``n_vertices``-vertex-ring join twice — inline
-    refinement (ring JSON rides every boundary-candidate row: shuffle
-    bytes ∝ candidates × ring size) vs co-grouped refinement (ring ships
-    once per (polygon, salt-bucket) group: geometry bytes independent of
-    the candidate count) — and reports wall time + measured shuffle-write
-    bytes for each, plus the matched result counts."""
-    import math
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from osmflat_rs_spark.operators.spatial_join import pip_join_shuffle
-
-    LAT0, LATSPAN = 500_000_000, 100_000_000
-    LON0, LONSPAN = 100_000_000, 200_000_000
-    pts = (
-        spark.range(n_points)
-        .select(
-            F.col("id").alias("node_idx"),
-            (F.lit(LAT0) + (F.col("id") * 48271) % F.lit(LATSPAN)).alias("lat"),
-            (F.lit(LON0) + (F.col("id") * 16807) % F.lit(LONSPAN)).alias("lon"),
-        )
-        .persist()
-    )
-    pts.count()
-
-    # n_polys regular n_vertices-gons (near-circles) on a grid over the
-    # window — every ring is ~n_vertices × ~30 bytes of JSON, the payload
-    # whose per-candidate duplication this bench measures
-    g = int(math.ceil(math.sqrt(n_polys)))
-    cw, ch = LONSPAN // g, LATSPAN // g
-    radius = min(cw, ch) // 4
-    ids, rings = [], []
-    for i in range(n_polys):
-        cx = LON0 + (i % g) * cw + cw // 2
-        cy = LAT0 + (i // g) * ch + ch // 2
-        ring = [
-            (
-                cy + int(radius * math.sin(2 * math.pi * v / n_vertices)),
-                cx + int(radius * math.cos(2 * math.pi * v / n_vertices)),
-            )
-            for v in range(n_vertices)
-        ]
-        ids.append(f"p{i:05d}")
-        rings.append(ring)
-    polys = spark.createDataFrame(
-        pd.DataFrame({"polygon_id": ids, "ring": rings}),
-        schema="polygon_id string, ring array<struct<lat:long,lon:long>>",
-    )
-
-    _force(spark.range(4 * cpus).repartition(2 * cpus).mapInPandas(_warm_pandas_fn(), schema="id long"))
-    out = {"cpus": cpus, "n_points": n_points, "n_polys": n_polys, "n_vertices": n_vertices}
-    counts = {}
-    for mode in ("cogroup", "inline"):
-        b0 = _shuffle_write_bytes(spark)
-        t0 = time.time()
-        counts[mode] = pip_join_shuffle(pts, polys, cover_res=12, refine_mode=mode).count()
-        out[f"{mode}_sec"] = round(time.time() - t0, 3)
-        out[f"{mode}_shuffle_mb"] = round((_shuffle_write_bytes(spark) - b0) / 1e6, 1)
-        print(f"vertex-degrade {mode}: {out[f'{mode}_sec']}s "
-              f"{out[f'{mode}_shuffle_mb']}MB shuffle", file=sys.stderr, flush=True)
-    if counts["cogroup"] != counts["inline"]:
-        raise RuntimeError(f"refine-mode result mismatch: {counts}")
-    out["pairs"] = counts["cogroup"]
-    pts.unpersist()
-    return out
-
-
 def run_poly_bench(spark, cpus: int, n_polys: int = 30_000) -> dict:
     """Polygon-polygon intersection join throughput at constant overlap
     density: n equal hexagons with xxhash64-scattered centers over a box
@@ -1702,32 +1611,6 @@ def main():
             n_queries=int(os.environ.get("SPARK_GRAFT_DEGRADE_QUERIES", "1000000")),
         )
         out["metric"] = "degrade-path wall-clock (10k-polygon shuffle PIP; 1M-query no-broadcast kNN)"
-        out["unit"] = "sec"
-        print(json.dumps(out))
-        spark.stop()
-        return
-
-    if "--degrade-vertex" in sys.argv:
-        from osmflat_rs_spark.session import get_spark
-
-        cpus = CPUS if "--cpus" not in sys.argv else int(sys.argv[sys.argv.index("--cpus") + 1])
-        spark = get_spark(
-            "bench-degrade-vertex",
-            master=f"local[{cpus}]",
-            shuffle_partitions=max(8, 2 * cpus),
-            extra_conf={
-                "spark.ui.enabled": "true",  # shuffle-bytes evidence via status REST
-                "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-            },
-        )
-        out = run_vertex_degrade_job(
-            spark,
-            cpus,
-            n_points=int(os.environ.get("SPARK_GRAFT_DEGRADE_POINTS", "2000000")),
-            n_polys=int(os.environ.get("SPARK_GRAFT_DEGRADE_POLYS", "1000")),
-            n_vertices=int(os.environ.get("SPARK_GRAFT_DEGRADE_VERTICES", "1024")),
-        )
-        out["metric"] = "large-vertex shuffle-PIP refine modes (wall sec + shuffle-write bytes)"
         out["unit"] = "sec"
         print(json.dumps(out))
         spark.stop()

@@ -52,43 +52,6 @@ def haversine_m_fixed(lat1: Column, lon1: Column, lat2: Column, lon2: Column) ->
     return haversine_m(to_degrees(lat1), to_degrees(lon1), to_degrees(lat2), to_degrees(lon2))
 
 
-def sq_euclid_fixed(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Exact integer squared euclidean distance in fixed-point space —
-    the spec form of the metric (knn.py's hot path uses its own
-    CLAMPED variant so the brute-force fallback cannot overflow int64
-    on near-antipodal deltas; see knn.py with_dist).
-
-    Operands are cast to long BEFORE subtracting: with IntegerType
-    fixed-point columns a lon delta reaches 3.6e9 > 2^31-1, so
-    subtract-then-cast would wrap (or throw under ANSI) before the
-    widening. Caller must keep |delta| < ~3.04e9 so dlat²+dlon² fits
-    int64 (always true for valid lat/lon fixed-point ranges after the
-    long casts)."""
-    dlat = lat2.cast("long") - lat1.cast("long")
-    dlon = lon2.cast("long") - lon1.cast("long")
-    return dlat * dlat + dlon * dlon
-
-
-def affine_pixel(
-    coord: Column, c_min: Column | float, c_max: Column | float, extent: int, invert: bool = False
-) -> Column:
-    """Geo → integer pixel on a raster of ``extent`` pixels.
-
-    ``px = floor((c - min) * (extent-1) / (max - min))`` with optional
-    y-inversion (raster origin top-left), clamped to [0, extent-1].
-    Mirrors render-roads.rs:71-81.
-    """
-    span = (F.lit(c_max) if not isinstance(c_max, Column) else c_max) - (
-        F.lit(c_min) if not isinstance(c_min, Column) else c_min
-    )
-    lo = F.lit(c_min) if not isinstance(c_min, Column) else c_min
-    px = F.floor((coord - lo) * F.lit(float(extent - 1)) / span).cast("int")
-    px = F.greatest(F.lit(0), F.least(F.lit(extent - 1), px))
-    if invert:
-        px = F.lit(extent - 1) - px
-    return px
-
-
 def mercator_tile_x(lon_deg: Column, zoom: int) -> Column:
     """Slippy-map tile X at ``zoom`` (OSM wiki formula), clamped."""
     n = float(1 << zoom)

@@ -152,14 +152,6 @@ def _keyed(docs: DataFrame) -> DataFrame:
     )
 
 
-def _assemble_docs(docs: DataFrame, carrier: bool = True) -> DataFrame:
-    """ONE pass over docs: per-doc row with every kind flattened to an
-    ordered array (in-row, no shuffle at all — the arrays are derived from
-    the sorted span array directly). Offset ties break by original array
-    position (stable order, same rule as ``parse_spans`` / the oracle)."""
-    return _assemble_keyed(_keyed(docs), carrier=carrier)
-
-
 def _assemble_keyed(keyed: DataFrame, carrier: bool = True) -> DataFrame:
     """Per-kind array assembly from a (doc_id, spans, entity_type, osm_id
     [, eidx]) row — pure in-row transforms; extra input columns pass

@@ -1,20 +1,22 @@
-"""kNN lookup via cell-ring expansion + per-query top-k window.
+"""kNN lookup via cell-cover candidates + per-query top-k window.
 
 North-rule operator (no reference analog — the reference's only lookup
 structure is the id dictionary, osmflatc/src/ids.rs:96-158; this is its
 spatial generalization).
 
-Algorithm (exact, guaranteed):
-1. start with a disk cover of radius r around each query point (cells at
-   the points' index resolution);
+Algorithm (``knn_join_bulk`` — exact, guaranteed, one lazy plan with no
+driver loop):
+1. explode each query to the cells covering a disk of radius r around it
+   (cells at the points' index resolution);
 2. equi-join points on cell (cover side broadcast — queries are few
-   relative to points), exact haversine via a vectorized NumPy pandas UDF
-   (bit-identical to the model oracle's kernel);
+   relative to points), exact distance: haversine via a vectorized NumPy
+   pandas UDF (bit-identical to the model oracle's kernel) or pure-JVM
+   int64 squared euclid;
 3. per-query top-k by (dist, point_id) with ``row_number() <= k``;
 4. a query is *settled* when it found ≥k candidates AND its kth distance
    ≤ r (nothing outside the covered disk can beat rank k). Unsettled
-   queries double r and repeat — a driver loop over a shrinking query
-   set, ≤ O(log) rounds.
+   queries fall back to an exact broadcast scan of the point table in
+   the same plan; AQE drops that branch when every query settles.
 """
 
 from __future__ import annotations
@@ -244,9 +246,8 @@ def knn_join_bulk(
     backend=None,
     cell_col: str | None = None,
 ) -> DataFrame:
-    """Fully-distributed kNN — no driver loop, no per-round collect
-    (contrast: ``knn_join`` below iterates driver-side, right for dozens
-    of queries, wrong for millions). Construction is LAZY: no Spark jobs
+    """Fully-distributed kNN — no driver loop, no per-round collect.
+    Construction is LAZY: no Spark jobs
     run until the returned DataFrame is acted on (asserted in
     tests/test_spatial.py::test_knn_bulk_construction_is_lazy).
 
@@ -425,106 +426,6 @@ def radius_join(
         .select("query_id", "_nid", "dist_m")
         .withColumnRenamed("_nid", id_col)
     )
-
-
-def knn_join(
-    points: DataFrame,
-    queries: pd.DataFrame,  # columns: query_id, lat, lon (fixed-point ints)
-    k: int = 5,
-    res: int = 14,
-    init_radius_m: float = 500.0,
-    max_rounds: int = 20,
-) -> DataFrame:
-    """→ DataFrame(query_id, rank, node_idx, dist_m), rank 1..k by
-    (dist, node_idx) — exact kNN, tie-broken deterministically.
-
-    Driver-loop form: right for DOZENS of queries (interactive lookups,
-    ring expansion with per-round driver collects). Guarded: large query
-    sets must use ``knn_join_bulk`` (fully distributed, no driver loop)."""
-    if len(queries) > 10_000:
-        raise ValueError(
-            f"knn_join is the driver-loop form (per-round toPandas); "
-            f"{len(queries)} queries would collect candidate sets to the driver "
-            f"every round — use knn_join_bulk for large query sets"
-        )
-    spark = points.sparkSession
-    pts = (
-        points.select(F.col("node_idx"), F.col("lat").cast("long"), F.col("lon").cast("long"))
-        .filter(F.col("lat").isNotNull() & F.col("lon").isNotNull())
-        .withColumn("cell", cells.cell_id_expr("lat", "lon", res))
-    )
-    pts = pts.persist()
-
-    # once the search radius covers the whole globe, the candidate set IS
-    # the corpus: accept whatever exists (possibly < k rows — a corpus
-    # with fewer than k points has a well-defined answer, and no larger
-    # radius can add candidates). Without this, sparse/remote workloads
-    # ran all rounds then raised, with a cover that quadruples per
-    # doubling (driver-side blowup), and defaults capped the reach at
-    # 500*2^11 ≈ 1,024 km — far short of the ~20,015 km antipodal max.
-    GLOBE_M = 20_100_000.0
-
-    pending = queries.copy()
-    radius = {qid: init_radius_m for qid in pending["query_id"]}
-    settled_parts: list[pd.DataFrame] = []
-
-    try:
-        for _ in range(max_rounds):
-            if pending.empty:
-                break
-            # per-round EFFECTIVE resolution sized to the largest pending
-            # radius: disk_cover at fixed res grows quadratically with the
-            # radius (a globe-radius bbox at res 14 is 2^28 cells — driver
-            # OOM). Coarsening keeps every cover ≈ ≤4k cells; points join on
-            # their Morton ANCESTOR cell (pure shiftright), so the cover is
-            # still an exact superset and settledness stays sound.
-            max_r = max(radius[qid] for qid in pending["query_id"])
-            span = 2 * int(max_r / 111_320.0 * COORD_SCALE) + 1
-            eff_res = min(res, cells.pick_cover_res(span, span, target_cells=4096))
-            cover_rows = []
-            for q in pending.itertuples():
-                for c in cells.disk_cover(int(q.lat), int(q.lon), radius[q.query_id], eff_res):
-                    cover_rows.append((q.query_id, int(q.lat), int(q.lon), int(c)))
-            cover = spark.createDataFrame(
-                pd.DataFrame(cover_rows, columns=["query_id", "q_lat", "q_lon", "jcell"]),
-                schema="query_id string, q_lat long, q_lon long, jcell long",
-            )
-            jcell = F.shiftright(F.col("cell"), 2 * (res - eff_res)) if eff_res < res else F.col("cell")
-            cand = (
-                pts.withColumn("jcell", jcell)
-                .join(F.broadcast(cover), "jcell")
-                .withColumn("dist_m", haversine_np_udf("q_lat", "q_lon", "lat", "lon"))
-            )
-            w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col("node_idx").asc())
-            topk = (
-                cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "node_idx", "dist_m")
-            )
-            pdf = topk.toPandas()
-            # settled: k results with kth dist within the guaranteed radius,
-            # OR the radius already covered the entire globe
-            kth = pdf.groupby("query_id").agg(n=("rank", "size"), kd=("dist_m", "max"))
-            done = set(
-                qid for qid, row in kth.iterrows() if row["n"] >= k and row["kd"] <= radius[qid]
-            )
-            done |= {qid for qid in pending["query_id"] if radius[qid] >= GLOBE_M}
-            if not pdf.empty and done:
-                settled_parts.append(pdf[pdf["query_id"].isin(done)])
-            pending = pending[~pending["query_id"].isin(done)]
-            for qid in pending["query_id"]:
-                radius[qid] = min(radius[qid] * 2.0, GLOBE_M)
-        else:
-            if not pending.empty:
-                raise RuntimeError(f"knn did not settle for queries: {list(pending['query_id'])}")
-    finally:
-        pts.unpersist()
-    out = (
-        pd.concat(settled_parts, ignore_index=True)
-        if settled_parts
-        else pd.DataFrame(columns=["query_id", "rank", "node_idx", "dist_m"])
-    )
-    return spark.createDataFrame(out, schema="query_id string, rank int, node_idx long, dist_m double")
 
 
 def isolated_points(

@@ -36,6 +36,8 @@ Scale design:
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -43,6 +45,10 @@ from pyspark.sql import functions as F
 
 from osmflat_rs_spark.functions import cells
 from osmflat_rs_spark.functions.pip import PolygonIndex
+
+# polygon count at/above which ``pip_join`` builds its classified covers
+# across executors instead of in a driver loop (see ``pip_join``)
+DISTRIBUTED_COVER_THRESHOLD = 256
 
 
 def _rings_col(polygons: DataFrame):
@@ -58,21 +64,33 @@ def _rings_col(polygons: DataFrame):
     raise ValueError("polygon table needs a 'ring' or 'rings' column")
 
 
+def _ring_arrays(rings) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Multi-ring geometry (a sequence of rings of ``lat``/``lon``
+    mappings — collected Rows or parsed JSON) → the (lon, lat) int64
+    array pairs the cover and exact kernels take."""
+    return [
+        (
+            np.array([v["lon"] for v in ring], dtype=np.int64),
+            np.array([v["lat"] for v in ring], dtype=np.int64),
+        )
+        for ring in rings
+    ]
+
+
+def _rings_json_table(polygons: DataFrame) -> DataFrame:
+    """(polygon_id, rings_json). Rings travel as a JSON string: a nested
+    array<array<struct>> column breaks Spark's Arrow→pandas ndarray
+    conversion when ring lengths differ (inhomogeneous-shape
+    ValueError), and the kernels want plain Python lists anyway — one
+    ``json.loads`` per polygon."""
+    return polygons.select("polygon_id", F.to_json(_rings_col(polygons)).alias("rings_json"))
+
+
 def build_polygon_index(polygons: DataFrame) -> PolygonIndex:
     """Collect the (small) polygon table and pack it for broadcast.
     Accepts single-ring (``ring``) or multi-ring (``rings``) schemas."""
     rows = polygons.select("polygon_id", _rings_col(polygons).alias("rings")).collect()
-    polys = []
-    for r in rows:
-        rings = [
-            (
-                np.array([v["lon"] for v in ring], dtype=np.int64),
-                np.array([v["lat"] for v in ring], dtype=np.int64),
-            )
-            for ring in r["rings"]
-        ]
-        polys.append((r["polygon_id"], rings))
-    return PolygonIndex.build_multi(polys)
+    return PolygonIndex.build_multi([(r["polygon_id"], _ring_arrays(r["rings"])) for r in rows])
 
 
 def _pick_res(index: PolygonIndex, target_cells: int) -> int:
@@ -81,6 +99,37 @@ def _pick_res(index: PolygonIndex, target_cells: int) -> int:
     spans_x = (index.bbox[:, 1] - index.bbox[:, 0]).max()
     spans_y = (index.bbox[:, 3] - index.bbox[:, 2]).max()
     return cells.pick_cover_res(int(spans_y), int(spans_x), target_cells)
+
+
+def _broadcast_refine_fn(bc, carry: list[str], fill_rule: str = "evenodd"):
+    """The exact phase over a broadcast ``PolygonIndex`` — a
+    ``mapInPandas`` kernel over (polygon_id, _pt_id, _lat, _lon[,
+    *carry]) candidate batches → (polygon_id, _pt_id[, *carry]). Shared
+    by ``pip_join`` and ``pip_join_direct``; returned as a closure so
+    cloudpickle ships it by value."""
+
+    def refine(batches):
+        idx: PolygonIndex = bc.value
+        id_to_i = {pid: i for i, pid in enumerate(idx.ids)}
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            keep_parts = []
+            for pid, grp in pdf.groupby("polygon_id", sort=False):
+                mask = idx.contains(
+                    id_to_i[pid],
+                    grp["_lon"].to_numpy(np.int64),
+                    grp["_lat"].to_numpy(np.int64),
+                    fill_rule=fill_rule,
+                )
+                if mask.any():
+                    out = grp.loc[mask, ["_pt_id", *carry]].copy()
+                    out["polygon_id"] = pid
+                    keep_parts.append(out)
+            if keep_parts:
+                yield pd.concat(keep_parts)[["polygon_id", "_pt_id", *carry]]
+
+    return refine
 
 
 def pip_join(
@@ -93,7 +142,6 @@ def pip_join(
     salt: int | None = None,
     target_cells_per_polygon: int = 4096,
     backend=None,
-    distributed_cover_threshold: int = 256,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
     """→ DataFrame(polygon_id, <point_id>[, *carry_cols]) — exact
@@ -119,7 +167,7 @@ def pip_join(
     flag yields identical results. Non-default backends must pass an
     explicit ``cover_res`` (resolution scales are scheme-specific).
 
-    Cover construction (r4): below ``distributed_cover_threshold``
+    Cover construction (r4): below ``DISTRIBUTED_COVER_THRESHOLD``
     polygons the covers are built in a driver loop (no job, lowest
     latency); at or above it they are computed inside ``mapInPandas``
     across executors — the driver loop is O(n_polys) serial Python and
@@ -139,7 +187,7 @@ def pip_join(
     # classified cover (interior cells short-circuit the exact phase
     # entirely; multi-ring polygons/holes go through the generic even-odd
     # composition, cell_backend.polygon_cover_classified_multi)
-    if len(index.ids) >= distributed_cover_threshold:
+    if len(index.ids) >= DISTRIBUTED_COVER_THRESHOLD:
         cover = _distributed_cover(polygons, be, res)
     else:
         cover_rows = []
@@ -179,66 +227,38 @@ def pip_join(
         )
 
     bc = spark.sparkContext.broadcast(index)
-
-    def refine(batches):
-        idx: PolygonIndex = bc.value
-        id_to_i = {pid: i for i, pid in enumerate(idx.ids)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep_parts = []
-            for pid, grp in pdf.groupby("polygon_id", sort=False):
-                mask = idx.contains(
-                    id_to_i[pid],
-                    grp["_lon"].to_numpy(np.int64),
-                    grp["_lat"].to_numpy(np.int64),
-                )
-                if mask.any():
-                    out = grp.loc[mask, ["_pt_id", *carry]].copy()
-                    out["polygon_id"] = pid
-                    keep_parts.append(out)
-            if keep_parts:
-                yield pd.concat(keep_parts)[["polygon_id", "_pt_id", *carry]]
-
     dtypes = dict(points.dtypes)
     out_schema = ", ".join(
         ["polygon_id string", f"_pt_id {dtypes[point_id]}"] + [f"{c} {dtypes[c]}" for c in carry]
     )
-    refined = boundary.mapInPandas(refine, schema=out_schema)
+    refined = boundary.mapInPandas(_broadcast_refine_fn(bc, carry), schema=out_schema)
     fast = inside_fast.select("polygon_id", "_pt_id", *carry)
     return refined.unionByName(fast).withColumnRenamed("_pt_id", point_id)
 
 
 def _distributed_cover(polygons: DataFrame, be, res: int) -> DataFrame:
     """Classified covers computed across executors (one ``mapInPandas``
-    over the polygon table) — the broadcast-mode cover build for LARGE
-    polygon sets. Same kernel as the driver loop, same output schema;
-    the rings travel as JSON for the same Arrow reason as shuffle mode."""
+    over the polygon table) → (cell, polygon_id, interior). The cover
+    stage of ``pip_join_shuffle`` and of ``pip_join`` for LARGE polygon
+    sets; same kernel as ``pip_join``'s driver loop, same output schema."""
 
     def cover_rows(batches):
-        import json
-
         for pdf in batches:
             if pdf.empty:
                 continue
             out_cells, out_ids, out_int = [], [], []
             for pid, rings_json in zip(pdf["polygon_id"], pdf["rings_json"]):
-                rings_np = [
-                    (
-                        np.array([v["lon"] for v in ring], dtype=np.int64),
-                        np.array([v["lat"] for v in ring], dtype=np.int64),
-                    )
-                    for ring in json.loads(rings_json)
-                ]
-                cs, interior = be.polygon_cover_classified_multi(rings_np, res)
+                cs, interior = be.polygon_cover_classified_multi(
+                    _ring_arrays(json.loads(rings_json)), res
+                )
                 out_cells.extend(int(c) for c in cs)
                 out_ids.extend(pid for _ in range(len(cs)))
                 out_int.extend(bool(t) for t in interior)
             yield pd.DataFrame({"cell": out_cells, "polygon_id": out_ids, "interior": out_int})
 
-    return polygons.select(
-        "polygon_id", F.to_json(_rings_col(polygons)).alias("rings_json")
-    ).mapInPandas(cover_rows, schema="cell long, polygon_id string, interior boolean")
+    return _rings_json_table(polygons).mapInPandas(
+        cover_rows, schema="cell long, polygon_id string, interior boolean"
+    )
 
 
 def pip_join_shuffle(
@@ -250,8 +270,6 @@ def pip_join_shuffle(
     cover_res: int = 12,
     salt: int | None = None,
     backend=None,
-    refine_mode: str = "cogroup",
-    refine_salt: int | None = None,
     cell_col: str | None = None,
 ) -> DataFrame:
     """Shuffle-mode two-phase PIP join — the 10^12-scale path when the
@@ -262,39 +280,26 @@ def pip_join_shuffle(
 
     Phase 1 is fully distributed on BOTH sides: each polygon row computes
     its own cell cover inside a ``mapInPandas`` batch (the NumPy cover
-    kernel), explodes to (cell, polygon) rows; points encode their cell
-    JVM-side; the candidate join is a shuffle (sort-merge) equi-join on
-    the cell — AQE's skew-join splitting applies, and ``salt`` adds
-    deterministic hot-cell breaking: the point side appends
-    ``pmod(xxhash64(point_id), salt)``, the cover side replicates ×salt
-    (north rule: "salted repartitioning to break hot-cell skew").
+    kernel, ``_distributed_cover``), explodes to (cell, polygon) rows;
+    points encode their cell JVM-side; the candidate join is a shuffle
+    (sort-merge) equi-join on the cell — AQE's skew-join splitting
+    applies, and ``salt`` adds deterministic hot-cell breaking: the point
+    side appends ``pmod(xxhash64(point_id), salt)``, the cover side
+    replicates ×salt (north rule: "salted repartitioning to break
+    hot-cell skew").
 
-    Phase 2, ``refine_mode``:
-
-    - ``"cogroup"`` (default, r5): candidates travel SLIM — (polygon_id,
-      point_id, lat, lon) only — and are co-grouped with the rings table
-      on (polygon_id, refine-salt bucket) via ``applyInPandas`` cogroup,
-      so each polygon's geometry ships ONCE PER GROUP, not once per
-      candidate row. Total geometry shuffle bytes = refine_salt ×
-      Σ|rings| — independent of the candidate count. This matters for
-      real multipolygons: an OSM coastline relation (the reference's own
-      multipolygon model, osmflat/examples/render-features.rs:133-149)
-      easily has 10⁴-10⁵ vertices; shipping that JSON per candidate row
-      multiplied shuffle bytes by the ring size (VERDICT r4 #1).
-      ``refine_salt`` (default 1 — one group per polygon) bounds the
-      per-group candidate count: a cogroup group is materialized as ONE
-      pandas frame, so raise it when single polygons own very large
-      candidate sets (skew/memory). The trade is explicit: rings
-      replicate ×refine_salt on the wire, so the default keeps geometry
-      bytes = Σ|rings| exactly once, and shuffle-mode's natural regime
-      (polygons ≫ cores — that's why you're not broadcasting) gives
-      per-polygon groups all the parallelism they need.
-
-    - ``"inline"``: the pre-r5 shape — the ring JSON travels WITH every
-      boundary-candidate row and refinement is map-side (zero extra
-      shuffle). Right only when rings are tiny (the 5-vertex bench
-      squares); kept for the A/B degrade bench (bench.py
-      --degrade-vertex measures the crossover).
+    Phase 2 (r5, ``_refine_cogroup``): boundary candidates travel SLIM —
+    (polygon_id, point_id, lat, lon) only — and are co-grouped with the
+    rings table on polygon_id via ``applyInPandas`` cogroup, so each
+    polygon's geometry ships ONCE, not once per candidate row: geometry
+    shuffle bytes = Σ|rings|, independent of the candidate count. This
+    matters for real multipolygons: an OSM coastline relation (the
+    reference's own multipolygon model,
+    osmflat/examples/render-features.rs:133-149) easily has 10⁴-10⁵
+    vertices; shipping that JSON per candidate row multiplied shuffle
+    bytes by the ring size (VERDICT r4 #1). Shuffle mode's natural
+    regime (polygons ≫ cores — that's why you're not broadcasting) gives
+    per-polygon groups all the parallelism they need.
 
     ``cell_col`` (r5): name of a PRECOMPUTED cell column on ``points``
     (same backend, same ``cover_res`` — caller contract; write it with
@@ -306,50 +311,8 @@ def pip_join_shuffle(
     """
     from osmflat_rs_spark.functions.cell_backend import MortonBackend
 
-    if refine_mode not in ("cogroup", "inline"):
-        raise ValueError(f"refine_mode must be 'cogroup' or 'inline', got {refine_mode!r}")
-    spark = points.sparkSession
     be = backend or MortonBackend()
-    inline = refine_mode == "inline"
-
-    # rings travel as a JSON string: a nested array<array<struct>> column
-    # breaks Spark's Arrow→pandas ndarray conversion when ring lengths
-    # differ (inhomogeneous-shape ValueError), and the exact phase wants
-    # plain Python lists anyway — one json.loads per (polygon, batch)
-    def cover_rows(batches):
-        import json
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = {"cell": [], "polygon_id": [], "interior": []}
-            if inline:
-                out["rings_json"] = []
-            for pid, rings_json in zip(pdf["polygon_id"], pdf["rings_json"]):
-                rings = json.loads(rings_json)
-                rings_np = [
-                    (
-                        np.array([v["lon"] for v in ring], dtype=np.int64),
-                        np.array([v["lat"] for v in ring], dtype=np.int64),
-                    )
-                    for ring in rings
-                ]
-                cs, interior = be.polygon_cover_classified_multi(rings_np, cover_res)
-                for c, it in zip(cs, interior):
-                    out["cell"].append(int(c))
-                    out["polygon_id"].append(pid)
-                    if inline:
-                        # interior cells don't need the rings downstream
-                        out["rings_json"].append(None if it else rings_json)
-                    out["interior"].append(bool(it))
-            yield pd.DataFrame(out)
-
-    cover_schema = "cell long, polygon_id string, interior boolean"
-    if inline:
-        cover_schema = "cell long, polygon_id string, rings_json string, interior boolean"
-    cover = polygons.select(
-        "polygon_id", F.to_json(_rings_col(polygons)).alias("rings_json")
-    ).mapInPandas(cover_rows, schema=cover_schema)
+    cover = _distributed_cover(polygons, be, cover_res)
 
     if salt and cell_col is not None:
         raise ValueError("cell_col (bucketed-layout join) is incompatible with salt")
@@ -373,97 +336,34 @@ def pip_join_shuffle(
     candidates = candidates.filter(~F.col("interior"))
 
     out_schema = f"polygon_id string, _pt_id {dict(points.dtypes)[point_id]}"
-    if inline:
-        refined = candidates.mapInPandas(_refine_inline_fn(), schema=out_schema)
-    else:
-        refined = _refine_cogroup(
-            spark, candidates, polygons, out_schema, refine_salt=refine_salt
-        )
+    refined = _refine_cogroup(candidates, polygons, out_schema)
     return refined.unionByName(fast).withColumnRenamed("_pt_id", point_id)
 
 
-def _refine_inline_fn():
-    """Map-side exact refinement over candidate rows that CARRY their
-    ring JSON (``refine_mode='inline'``). Returned as a closure so
-    cloudpickle ships it by value."""
-
-    def refine(batches):
-        import json
-
-        from osmflat_rs_spark.functions.pip import points_in_rings
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep = []
-            for poly_key, grp in pdf.groupby("polygon_id", sort=False):
-                rings_np = [
-                    (
-                        np.array([v["lon"] for v in ring], dtype=np.int64),
-                        np.array([v["lat"] for v in ring], dtype=np.int64),
-                    )
-                    for ring in json.loads(grp["rings_json"].iloc[0])
-                ]
-                mask = points_in_rings(
-                    grp["_lon"].to_numpy(np.int64), grp["_lat"].to_numpy(np.int64), rings_np
-                )
-                if mask.any():
-                    out = grp.loc[mask, ["_pt_id"]].copy()
-                    out["polygon_id"] = poly_key
-                    keep.append(out)
-            if keep:
-                yield pd.concat(keep)[["polygon_id", "_pt_id"]]
-
-    return refine
-
-
-def _refine_cogroup(
-    spark, candidates: DataFrame, polygons: DataFrame, out_schema: str, refine_salt: int | None
-) -> DataFrame:
-    """Co-grouped exact refinement (``refine_mode='cogroup'``): slim
-    candidate rows ⋈ the rings table on (polygon_id, salt bucket); the
-    ring JSON is parsed once per GROUP and never rides a candidate row.
-    The salt bucket bounds group size (a cogroup group is one pandas
-    frame) and spreads a hot polygon's refinement across executors —
-    the same role the triangle salt plays in the jaccard blocker."""
-    n_rs = refine_salt if refine_salt is not None else 1
+def _refine_cogroup(candidates: DataFrame, polygons: DataFrame, out_schema: str) -> DataFrame:
+    """Co-grouped exact refinement: slim candidate rows ⋈ the rings
+    table on polygon_id; the ring JSON is parsed once per GROUP and
+    never rides a candidate row."""
     boundary = candidates.select("polygon_id", "_pt_id", "_lat", "_lon")
-    rings_tbl = polygons.select("polygon_id", F.to_json(_rings_col(polygons)).alias("rings_json"))
-    if n_rs > 1:
-        boundary = boundary.withColumn(
-            "_rs", F.pmod(F.xxhash64(F.col("_pt_id")), F.lit(n_rs)).cast("int")
-        )
-        rings_tbl = rings_tbl.withColumn("_rs", F.explode(F.sequence(F.lit(0), F.lit(n_rs - 1))))
-        keys = ["polygon_id", "_rs"]
-    else:
-        keys = ["polygon_id"]
 
     def refine_cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        import json
-
         from osmflat_rs_spark.functions.pip import points_in_rings
 
         if left.empty or right.empty:
             # right empty cannot happen for real candidates (every
             # candidate's polygon_id exists in the polygon table); left
-            # empty is routine under ring replication — empty groups are
-            # the price of salting the ring side
+            # empty is routine — a polygon with no boundary candidates
+            # still forms a cogroup group
             return left.iloc[0:0][["polygon_id", "_pt_id"]]
-        rings_np = [
-            (
-                np.array([v["lon"] for v in ring], dtype=np.int64),
-                np.array([v["lat"] for v in ring], dtype=np.int64),
-            )
-            for ring in json.loads(right["rings_json"].iloc[0])
-        ]
+        rings_np = _ring_arrays(json.loads(right["rings_json"].iloc[0]))
         mask = points_in_rings(
             left["_lon"].to_numpy(np.int64), left["_lat"].to_numpy(np.int64), rings_np
         )
         return left.loc[mask, ["polygon_id", "_pt_id"]]
 
     return (
-        boundary.groupBy(*keys)
-        .cogroup(rings_tbl.groupBy(*keys))
+        boundary.groupBy("polygon_id")
+        .cogroup(_rings_json_table(polygons).groupBy("polygon_id"))
         .applyInPandas(refine_cg, schema=out_schema)
     )
 
@@ -480,7 +380,7 @@ def pip_anti_join(
     outside every district") → the full point rows, columns unchanged.
 
     The containment side runs through the identical two-phase
-    `pip_join` kernel (so every cover/backend/refine-mode seam and its
+    `pip_join` kernel (so every cover/backend seam and its
     exactness guarantees apply verbatim); the negation is one LEFT ANTI
     join keyed by the point id against the DISTINCT matched-id set.
     At scale the anti join shuffles both sides by id — there is no
@@ -733,8 +633,6 @@ def pip_join_direct(
     only: their interior-cell short-circuit classifies covers with the
     even-odd kernel, so a nonzero-rule cover would need its own
     classified-cover construction — out of contract here)."""
-    import pandas as pd
-
     spark = points.sparkSession
     index = build_polygon_index(polygons)
     if fill_rule not in ("evenodd", "nonzero"):
@@ -765,28 +663,6 @@ def pip_join_direct(
 
     bc = spark.sparkContext.broadcast(index)
     id_dtype = dict(points.dtypes)[point_id]
-
-    def refine(batches):
-        idx: PolygonIndex = bc.value
-        id_to_i = {pid: i for i, pid in enumerate(idx.ids)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep_parts = []
-            for pid, grp in pdf.groupby("polygon_id", sort=False):
-                mask = idx.contains(
-                    id_to_i[pid],
-                    grp["_lon"].to_numpy(np.int64),
-                    grp["_lat"].to_numpy(np.int64),
-                    fill_rule=fill_rule,
-                )
-                if mask.any():
-                    out = grp.loc[mask, ["_pt_id"]].copy()
-                    out["polygon_id"] = pid
-                    keep_parts.append(out)
-            if keep_parts:
-                yield pd.concat(keep_parts)[["polygon_id", "_pt_id"]]
-
     return cand.mapInPandas(
-        refine, schema=f"polygon_id string, _pt_id {id_dtype}"
+        _broadcast_refine_fn(bc, [], fill_rule), schema=f"polygon_id string, _pt_id {id_dtype}"
     ).withColumnRenamed("_pt_id", point_id)

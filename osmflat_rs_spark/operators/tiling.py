@@ -40,32 +40,6 @@ RASTER_H = 512
 TILE_ZOOM = 14
 
 
-def dda_points_expr(x0: Column, y0: Column, x1: Column, y1: Column) -> Column:
-    """Spec-form (array-building) DDA — kept as the readable reference of
-    the line formula; the operators use the 10× faster scalar-explode
-    ``dda_expand`` below. Same closed form, identical pixels.
-
-    array<struct<x:long, y:long>> of the integer line raster between two
-    grid points — closed-form DDA, all int64 JVM arithmetic:
-        p_i = p0 + sign * ((2*|d|*i + m) div (2*m)),  i = 0..m,
-        m = max(|dx|, |dy|).
-    """
-    adx = F.abs(x1 - x0)
-    ady = F.abs(y1 - y0)
-    sx = F.when(x1 >= x0, F.lit(1)).otherwise(F.lit(-1)).cast("long")
-    sy = F.when(y1 >= y0, F.lit(1)).otherwise(F.lit(-1)).cast("long")
-    m = F.greatest(adx, ady)
-    line = F.transform(
-        F.sequence(F.lit(0).cast("long"), m),
-        lambda i: F.struct(
-            (x0 + sx * ((F.lit(2) * adx * i + m).cast("long") / (F.lit(2) * m)).cast("long")).alias("x"),
-            (y0 + sy * ((F.lit(2) * ady * i + m).cast("long") / (F.lit(2) * m)).cast("long")).alias("y"),
-        ),
-    )
-    single = F.array(F.struct(x0.cast("long").alias("x"), y0.cast("long").alias("y")))
-    return F.when(m == 0, single).otherwise(line)
-
-
 def dda_expand(seg: DataFrame, id_cols: list[str], fanout_partitions: int | None = None) -> DataFrame:
     """Scalar-explode DDA: explode the step index FIRST, then compute x/y
     as scalar integer expressions (``div``) — ~10× faster than building

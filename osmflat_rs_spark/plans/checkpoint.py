@@ -24,10 +24,13 @@ runtime sizes anyway. The rewrap goes through the JVM-side
 ``internalCreateDataFrame`` (``private[sql]``, hence public in bytecode
 and callable over py4j — the same RDD, zero data movement); if the
 internal API is unavailable the plain checkpoint is returned, so the
-helper degrades to exactly the old behavior.
+helper degrades to exactly the old behavior, and says so once in the
+log.
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark.sql import DataFrame
 
@@ -35,6 +38,9 @@ try:  # Spark 4 classic namespace; 3.x keeps the same class path importable
     from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 except ImportError:  # pragma: no cover - Spark 3.x
     from pyspark.sql.dataframe import DataFrame as _ClassicDataFrame  # type: ignore
+
+_log = logging.getLogger(__name__)
+_fallback_warned = False
 
 
 def disk_materialize(df: DataFrame) -> DataFrame:
@@ -57,7 +63,15 @@ def disk_materialize(df: DataFrame) -> DataFrame:
 
 def fresh_local_checkpoint(df: DataFrame) -> DataFrame:
     """Eager ``localCheckpoint`` whose result carries DEFAULT size stats
-    instead of the origin plan's multiplied-up BigInt (module doc)."""
+    instead of the origin plan's multiplied-up BigInt (module doc).
+
+    The rewrapped leaf also drops the checkpoint's output partitioning
+    and ordering (a fresh ``LogicalRDD`` reports neither), so a
+    downstream join or aggregate on the key the input was partitioned by
+    shuffles again where the plain checkpoint would not. When the
+    internal API is unavailable the plain checkpoint is returned and a
+    warning is logged once per process."""
+    global _fallback_warned
     ck = df.localCheckpoint(eager=True)
     try:
         jdf = ck._jdf
@@ -65,5 +79,14 @@ def fresh_local_checkpoint(df: DataFrame) -> DataFrame:
             jdf.queryExecution().toRdd(), jdf.schema(), False
         )
         return _ClassicDataFrame(new_jdf, df.sparkSession)
-    except Exception:  # pragma: no cover - internal-API fallback
+    except Exception as e:  # internal-API fallback
+        if not _fallback_warned:
+            _fallback_warned = True
+            _log.warning(
+                "fresh_local_checkpoint: stats-reset rewrap unavailable (%s: %s); "
+                "returning the plain localCheckpoint, whose inherited size "
+                "statistics can stall planning in iterative loops",
+                type(e).__name__,
+                e,
+            )
         return ck

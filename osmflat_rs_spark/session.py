@@ -48,13 +48,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local-mode default sized to the 128 GiB box (r6): iterative
-        # graph operators materialize multi-GB edge checkpoints, and an
-        # 8g heap put their storage in contention with execution memory
-        # at >bench densities (GCLocker allocation deaths). Real
-        # clusters size executors separately; env overrides stay the
-        # contract.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # local-mode default sized to the host (half of RAM, 8g..16g —
+        # see _default_driver_memory); real clusters size executors
+        # separately; env overrides stay the contract.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Align Spark's whole-stage-codegen bailout with HotSpot's actual
@@ -97,13 +94,33 @@ def get_spark(
     return spark
 
 
-def _default_offheap() -> str:
+def _phys_ram_gb() -> int | None:
+    """Physical RAM in whole GiB, or None where sysconf cannot tell."""
     try:
         total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     except (ValueError, OSError, AttributeError):
+        return None
+    return int(total / (1 << 30))
+
+
+def _default_offheap() -> str:
+    ram = _phys_ram_gb()
+    if ram is None:
         return "2g"
-    gb = max(1, min(16, int(total / (1 << 30)) // 8))
-    return f"{gb}g"
+    return f"{max(1, min(16, ram // 8))}g"
+
+
+def _default_driver_memory() -> str:
+    """Half of physical RAM, floored at 8g and capped at 16g. The cap
+    is the r6 128 GiB-box setting (iterative graph operators
+    materialize multi-GB edge checkpoints, and a smaller heap put their
+    storage in contention with execution memory at >bench densities);
+    the half-RAM rule keeps a small host from being promised a heap
+    larger than the machine. Unknown RAM → the 8g floor."""
+    ram = _phys_ram_gb()
+    if ram is None:
+        return "8g"
+    return f"{max(8, min(16, ram // 2))}g"
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -4,9 +4,10 @@ zeros and NaN payloads that pass float == are caught. This predicts a
 byte-hashing driver gate exactly.
 
 Usage: python scripts/check_bitexact.py [sf_dir] [names...]
-Rows are matched order-insensitively by a string key of the NON-float
-columns plus repr of floats rounded for pairing; queries whose rows
-cannot be uniquely keyed fall back to sorted-list comparison.
+Rows are compared order-insensitively, as multisets of canonical rows.
+Floats are NOT rounded: each is its exact IEEE bytes. A failing query
+reports the size of the multiset symmetric difference (rows present on
+one side more often than on the other).
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from __future__ import annotations
 import math
 import struct
 import sys
+from collections import Counter
 
 import duckdb
 
@@ -37,8 +39,11 @@ def canon(v):
         return struct.pack(">d", v)
     if isinstance(v, datetime.datetime):
         return v.isoformat()
-    if isinstance(v, list):
+    # rows are Counter keys (diff_rows): nested values must be hashable
+    if isinstance(v, (list, tuple)):
         return tuple(canon(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((k, canon(x)) for k, x in v.items()))
     return v
 
 
@@ -47,6 +52,12 @@ def rows_of(recs, cols):
         (tuple(canon(r[c]) for c in cols) for r in recs),
         key=lambda t: tuple((x is None, repr(x)) for x in t),
     )
+
+
+def diff_rows(a, b) -> int:
+    """Rows in the multiset symmetric difference of two row lists."""
+    ca, cb = Counter(a), Counter(b)
+    return sum(((ca - cb) + (cb - ca)).values())
 
 
 def main():
@@ -84,9 +95,7 @@ def main():
         if srows == orows:
             print(f"[BIT-OK] {name}: {len(srows)} rows")
         else:
-            diff = sum(1 for a, b in zip(srows, orows) if a != b) + abs(
-                len(srows) - len(orows)
-            )
+            diff = diff_rows(srows, orows)
             print(f"[BIT-FAIL] {name}: {diff} differing rows of {len(orows)}")
             for a, b in zip(srows, orows):
                 if a != b:

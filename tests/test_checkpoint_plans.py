@@ -39,6 +39,27 @@ def test_fresh_local_checkpoint_resets_stats_and_keeps_rows(spark):
     assert sorted(r["u"] for r in d.collect()) == rows0
 
 
+def test_fresh_local_checkpoint_fallback_warns_once(spark, monkeypatch, caplog):
+    """When the internal rewrap fails the plain checkpoint comes back
+    (rows intact) and the fallback is logged once, not once per call."""
+    from osmflat_rs_spark.plans import checkpoint
+
+    def broken(*_a, **_k):
+        raise RuntimeError("no internal API")
+
+    monkeypatch.setattr(checkpoint, "_ClassicDataFrame", broken)
+    monkeypatch.setattr(checkpoint, "_fallback_warned", False)
+    a = spark.range(50)
+    with caplog.at_level("WARNING", logger=checkpoint.__name__):
+        d1 = fresh_local_checkpoint(a)
+        d2 = fresh_local_checkpoint(a)
+    assert sorted(r["id"] for r in d1.collect()) == list(range(50))
+    assert d2.count() == 50
+    warned = [r for r in caplog.records if r.name == checkpoint.__name__]
+    assert len(warned) == 1 and warned[0].levelname == "WARNING"
+    assert "plain localCheckpoint" in warned[0].getMessage()
+
+
 def test_disk_materialize_values_unchanged(spark):
     a = spark.range(1000).select("id", (F.col("id") * 3 % 11).alias("k"))
     d = disk_materialize(a)

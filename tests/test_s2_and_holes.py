@@ -321,20 +321,19 @@ def test_s2_cover_sound_polar_adjacent():
     _check_cover_sound(xs, ys, 8, rng)
 
 
-def test_pip_join_distributed_cover_equal(holes_points, holes_polys):
-    """r4: at/above ``distributed_cover_threshold`` the classified covers
+def test_pip_join_distributed_cover_equal(holes_points, holes_polys, monkeypatch):
+    """r4: at/above ``DISTRIBUTED_COVER_THRESHOLD`` the classified covers
     are computed in ``mapInPandas`` instead of a driver loop — results
     must be identical (same kernel, different placement)."""
+    from osmflat_rs_spark.operators import spatial_join
     from osmflat_rs_spark.operators.spatial_join import pip_join
 
     want = sorted(
         r["pid"] for r in pip_join(holes_points, holes_polys, point_id="pid").collect()
     )
+    monkeypatch.setattr(spatial_join, "DISTRIBUTED_COVER_THRESHOLD", 1)
     got = sorted(
-        r["pid"]
-        for r in pip_join(
-            holes_points, holes_polys, point_id="pid", distributed_cover_threshold=1
-        ).collect()
+        r["pid"] for r in pip_join(holes_points, holes_polys, point_id="pid").collect()
     )
     assert got == want and len(want) > 0
 

@@ -4,7 +4,6 @@ brute-force oracles (north-rule extensions)."""
 import pytest
 
 from osmflat_rs_spark import oracle
-from osmflat_rs_spark.operators.knn import knn_join
 from osmflat_rs_spark.operators.spatial_join import pip_join
 from tests.util import assert_frames_equal, normalize
 
@@ -41,34 +40,6 @@ def test_pip_join_shuffle_mode_same_results(tables, model, poly_df, poly_pdf):
     assert_frames_equal(got, want, ["polygon_id", "node_idx"])
     got_salted = pip_join_shuffle(tables["nodes"], poly_df, cover_res=12, salt=4)
     assert_frames_equal(got_salted, want, ["polygon_id", "node_idx"])
-
-
-def test_pip_join_shuffle_refine_modes_same_results(tables, model, poly_df, poly_pdf):
-    """r5: the co-grouped refinement (rings ship once per group) and the
-    inline refinement (rings ride every candidate row) are physical
-    layouts of the SAME exact semantics — identical pairs for every
-    (mode, refine_salt) combination, including the unsalted single-group
-    cogroup."""
-    from osmflat_rs_spark.operators.spatial_join import pip_join_shuffle
-
-    want = oracle.q_pip_join(model, poly_pdf)
-    for kwargs in (
-        {"refine_mode": "inline"},
-        {"refine_mode": "cogroup", "refine_salt": 1},
-        {"refine_mode": "cogroup", "refine_salt": 7, "salt": 3},
-    ):
-        got = pip_join_shuffle(tables["nodes"], poly_df, cover_res=12, **kwargs)
-        assert_frames_equal(got, want, ["polygon_id", "node_idx"])
-    with pytest.raises(ValueError, match="refine_mode"):
-        pip_join_shuffle(tables["nodes"], poly_df, cover_res=12, refine_mode="bogus")
-
-
-def test_knn_exact(tables, model):
-    queries = oracle.generate_query_points()
-    got = knn_join(tables["nodes"], queries, k=5)
-    want = oracle.q_knn(model, queries, k=5)
-    assert len(want) == 20 * 5
-    assert_frames_equal(got, want, ["query_id", "rank", "node_idx", "dist_m"])
 
 
 def test_cluster_by_cell_layout(tables):
@@ -111,14 +82,6 @@ def test_knn_bulk_matches_oracle(tables, model, spark):
     # tiny radius → all queries take the fallback; still exact
     got2 = knn_join_bulk(tables["nodes"], qdf, k=5, radius_m=5.0)
     assert_frames_equal(got2, want, ["query_id", "rank", "node_idx", "dist_m"])
-
-
-def test_knn_small_radius_still_exact(tables, model):
-    """Force many expansion rounds — results must be identical."""
-    queries = oracle.generate_query_points().head(5)
-    got = knn_join(tables["nodes"], queries, k=5, init_radius_m=10.0)
-    want = oracle.q_knn(model, queries.reset_index(drop=True), k=5)
-    assert_frames_equal(got, want, ["query_id", "rank", "node_idx", "dist_m"])
 
 
 def test_knn_bulk_sqeuclid_matches_bruteforce(tables, spark):

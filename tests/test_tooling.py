@@ -1,0 +1,65 @@
+"""Repository tooling checks: no dead module-level definitions in the
+package, and the bit-exact checker's row-diff count."""
+
+import ast
+import importlib.util
+import re
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "osmflat_rs_spark"
+_SKIP_DIRS = {"__pycache__", "spark-warehouse", "metastore_db"}
+
+
+def _repo_py_files():
+    for path in sorted(REPO.rglob("*.py")):
+        rel = path.relative_to(REPO).parts
+        if any(p.startswith(".") or p in _SKIP_DIRS for p in rel[:-1]):
+            continue
+        yield path
+
+
+def test_no_unreferenced_module_level_defs():
+    """Every module-level function or class in the package is named
+    somewhere in the repo's Python besides its own definition (a call,
+    an import, a test, or a docstring pointing at it). A definition
+    nothing names is dead code: delete it or use it."""
+    texts = {p: p.read_text(encoding="utf-8") for p in _repo_py_files()}
+    dead = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(texts[path], filename=str(path))
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            word = re.compile(rf"\b{re.escape(node.name)}\b")
+            # the definition itself is one occurrence in its own module
+            mentions = sum(len(word.findall(t)) for t in texts.values())
+            if mentions <= 1:
+                dead.append(f"{path.relative_to(REPO)}:{node.lineno} {node.name}")
+    assert not dead, "module-level definitions named nowhere else:\n" + "\n".join(dead)
+
+
+def _load_check_bitexact():
+    spec = importlib.util.spec_from_file_location(
+        "check_bitexact", REPO / "scripts" / "check_bitexact.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_check_bitexact_counts_multiset_difference():
+    """One inserted row is one differing row — a positional pairing
+    would count every row after the insertion point as different."""
+    cb = _load_check_bitexact()
+    cols = ["k", "v"]
+    base = [{"k": i, "v": float(i) / 3} for i in range(10)]
+    extra = base[:3] + [{"k": 99, "v": 0.5}] + base[3:]
+    a, b = cb.rows_of(base, cols), cb.rows_of(extra, cols)
+    assert cb.diff_rows(a, b) == 1
+    assert cb.diff_rows(b, a) == 1
+    assert cb.diff_rows(a, list(reversed(a))) == 0
+    # a duplicated row is a difference; -0.0 vs 0.0 is too (IEEE bytes)
+    assert cb.diff_rows(a, a + a[:1]) == 1
+    assert cb.diff_rows(cb.rows_of([{"k": 0, "v": 0.0}], cols),
+                        cb.rows_of([{"k": 0, "v": -0.0}], cols)) == 2
