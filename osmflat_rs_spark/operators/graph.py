@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osmflat_rs_spark.plans.checkpoint import disk_materialize, fresh_local_checkpoint
+from osmflat_rs_spark.plans.checkpoint import fresh_local_checkpoint
 
 
 def _partition_spanning_forest(und: DataFrame, target_edges_per_task: int = 250_000) -> DataFrame:
@@ -191,11 +191,9 @@ def connected_components(
         # solve_t, n itself is too big for one task and the dense
         # iterative path below takes over (same labels either way).
         reduce_t, solve_t = 250_000, 4_000_000
-        red = disk_materialize(
-            a.filter(F.col("u") != F.col("v")).select(
-                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-            )
-        )
+        red = a.filter(F.col("u") != F.col("v")).select(
+            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+        ).transform(fresh_local_checkpoint, disk=True)
         prev = None
         for _ in range(3):
             n = red.count()
@@ -219,7 +217,7 @@ def connected_components(
             red = fresh_local_checkpoint(_partition_spanning_forest(red, reduce_t))
         # forest floor above the solve budget: node count too large
         # for one task — iterate on the original dense edges below
-    e = both.filter(F.col("u") != F.col("v")).distinct().persist()
+    e = both.filter(F.col("u") != F.col("v")).distinct().transform(fresh_local_checkpoint)
     # nodes come from the PRE-filter edge list so a self-loop registers
     # its node (the documented way to label isolated ids)
     labels = (
@@ -265,7 +263,6 @@ def connected_components(
             break
     else:
         raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
-    e.unpersist()
     return labels.select("node", F.col("lbl").alias("component"))
 
 
@@ -307,7 +304,7 @@ def label_propagation(
         raise ValueError(f"iters must be >= 1, got {iters}")
     a = edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
     both = a.unionByName(a.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    e = both.filter(F.col("u") != F.col("v")).distinct().persist()
+    e = both.filter(F.col("u") != F.col("v")).distinct().transform(fresh_local_checkpoint)
     labels = (
         both.select(F.col("u").alias("node"))
         .distinct()
@@ -332,7 +329,6 @@ def label_propagation(
             .select("node", F.coalesce("wlbl", "lbl").alias("lbl"))
             .transform(fresh_local_checkpoint)
         )
-    e.unpersist()
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -1091,9 +1087,8 @@ def boruvka_mst(
         e = e.groupBy("u", "v").agg(F.min("w").alias("w"))
     # disk-only: the raw edge list scales with graph density and a
     # deserialized in-memory checkpoint OOMed the JVM at 5x the bench
-    # density; every round still reads the cached blocks, and round
-    # checkpoints truncate lineage from round 1 on
-    e = e.transform(disk_materialize)
+    # density; every round reads the checkpointed blocks
+    e = e.transform(fresh_local_checkpoint, disk=True)
     nodes = e.select(F.col("u").alias("node")).unionByName(
         e.select(F.col("v").alias("node"))
     ).distinct()
@@ -1122,7 +1117,7 @@ def boruvka_mst(
                 F.least("cu", "cv").alias("pa"),
                 F.greatest("cu", "cv").alias("pb"),
                 "w", "u", "v",
-            ).transform(disk_materialize)
+            ).transform(fresh_local_checkpoint, disk=True)
         else:
             contracted = (
                 live.groupBy(

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osmflat_rs_spark.plans.checkpoint import disk_materialize, fresh_local_checkpoint
+from osmflat_rs_spark.plans.checkpoint import fresh_local_checkpoint
 
 _P = 1 << 30  # coordinate offset: keys stay positive for |cx|,|cy| < 2^30
 _M = 1 << 31
@@ -252,13 +252,13 @@ def dbscan(
     # consumer, 3x the only O(pairs) stage). Disk-only for pairs: the
     # table scales quadratically with density and a deserialized
     # in-memory checkpoint GCLocker-killed the JVM at 5x the bench
-    # density (see disk_materialize).
+    # density (see plans.checkpoint).
     pairs = (
         radius_join(points, q, radius_m=float(radius), res=res, metric="sqeuclid",
                     id_col=id_col, backend=backend)
         .select(F.col("query_id").cast("long").alias("a"), F.col(id_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .transform(disk_materialize)
+        .transform(fresh_local_checkpoint, disk=True)
     )
     deg = pairs.groupBy("a").agg(F.count(F.lit(1)).alias("_nbrs"))
     core = (
@@ -862,7 +862,7 @@ def spatial_mutual_information(
     base = points.filter(F.col(lat).isNotNull() & F.col(lon).isNotNull())
     obs = base.groupBy(
         ix.alias("ix"), iy.alias("iy"), F.col(cat_col).alias("cat")
-    ).agg(F.count(F.lit(1)).alias("o")).persist()
+    ).agg(F.count(F.lit(1)).alias("o")).transform(fresh_local_checkpoint)
     rows = obs.groupBy("ix", "iy").agg(F.sum("o").alias("rt"))
     cols = obs.groupBy("cat").agg(F.sum("o").alias("ct"))
     tot = obs.agg(F.sum("o").alias("n"))

@@ -1114,7 +1114,7 @@ def dsir_importance(
     target domain" — resample on it to tilt a 100-TB crawl toward a
     quality corpus without training a classifier.
 
-    Scale shape: the corpus is exploded ONCE into a persisted (doc,
+    Scale shape: the corpus is exploded ONCE into a checkpointed (doc,
     target-flag, bucket) multiplicity table — the single corpus-keyed
     exchange — and BOTH distributions, the totals, and the per-doc
     sums all derive from that reduced table (plan-audited: the naive
@@ -1148,7 +1148,7 @@ def dsir_importance(
     # first draft recomputing the explode for each distribution — 6
     # parquet scans, no ReusedExchange; at 100 TB that is three corpus
     # passes for one)
-    db = ex.groupBy("_id", "_tgt", "_b").agg(F.count(F.lit(1)).alias("_m")).persist()
+    db = fresh_local_checkpoint(ex.groupBy("_id", "_tgt", "_b").agg(F.count(F.lit(1)).alias("_m")))
     dist = db.groupBy("_b").agg(
         F.sum("_m").alias("_cs"),
         F.sum(F.when(F.col("_tgt"), F.col("_m")).otherwise(0)).cast("long").alias("_ct"),
@@ -1191,7 +1191,7 @@ def corpus_kl(
     exactly this (cf. importance resampling's LLR, which this is the
     expectation of under P_group).
 
-    Scale shape: ONE explode pass reduces to the persisted (group,
+    Scale shape: ONE explode pass reduces to the checkpointed (group,
     bucket) table and every margin (bucket, group, grand total)
     re-aggregates THAT, the full group × dim grid
     is rebuilt in-row (explode over ``sequence`` — zero-count buckets
@@ -1211,7 +1211,7 @@ def corpus_kl(
     # one corpus explode; margins derive from the (group, bucket)
     # reduce (the dsir plan-audit lesson: per-consumer recomputation
     # triples the corpus passes)
-    cl = ex.groupBy("_g", "_b").agg(F.count(F.lit(1)).alias("_cl")).persist()
+    cl = fresh_local_checkpoint(ex.groupBy("_g", "_b").agg(F.count(F.lit(1)).alias("_cl")))
     cb = cl.groupBy("_b").agg(F.sum("_cl").alias("_cb"))
     nl = cl.groupBy("_g").agg(F.sum("_cl").alias("_nl"))
     nn = cl.agg(F.sum("_cl").alias("_n"))
@@ -1507,7 +1507,7 @@ def corpus_js(
     when you need a comparable 0..ln2 score across shards of wildly
     different sizes (√JS is a metric).
 
-    Same physical shape as corpus_kl (one corpus explode → persisted
+    Same physical shape as corpus_kl (one corpus explode → checkpointed
     (group, bucket) reduce, margins re-aggregate THAT, full group×dim
     grid in-row, dictionary broadcast); the mixture M needs no extra
     pass — it is an expression over the same (c_l, c_b) pair. ROUND 6.
@@ -1521,7 +1521,7 @@ def corpus_js(
         F.col(group_col).alias("_g"),
         F.explode(F.transform(toks, lambda t: F.pmod(md5_int60(t), F.lit(dim)))).alias("_b"),
     )
-    cl = ex.groupBy("_g", "_b").agg(F.count(F.lit(1)).alias("_cl")).persist()
+    cl = fresh_local_checkpoint(ex.groupBy("_g", "_b").agg(F.count(F.lit(1)).alias("_cl")))
     cb = cl.groupBy("_b").agg(F.sum("_cl").alias("_cb"))
     nl = cl.groupBy("_g").agg(F.sum("_cl").alias("_nl"))
     nn = cl.agg(F.sum("_cl").alias("_n"))

@@ -1,37 +1,49 @@
-"""Stats-resetting eager local checkpoint for iterative operators.
+"""How operators materialize an intermediate: eager local checkpoints only.
 
-``Dataset.checkpoint`` copies the origin plan's Catalyst size statistics
-(``sizeInBytes``, an arbitrary-precision BigInt) onto the ``LogicalRDD``
-it returns. Join size estimation is the PRODUCT of the children's sizes,
-so in an iterative operator — where round k's plan joins round k-1's
-checkpointed frames several times — the carried BigInt's DIGIT COUNT
-multiplies every round. The numbers stay mathematically harmless (they
-are only estimates) but the optimizer has to multiply them: by round ~7
-of a Borůvka/label-propagation loop the driver burns minutes inside
-``BigInteger.multiply`` (Karatsuba/Toom-Cook) while planning trivial
-jobs. Round-6 measurement on the sf0.1 EMST gate: a 5-row contraction
-step took 90 s wall with 120+ s of driver CPU in BigInteger — the
-guide §7.3 "nothing is running, the driver is planning" signature, found
-with a SIGQUIT thread dump.
+Operators use exactly two forms, and never ``persist``/``cache``:
 
-``fresh_local_checkpoint`` materializes the frame exactly like
-``localCheckpoint(eager=True)`` and then rewraps the checkpointed RDD in
-a new leaf WITHOUT the inherited statistics (the leaf reverts to the
-session default size). For the iterative loops this cannot change join
-strategy: the inherited products were already far above every broadcast
-threshold (they only ever grow), and AQE picks the real strategy from
-runtime sizes anyway. The rewrap goes through the JVM-side
-``internalCreateDataFrame`` (``private[sql]``, hence public in bytecode
-and callable over py4j — the same RDD, zero data movement); if the
-internal API is unavailable the plain checkpoint is returned, so the
-helper degrades to exactly the old behavior, and says so once in the
-log.
+- :func:`fresh_local_checkpoint` — for iterative loops and for tables
+  several consumers read (a pair table feeding three joins, a reduce
+  whose margins re-aggregate it). ``disk=True`` stores the blocks
+  DISK_ONLY: serialized and compressed, never competing with execution
+  memory. Use it for tables whose size scales with density (radius-join
+  pairs, raw graph edges): the default deserialized MEMORY_AND_DISK
+  blocks of a 112M-pair dbscan table GCLocker-killed an 8g local driver
+  at 5x the bench density (r6).
+- Spark's plain ``localCheckpoint(eager=True)`` — only where the frame's
+  output partitioning or its plan-time size estimate must survive the
+  materialization (``dedup.py``: keyed ``repartition(n, "_id")`` frames
+  joined on that key). Routing those sites through the rewrap below
+  re-shuffles them: ``ngram_jaccard_prefix_docs`` at sf0.1 went from
+  6.2 to 11.3 s (and 7.4 to 13.6 s in a second set of 5 warm runs).
+
+Ownership: neither form registers anything with the session
+CacheManager. The checkpoint blocks belong to the plan that reads them,
+and Spark's ContextCleaner frees them once that plan is garbage
+collected — so an operator call leaves nothing pinned, also when it
+raises half way through a loop.
+
+Why the rewrap: ``localCheckpoint`` copies the origin plan's Catalyst
+``sizeInBytes`` (a BigInt) onto the leaf it returns, and join estimates
+MULTIPLY the children's sizes — so in a loop whose round k joins round
+k-1's checkpoints the BigInt's digit count multiplies per round. By
+round ~7 of a Borůvka/label-propagation loop the driver spends minutes
+in ``BigInteger.multiply`` planning trivial jobs (r6, sf0.1 EMST: a
+5-row contraction step took 90 s wall, 120+ s of driver CPU, found with
+a SIGQUIT thread dump). :func:`fresh_local_checkpoint` rewraps the
+checkpointed RDD in a new leaf at the session default size through the
+JVM-side ``internalCreateDataFrame`` (``private[sql]``, public in
+bytecode: the same RDD, zero data movement). Join strategy cannot
+change — the inherited products were already above every broadcast
+threshold, and AQE picks from runtime sizes. If the internal API is
+unavailable the plain checkpoint is returned, and the log says so once.
 """
 
 from __future__ import annotations
 
 import logging
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 try:  # Spark 4 classic namespace; 3.x keeps the same class path importable
@@ -43,27 +55,11 @@ _log = logging.getLogger(__name__)
 _fallback_warned = False
 
 
-def disk_materialize(df: DataFrame) -> DataFrame:
-    """Materialize a WIDE reused frame to disk-only cache (one count
-    action) instead of a local checkpoint. ``localCheckpoint`` stores
-    deserialized rows MEMORY_AND_DISK; for a pair table whose size
-    scales quadratically with density (e.g. a radius self-join) that
-    competes with execution memory and can GCLocker-kill the JVM at
-    larger scale factors (r6: 112M dbscan pairs on an 8g local driver).
-    DISK_ONLY blocks are serialized+compressed, never evicted by memory
-    pressure, and every consumer still reads them instead of re-running
-    the join. Lineage is kept (non-iterative callers only — an
-    iterative loop still needs the checkpoint's truncation)."""
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.DISK_ONLY)
-    df.count()
-    return df
-
-
-def fresh_local_checkpoint(df: DataFrame) -> DataFrame:
+def fresh_local_checkpoint(df: DataFrame, disk: bool = False) -> DataFrame:
     """Eager ``localCheckpoint`` whose result carries DEFAULT size stats
     instead of the origin plan's multiplied-up BigInt (module doc).
+    ``disk=True`` keeps the blocks DISK_ONLY, for wide density-scaled
+    tables.
 
     The rewrapped leaf also drops the checkpoint's output partitioning
     and ordering (a fresh ``LogicalRDD`` reports neither), so a
@@ -72,7 +68,7 @@ def fresh_local_checkpoint(df: DataFrame) -> DataFrame:
     internal API is unavailable the plain checkpoint is returned and a
     warning is logged once per process."""
     global _fallback_warned
-    ck = df.localCheckpoint(eager=True)
+    ck = df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY if disk else None)
     try:
         jdf = ck._jdf
         new_jdf = df.sparkSession._jsparkSession.internalCreateDataFrame(

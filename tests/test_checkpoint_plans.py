@@ -1,42 +1,60 @@
-"""Round-6 machinery: stats-reset checkpoint (the BigInt snowball fix),
-disk materialization, partition-spanning-forest reduction, the CC
-reduce-then-solve path, and the signed-zero ROUND restoration."""
+"""Round-6 machinery: stats-reset checkpoint (the BigInt snowball fix)
+and its disk-only form, operators leaving no CacheManager entry,
+partition-spanning-forest reduction, the CC reduce-then-solve path, and
+the signed-zero ROUND restoration."""
 
 import math
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from osmflat_rs_spark.operators.graph import (
     _partition_spanning_forest,
     _solve_components_one_task,
+    boruvka_mst,
     connected_components,
+    label_propagation,
 )
-from osmflat_rs_spark.plans.checkpoint import disk_materialize, fresh_local_checkpoint
+from osmflat_rs_spark.operators.hotspot import dbscan, spatial_mutual_information
+from osmflat_rs_spark.operators.textops import corpus_kl
+from osmflat_rs_spark.plans.checkpoint import fresh_local_checkpoint
 
 
 def _stats_digits(df):
     return len(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
 
 
+def _persisted_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_fresh_local_checkpoint_resets_stats_and_keeps_rows(spark):
-    a = spark.range(200).select(F.col("id").alias("u"), (F.col("id") % 7).alias("c"))
-    d = fresh_local_checkpoint(a)
-    rows0 = sorted(r["u"] for r in d.collect())
-    assert rows0 == list(range(200))
-    base_digits = _stats_digits(d)
-    # three rounds of self-joins through the checkpoint: with plain
-    # localCheckpoint the sizeInBytes digit count MULTIPLIES per round
-    # (the r6 Boruvka planning stall); the fresh form must stay flat
-    for _ in range(3):
-        j = (
-            d.join(d.select(F.col("u").alias("v"), F.col("c").alias("c2")), d["c"] == F.col("c2"))
-            .select("u", "c")
-            .dropDuplicates(["u"])
-        )
-        d = fresh_local_checkpoint(j)
-        assert _stats_digits(d) <= base_digits + 2
-    assert sorted(r["u"] for r in d.collect()) == rows0
+    a = spark.range(1000).select(F.col("id").alias("u"), (F.col("id") * 3 % 11).alias("c"))
+    for disk in (False, True):
+        before = _persisted_ids(spark)
+        d = fresh_local_checkpoint(a, disk=disk)
+        if disk:
+            # the r6 GCLocker reason: wide tables keep no deserialized
+            # in-memory copy, so the new checkpoint RDD is disk-only
+            rdds = spark.sparkContext._jsc.getPersistentRDDs()
+            levels = [rdds[i].getStorageLevel() for i in _persisted_ids(spark) - before]
+            assert levels and not any(lv.useMemory() for lv in levels)
+        rows0 = sorted((r["u"], r["c"]) for r in d.collect())
+        assert rows0 == [(i, i * 3 % 11) for i in range(1000)]
+        base_digits = _stats_digits(d)
+        # three rounds of self-joins through the checkpoint: with plain
+        # localCheckpoint the sizeInBytes digit count MULTIPLIES per round
+        # (the r6 Boruvka planning stall); the fresh form must stay flat
+        for _ in range(3):
+            j = (
+                d.join(d.select(F.col("u").alias("v"), F.col("c").alias("c2")), d["c"] == F.col("c2"))
+                .select("u", "c")
+                .dropDuplicates(["u"])
+            )
+            d = fresh_local_checkpoint(j, disk=disk)
+            assert _stats_digits(d) <= base_digits + 2
+        assert sorted((r["u"], r["c"]) for r in d.collect()) == rows0
 
 
 def test_fresh_local_checkpoint_fallback_warns_once(spark, monkeypatch, caplog):
@@ -61,11 +79,72 @@ def test_fresh_local_checkpoint_fallback_warns_once(spark, monkeypatch, caplog):
 
 
 def test_disk_materialize_values_unchanged(spark):
-    a = spark.range(1000).select("id", (F.col("id") * 3 % 11).alias("k"))
-    d = disk_materialize(a)
+    """The disk-only checkpoint (the form that replaced the old
+    persist-based disk materialization) returns the input rows as-is,
+    from a multi-partition input."""
+    a = spark.range(0, 1000, numPartitions=4).select("id", (F.col("id") * 3 % 11).alias("k"))
+    d = fresh_local_checkpoint(a, disk=True)
     assert sorted((r["id"], r["k"]) for r in d.collect()) == sorted(
         (i, i * 3 % 11) for i in range(1000)
     )
+
+
+def _cached_entries(spark):
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def _edges(spark):
+    rng = random.Random(5)
+    return spark.createDataFrame(
+        [(rng.randrange(80), rng.randrange(80), rng.randrange(1, 50)) for _ in range(300)],
+        "src long, dst long, w long",
+    )
+
+
+def _points(spark):
+    rng = random.Random(9)
+    return spark.createDataFrame(
+        [(i, rng.randrange(0, 200_000), rng.randrange(0, 200_000), "ab"[i % 2]) for i in range(300)],
+        "node_idx long, lat long, lon long, cat string",
+    )
+
+
+def _docs(spark):
+    words = ["red", "green", "blue", "cyan", "xx", "yy"]
+    return spark.createDataFrame(
+        [(i, "g%d" % (i % 3), " ".join(words[(i + k) % 6] for k in range(i % 5 + 2))) for i in range(60)],
+        "doc_id long, g string, text string",
+    )
+
+
+def _path_cc_one_round(spark):
+    # a path needs several rounds, so max_iter=1 raises mid-loop
+    path = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="no convergence"):
+        connected_components(path, max_iter=1).count()
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda s: connected_components(_edges(s)).count(),
+        lambda s: connected_components(_edges(s), pre_reduce=True).count(),
+        lambda s: label_propagation(_edges(s)).count(),
+        lambda s: dbscan(_points(s), 25_000, 4).count(),
+        lambda s: boruvka_mst(_edges(s)).count(),
+        lambda s: spatial_mutual_information(_points(s), "cat").count(),
+        lambda s: corpus_kl(_docs(s), "text", "g", dim=32).count(),
+        _path_cc_one_round,
+    ],
+    ids=["cc", "cc_pre_reduce", "lpa", "dbscan", "boruvka", "spatial_mi", "corpus_kl", "cc_raises"],
+)
+def test_operator_calls_leave_no_cache_manager_entry(spark, call):
+    """Operators materialize through local checkpoints only: a call
+    (forced, or raising half way) registers nothing with the session
+    CacheManager, so nothing stays pinned after its result is dropped."""
+    before = _cached_entries(spark)
+    call(spark)
+    assert _cached_entries(spark) == before
 
 
 def _model_components(edges):

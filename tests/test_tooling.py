@@ -1,5 +1,6 @@
 """Repository tooling checks: no dead module-level definitions in the
-package, and the bit-exact checker's row-diff count."""
+package, no persist/cache calls in operators, and the bit-exact
+checker's row-diff count."""
 
 import ast
 import importlib.util
@@ -37,6 +38,24 @@ def test_no_unreferenced_module_level_defs():
             if mentions <= 1:
                 dead.append(f"{path.relative_to(REPO)}:{node.lineno} {node.name}")
     assert not dead, "module-level definitions named nowhere else:\n" + "\n".join(dead)
+
+
+def test_operators_do_not_persist():
+    """Operators materialize through local checkpoints only
+    (``plans.checkpoint``): a ``persist``/``cache`` call pins blocks in
+    the session CacheManager until someone unpersists them, and an
+    ``unpersist`` is dead without one."""
+    found = []
+    for path in sorted((PACKAGE / "operators").rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache", "unpersist")
+            ):
+                found.append(f"{path.relative_to(REPO)}:{node.lineno} .{node.func.attr}(")
+    assert not found, "persist/cache calls in operators:\n" + "\n".join(found)
 
 
 def _load_check_bitexact():
