@@ -158,7 +158,6 @@ def spark_text_docs(
     spark: SparkSession,
     n_docs: int,
     words_per_doc: int = 40,
-    vocab: int = 5000,
     dup_every: int = 10,
 ) -> DataFrame:
     """Deterministic pure-JVM text-document generator for the dedup bench
@@ -175,7 +174,7 @@ def spark_text_docs(
             F.lit("w"),
             F.pmod(
                 F.xxhash64(F.concat_ws(":", base.cast("string"), i.cast("string"))),
-                F.lit(vocab),
+                F.lit(5000),  # vocabulary size
             ).cast("string"),
         ),
     )
@@ -186,50 +185,3 @@ def spark_text_docs(
     ).otherwise(text)
     return spark.range(n_docs).select(F.col("id").alias("doc_id"), text.alias("text"))
 
-
-def spark_embeddings(
-    spark: SparkSession,
-    n_vecs: int,
-    dim: int = 64,
-    dup_every: int = 10,
-    noise: float = 0.3,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Deterministic pure-JVM embedding generator for the near-dup bench
-    (every column a function of ``id`` alone — repartition-invariant, no
-    Python in the plan). Components are xxhash64-derived uniforms in
-    [-1, 1]; every ``dup_every``-th vector is its predecessor plus
-    ``noise``-scaled perturbation (cosine ≈ 1 − noise²/2·3/dim·dim/3 ≈
-    0.95 at the 0.3 default — above the 0.9 near-dup threshold), while
-    independent vectors in this dim meet at |cosine| ≲ 0.1. ``label`` is
-    a ground-truth-preserving blocking key (twins share it by
-    construction): the comparator an all-pairs user would block on."""
-    base = F.when(
-        (F.col("id") % dup_every) == dup_every - 1, F.col("id") - 1
-    ).otherwise(F.col("id"))
-
-    def _u(tag, i):
-        # uniform in [-1, 1] from a per-(row, dim) hash
-        return (
-            F.pmod(
-                F.xxhash64(F.concat_ws(":", tag.cast("string"), F.lit("d"), i.cast("string"))),
-                F.lit(20001),
-            ).cast("double")
-            / F.lit(10000.0)
-            - F.lit(1.0)
-        )
-
-    vec = F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), lambda i: _u(base, i))
-    twin = (F.col("id") % dup_every) == dup_every - 1
-    vec = F.when(
-        twin,
-        F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda i: _u(base, i) + F.lit(noise) * _u(F.col("id"), i),
-        ),
-    ).otherwise(vec)
-    return spark.range(n_vecs).select(
-        F.col("id").alias("vec_id"),
-        vec.alias("embedding"),
-        F.pmod(base, F.lit(n_buckets)).cast("int").alias("label"),
-    )

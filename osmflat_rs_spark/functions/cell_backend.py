@@ -273,8 +273,9 @@ class S2Backend(CellBackend):
     hierarchical subdivision. See s2.py's module docstring for what is
     and is not bit-compatible with Google s2geometry.
 
-    MEASURED ENCODE CONTRACT (r5, VERDICT r4 #5 — ``python bench.py
-    --encode``, 32M rows, local[32], best-of-2): Morton (pure-JVM
+    MEASURED ENCODE CONTRACT (r5, VERDICT r4 #5 — BENCH/BASELINE.md
+    "Round 5: per-backend cell-encode throughput", 32M rows, local[32],
+    best-of-2): Morton (pure-JVM
     codegen) 27.2M rows/s vs S2 (Arrow pandas UDF) 18.3M rows/s — a
     1.49× premium, NOT an order of magnitude: the batch never leaves
     NumPy, so the cost is Arrow transfer + trig, both linear and

@@ -1096,7 +1096,8 @@ def _editdist_qgram(prepared: DataFrame, max_dist: int, q: int) -> DataFrame:
     """Ed-Join-style q-gram prefix filtering (Xiao et al., VLDB'08 —
     the published scale path for edit-distance joins; the length band
     alone degrades to per-bucket all-pairs whenever the corpus shares
-    few lengths, measured in `bench.py --editdist`).
+    few lengths, measured in BENCH/BASELINE.md "Round 5 (continuation
+    2b): fingerprint-join scale paths").
 
     Count-filter foundation: one edit changes at most ``q`` of a
     string's positional q-gram SLOTS, so ED(a,b) ≤ d ⇒ the gram BAG

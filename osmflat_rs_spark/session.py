@@ -23,13 +23,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
+    ``os.cpu_count()``, so an unconfigured session fits its host).
     ``shuffle_partitions`` defaults to the local core count — on a real
     cluster this should be ~2-3x total executor cores and is the single
     most important knob for the 100 TB case (north rule: "explicit
     shuffle-partition tuning").
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

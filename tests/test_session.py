@@ -22,3 +22,43 @@ def test_default_offheap_shares_the_ram_probe(monkeypatch):
     monkeypatch.setattr(session, "_phys_ram_gb", lambda: None)
     assert session._default_offheap() == "2g"
 
+
+
+@pytest.mark.parametrize("env_cpus, want", [(None, 3), ("2", 2)])
+def test_default_master_fits_host(monkeypatch, env_cpus, want):
+    """Without SPARK_GRAFT_CPUS the session takes every host core
+    (``os.cpu_count()``), not a fixed 32; the env var still wins."""
+
+    class _Built(Exception):
+        pass
+
+    class _Builder:
+        conf: dict = {}
+
+        def master(self, m):
+            self.conf["master"] = m
+            return self
+
+        def appName(self, _name):
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            raise _Built
+
+    class _Session:
+        builder = _Builder()
+
+    monkeypatch.setattr(session, "SparkSession", _Session)
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 3)
+    if env_cpus is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", env_cpus)
+    with pytest.raises(_Built):
+        session.get_spark("probe")
+    assert _Builder.conf["master"] == f"local[{want}]"
+    assert _Builder.conf["spark.sql.shuffle.partitions"] == str(want)

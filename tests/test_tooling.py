@@ -1,6 +1,7 @@
 """Repository tooling checks: no dead module-level definitions in the
-package, no persist/cache calls in operators, and the bit-exact
-checker's row-diff count."""
+package, bench.py or scripts/, no persist/cache calls in operators, and
+the gate checker (scripts/gate.py): its row canonicalization, multiset
+row diff, oracle type-widening check and per-gate verdicts."""
 
 import ast
 import importlib.util
@@ -21,13 +22,14 @@ def _repo_py_files():
 
 
 def test_no_unreferenced_module_level_defs():
-    """Every module-level function or class in the package is named
-    somewhere in the repo's Python besides its own definition (a call,
-    an import, a test, or a docstring pointing at it). A definition
-    nothing names is dead code: delete it or use it."""
+    """Every module-level function or class in the package, bench.py and
+    scripts/ is named somewhere in the repo's Python besides its own
+    definition (a call, an import, a test, or a docstring pointing at
+    it). A definition nothing names is dead code: delete it or use it."""
     texts = {p: p.read_text(encoding="utf-8") for p in _repo_py_files()}
     dead = []
-    for path in sorted(PACKAGE.rglob("*.py")):
+    scanned = [*PACKAGE.rglob("*.py"), REPO / "bench.py", *(REPO / "scripts").glob("*.py")]
+    for path in sorted(scanned):
         tree = ast.parse(texts[path], filename=str(path))
         for node in tree.body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -58,19 +60,17 @@ def test_operators_do_not_persist():
     assert not found, "persist/cache calls in operators:\n" + "\n".join(found)
 
 
-def _load_check_bitexact():
-    spec = importlib.util.spec_from_file_location(
-        "check_bitexact", REPO / "scripts" / "check_bitexact.py"
-    )
+def _load_gate():
+    spec = importlib.util.spec_from_file_location("gate", REPO / "scripts" / "gate.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
-def test_check_bitexact_counts_multiset_difference():
+def test_gate_counts_multiset_difference():
     """One inserted row is one differing row — a positional pairing
     would count every row after the insertion point as different."""
-    cb = _load_check_bitexact()
+    cb = _load_gate()
     cols = ["k", "v"]
     base = [{"k": i, "v": float(i) / 3} for i in range(10)]
     extra = base[:3] + [{"k": 99, "v": 0.5}] + base[3:]
@@ -82,3 +82,45 @@ def test_check_bitexact_counts_multiset_difference():
     assert cb.diff_rows(a, a + a[:1]) == 1
     assert cb.diff_rows(cb.rows_of([{"k": 0, "v": 0.0}], cols),
                         cb.rows_of([{"k": 0, "v": -0.0}], cols)) == 2
+
+
+def test_gate_canon_and_widening():
+    """Signed zeros stay apart, NaNs meet, nested lists hash; a DuckDB
+    column widened to HUGEINT is flagged."""
+    import duckdb
+
+    g = _load_gate()
+    assert g.canon(-0.0) != g.canon(0.0)
+    assert g.canon(float("nan")) == g.canon(-float("nan"))
+    nested = g.canon([[1.0, -0.0], {"a": [2.5]}])
+    assert hash(nested) == hash(g.canon([[1.0, -0.0], {"a": [2.5]}]))
+    assert nested != g.canon([[1.0, 0.0], {"a": [2.5]}])
+    con = duckdb.connect()
+    assert g.widened(con.sql("SELECT CAST(1 AS HUGEINT) AS n, 2.5::DOUBLE AS x")) == [
+        ("n", "HUGEINT")
+    ]
+    assert g.widened(con.sql("SELECT CAST(1 AS BIGINT) AS n")) == []
+
+
+def test_gate_verdicts(spark):
+    """q1_pricing matches its oracle, a gate without oracle SQL is
+    rows-only, and a perturbed oracle fails with the first differing
+    row pair."""
+    import __spark_entry__ as entry
+
+    g = _load_gate()
+    sf = "/root/testdata/sf0.001"
+    con = g.oracle_connection(sf)
+    qs, osql = entry.queries(), entry.oracle_sql()
+    assert "jenks_events" not in osql
+    ok = g.check_gate(spark, con, sf, "q1_pricing", qs["q1_pricing"], osql["q1_pricing"])
+    assert ok["verdict"] == "OK" and ok["rows"] > 0 and ok["sec"] >= 0
+    ro = g.check_gate(spark, con, sf, "jenks_events", qs["jenks_events"], None)
+    assert ro["verdict"] == "rows-only" and ro["rows"] > 0
+    bad_sql = osql["q1_pricing"].replace("COUNT(*) AS count_order", "COUNT(*) + 1 AS count_order")
+    assert bad_sql != osql["q1_pricing"]
+    bad = g.check_gate(spark, con, sf, "q1_pricing", qs["q1_pricing"], bad_sql)
+    assert bad["verdict"] == "mismatch"
+    assert bad["differing"] == 2 * ok["rows"]
+    pair = bad["first"]
+    assert pair["oracle"]["count_order"] == pair["spark"]["count_order"] + 1
