@@ -2558,8 +2558,9 @@ def q_kmeans_step_events(spark, sf_dir):
     int64 squared distances with first-match (lowest-index) ties,
     map-side-combined integer sums — the distributed k-means inner
     loop as an all-integer gate (the iterated float trainer,
-    ``ann.train_ivf_centroids_distributed``, stays model-tested; this
-    pins its assignment semantics cross-engine). Oracle restates
+    ``ann.train_ivf_centroids``, runs driver-side on a sample and stays
+    model-tested; this pins the assignment semantics cross-engine).
+    Oracle restates
     list_position(list_min) over the same distance list."""
     _prep(spark)
     from osmflat_rs_spark.operators.knn import kmeans_assign_step
@@ -3345,8 +3346,9 @@ def q_raster_events(spark, sf_dir):
     # repartition(n, key) ahead of the window satisfies its clustering
     # requirement, becomes the stage's ONLY exchange, and AQE leaves
     # explicit-count repartitions alone. (Repartitioning between the
-    # window and the explode does NOT work: same-key exchange is removed
-    # as redundant — see dda_expand's fanout_partitions docstring.)
+    # window and the explode does NOT work: Catalyst removes the
+    # same-key exchange as redundant and the coalesced window
+    # partitioning survives — measured no effect.)
     seg = (
         pts.repartition(spark.sparkContext.defaultParallelism, "user_id")
         .select("user_id", "ts", "event_id", px.alias("x0"), py.alias("y0"))
@@ -5088,19 +5090,16 @@ def q_ann_ivfpq_topk(spark, sf_dir):
 
 
 def q_ann_srp_arrow_topk(spark, sf_dir):
-    """The SAME SRP-LSH operator with ``corpus_encode='arrow'`` (r5): the
-    corpus side buckets via one NumPy matmul per Arrow batch against the
-    identical md5-derived hyperplanes — the bulk-encode path. Same
-    combined bucket space and exact re-rank, so the recall gate must
-    clear identically (pair parity is pinned in
-    test_srp_topk_corpus_encode_parity)."""
+    """Now a duplicate of ``ann_srp_topk``: the Arrow-matmul encode it
+    used to select is the operator's only SRP encode. The gate keeps its
+    name and oracle text so earlier recorded results stay comparable."""
     _prep(spark)
     from osmflat_rs_spark.operators.ann import srp_bucketed_topk
 
     return _ann_recall_gate(
         spark,
         sf_dir,
-        lambda emb, q: srp_bucketed_topk(emb, q, k=ANN_K, dim=64, corpus_encode="arrow"),
+        lambda emb, q: srp_bucketed_topk(emb, q, k=ANN_K, dim=64),
     )
 
 
@@ -5691,7 +5690,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rrf_parts": q_rrf_parts,
         "ndcg_ann": q_ndcg_ann,
         "ann_srp_topk": q_ann_srp_topk,  # recall@5-floor gate (oracled)
-        "ann_srp_arrow_topk": q_ann_srp_arrow_topk,  # same gate, Arrow bulk encode
+        "ann_srp_arrow_topk": q_ann_srp_arrow_topk,  # duplicate of ann_srp_topk
         "ann_ivf_topk": q_ann_ivf_topk,  # recall@5-floor gate (oracled)
         "ann_pq_topk": q_ann_pq_topk,  # recall@5-floor gate (oracled)
         "ann_ivfpq_topk": q_ann_ivfpq_topk,  # recall@5-floor gate (oracled)

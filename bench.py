@@ -150,7 +150,7 @@ def run_suite(cpus: int, sf_dir: str) -> dict:
     wdocs = docs_to_spark(spark, wpdf).repartition(cpus)
     wt = ingest(wdocs, compute_metrics=False, with_dims=False)
     _force(pip_join(wt["nodes"].select("node_idx", "osm_id", "lat", "lon"), polys))
-    _force(tile_assign_segments(refq.road_segments(wt), jvm_tiles=True))
+    _force(tile_assign_segments(refq.road_segments(wt)))
     from osmflat_rs_spark.ingest import unpersist_ingest
 
     unpersist_ingest(wt)  # the warmup's pinned caches must not shadow the timed run
@@ -164,9 +164,10 @@ def run_suite(cpus: int, sf_dir: str) -> dict:
         _force(pip_join(nodes, polys))
         # road_segments at this scale comes out of an AQE-coalesced shuffle
         # as ONE partition; explicit fan-out spreads the DDA explode +
-        # distinct (see dda_expand docstring). The 128M-point jobs pin
-        # minPartitionSize instead and keep their natural partitioning.
-        _force(tile_assign_segments(refq.road_segments(t), jvm_tiles=True, fanout_partitions=cpus))
+        # distinct (see q_raster_events in __spark_entry__.py). The
+        # 128M-point jobs pin minPartitionSize instead and keep their
+        # natural partitioning.
+        _force(tile_assign_segments(refq.road_segments(t), fanout_partitions=cpus))
         dt = min(dt, time.time() - t0)
         unpersist_ingest(t)
         nodes.unpersist()
@@ -230,7 +231,7 @@ def run_scaling_job(spark, cpus: int, n_nodes: int) -> dict:
     nodes.count()
     t = {**t, "nodes": nodes}
     _force(pip_join(nodes, polys))
-    _force(tile_assign_segments(refq.road_segments(t), jvm_tiles=True))
+    _force(tile_assign_segments(refq.road_segments(t)))
     dt = time.time() - t0
     return {"cpus": cpus, "n_docs": n_docs, "seconds": round(dt, 3), "docs_per_sec": round(n_docs / dt, 1)}
 
@@ -303,7 +304,7 @@ def run_spatial_job(spark, cpus: int, n_nodes: int) -> dict:
     t1 = time.time()
     _force(knn_join_bulk(nodes, queries, k=5, radius_m=radius_m))
     t2 = time.time()
-    _force(tile_assign_segments(refq.road_segments({"ways_geo": ways_geo}), jvm_tiles=True))
+    _force(tile_assign_segments(refq.road_segments({"ways_geo": ways_geo})))
     t3 = time.time()
     dt = t3 - t0
     return {

@@ -65,9 +65,8 @@ def cosine_topk(
 
 def _srp_sign(t: int, p: int, d: int) -> float:
     """The deterministic ±1 hyperplane weight for (table, plane, dim) —
-    the ONE definition both the JVM-literal and the Arrow-matmul encodes
-    derive their weights from (divergence would silently split bucket
-    spaces between the two paths)."""
+    the ONE definition of the SRP hyperplanes (``srp_weight_matrix``
+    builds the encode's matmul operand from it)."""
     import hashlib
 
     h = int(hashlib.md5(f"{t}:{p}:{d}".encode()).hexdigest()[:15], 16)
@@ -76,7 +75,7 @@ def _srp_sign(t: int, p: int, d: int) -> float:
 
 def srp_weight_matrix(n_planes: int, n_tables: int, dim: int) -> "np.ndarray":
     """(n_tables·n_planes, dim) float64 matrix of ``_srp_sign`` weights,
-    row t·n_planes + p = hyperplane (t, p) — the Arrow encode's matmul
+    row t·n_planes + p = hyperplane (t, p) — the encode's matmul
     operand, built driver-side once and closure-shipped."""
     return np.array(
         [
@@ -88,71 +87,45 @@ def srp_weight_matrix(n_planes: int, n_tables: int, dim: int) -> "np.ndarray":
     )
 
 
-def srp_bucket_ids_arrow(vec_col, n_planes: int, n_tables: int, dim: int):
-    """Arrow-batched SRP bucket ids: one (batch × dim) @ (dim × T·P)
-    matmul per batch, bits packed per table into combined
-    ``(table << n_planes) | bucket`` longs. Weight matrix is built
-    driver-side from the same md5 ±1 signs as the JVM encode
-    (``srp_weight_matrix``) and rides the UDF closure — k·dim doubles,
-    not per-row work. BLAS-blocked summation can differ from the JVM
-    sequential fold in the last ulp, so a projection EXACTLY on a
-    hyperplane could bucket differently — measured pair-identical on the
-    fixtures; callers that need bit-pinned buckets use the JVM encode."""
+def srp_bucket_ids(vec_col, n_planes: int, n_tables: int, dim: int):
+    """SRP bucket ids → array<long> of n_tables combined
+    ``(table << n_planes) | bucket`` ids: bucket bit p of table t is 1
+    iff Σ_d w[t,p,d]·v[d] > 0, w = ``_srp_sign``. One (batch × dim) @
+    (dim × T·P) matmul per Arrow batch against the closure-shipped
+    ``srp_weight_matrix`` (k·dim doubles, not per-row work) — measured
+    faster than a per-row fold of T·P·dim literal-weight terms. A NULL
+    vector gets an empty array (no candidates); a vector whose length is
+    not ``dim`` raises ValueError in the task. BLAS-blocked summation can
+    differ from a sequential sum in the last ulp, so a projection within
+    an ulp of a hyperplane could flip its bit — pinned against a
+    sequential-sum encode on the fixture embeddings
+    (tests/test_training_ops.py)."""
     from pyspark.sql.functions import pandas_udf
 
     W = srp_weight_matrix(n_planes, n_tables, dim)  # (T*P, dim)
     pow2 = (1 << np.arange(n_planes, dtype=np.int64))  # bit weights per plane
     table_hi = (np.arange(n_tables, dtype=np.int64) << n_planes)
+    no_buckets = np.zeros(0, dtype=np.int64)
 
     @pandas_udf("array<long>")
     def _enc(s: pd.Series) -> pd.Series:
-        M = np.array(s.tolist(), dtype=np.float64)  # (B, dim)
-        if M.size == 0:
-            return pd.Series([], dtype=object)
+        out = [no_buckets] * len(s)
+        rows = np.flatnonzero(s.notna().to_numpy())
+        if len(rows) == 0:
+            return pd.Series(out, dtype=object)
+        vecs = s.iloc[rows].tolist()
+        bad = [len(v) for v in vecs if len(v) != dim]
+        if bad:
+            raise ValueError(f"srp_bucket_ids: dim={dim} but a vector has length {bad[0]}")
+        M = np.array(vecs, dtype=np.float64)  # (B, dim)
         bits = (M @ W.T) > 0  # (B, T*P)
         buckets = (bits.reshape(len(M), n_tables, n_planes) * pow2).sum(axis=2)
         combined = buckets.astype(np.int64) + table_hi  # (B, T)
-        return pd.Series(list(combined))
+        for i, ids in zip(rows, combined):
+            out[i] = ids
+        return pd.Series(out, dtype=object)
 
     return _enc(vec_col)
-
-
-def srp_combined_id(struct_col, n_planes: int):
-    """(table << n_planes) | bucket as a long — maps the JVM encode's
-    (table, bucket) structs into the SAME combined bucket space the
-    Arrow encode emits, so either side of a join can use either encode."""
-    return (
-        F.shiftleft(struct_col["table"], n_planes)
-        .bitwiseOR(struct_col["bucket"])
-        .cast("long")
-    )
-
-
-def _srp_buckets(vec_col, n_planes: int, n_tables: int, dim: int):
-    """SRP bucket ids: hyperplane t,p has deterministic ±1 weights
-    w[d] = sign(md5_int(t,p,d)); bucket bit = 1 iff Σ w[d]·v[d] > 0.
-
-    The ±1 weights depend only on (t, p, d), so they are PRECOMPUTED
-    driver-side (same md5 low bit the in-plan form derived) and embedded
-    as array literals — the previous per-row derivation evaluated
-    n_tables·n_planes·dim (=3072 at defaults) md5 digests of constant
-    strings PER CORPUS ROW because the lambda-bound index defeated
-    constant folding (r3 review; bit-identical output, asserted by the
-    unchanged recall gates/tests)."""
-    _sign = _srp_sign
-    buckets = []
-    for t in range(n_tables):
-        acc = F.lit(0).cast("long")
-        for p in range(n_planes):
-            weights = F.array(*[F.lit(_sign(t, p, d)) for d in range(dim)])
-            proj = F.aggregate(
-                F.zip_with(vec_col, weights, lambda x, w_: x * w_),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            )
-            acc = acc + F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-        buckets.append(F.struct(F.lit(t).alias("table"), acc.alias("bucket")))
-    return F.array(*buckets)
 
 
 def srp_bucketed_topk(
@@ -166,7 +139,6 @@ def srp_bucketed_topk(
     n_tables: int = 8,
     dim: int = 64,
     probes: int = 1,
-    corpus_encode: str = "jvm",
 ) -> DataFrame:
     """LSH-bucketed ANN: candidates share ≥1 (table, bucket) with the
     query; exact cosine re-rank of candidates only. Shuffle key is the
@@ -182,14 +154,7 @@ def srp_bucketed_topk(
     0.9-1.0 on the fixture embeddings vs the brute-force baseline
     (tests/test_training_ops.py::test_srp_recall_floor, 3 query seeds;
     recorded in COVERAGE.md). Recall theory (probes=1): per table
-    P = q^p + p·q^(p-1)(1-q), q = 1 - θ/π.
-
-    ``corpus_encode``: "jvm" (default — fold expressions, bit-pinned by
-    the recall gates) or "arrow" (one NumPy matmul per batch against the
-    same md5 weight matrix; for bulk corpus bucketing — the query side
-    always stays JVM since it is the small side). Both emit the same
-    combined (table << n_planes) | bucket join key; results measured
-    identical on the fixtures (test_srp_topk_corpus_encode_parity)."""
+    P = q^p + p·q^(p-1)(1-q), q = 1 - θ/π."""
     if probes not in (0, 1):
         raise NotImplementedError("srp_bucketed_topk implements multiprobe Hamming radius 0 or 1")
     c = corpus.select(
@@ -197,41 +162,24 @@ def srp_bucketed_topk(
     )
     # Bucketing pass carries ONLY (vec_id, bk): the candidate distinct's
     # Exchange is keyed on ids, never on the float vectors themselves.
-    # Join key is the combined (table << n_planes) | bucket long — the
-    # shared bucket space of both encodes, so the corpus (big) side can
-    # use the Arrow matmul while the query (small) side stays JVM.
-    if corpus_encode == "arrow":
-        c_buckets = srp_bucket_ids_arrow(F.col("vb"), n_planes, n_tables, dim)
-    elif corpus_encode == "jvm":
-        c_buckets = F.transform(
-            _srp_buckets(F.col("vb"), n_planes, n_tables, dim),
-            lambda s: srp_combined_id(s, n_planes),
-        )
-    else:
-        raise ValueError(f"corpus_encode must be 'jvm' or 'arrow', got {corpus_encode!r}")
-    c_bk = c.withColumn("bk", F.explode(c_buckets)).select("vec_id", "bk")
+    # Join key is the combined (table << n_planes) | bucket long.
+    c_bk = c.withColumn(
+        "bk", F.explode(srp_bucket_ids(F.col("vb"), n_planes, n_tables, dim))
+    ).select("vec_id", "bk")
     qbase = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("va")
-    ).withColumn("_bks", _srp_buckets(F.col("va"), n_planes, n_tables, dim))
+    ).withColumn("_bks", srp_bucket_ids(F.col("va"), n_planes, n_tables, dim))
     if probes >= 1:
         # a bit-flip probe in bucket bits j < n_planes is the same XOR in
         # the combined id (table bits sit above the plane bits)
         probe_arr = F.flatten(
             F.transform(
                 F.col("_bks"),
-                lambda s: F.array(
-                    srp_combined_id(s, n_planes),
-                    *[
-                        srp_combined_id(s, n_planes)
-                        .bitwiseXOR(F.lit(1 << j))
-                        .cast("long")
-                        for j in range(n_planes)
-                    ],
-                ),
+                lambda b: F.array(b, *[b.bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)]),
             )
         )
     else:
-        probe_arr = F.transform(F.col("_bks"), lambda s: srp_combined_id(s, n_planes))
+        probe_arr = F.col("_bks")
     q_ids = qbase.withColumn("bk", F.explode(probe_arr)).select("query_id", "bk")
     # 1) thin candidate id pairs (dedup across tables/probes — Exchange on
     #    ids only); 2) rejoin the corpus vectors with the candidate set
@@ -264,10 +212,10 @@ def train_ivf_centroids(
     O(sample · k · iters), independent of corpus size; the INDEXING pass
     below is what runs distributed). CONTRACT: the quantizer never sees
     rows beyond its ``sample_size`` draw — a deliberate ceiling (a
-    coarse quantizer needs a representative sample, not the corpus); use
-    :func:`train_ivf_centroids_distributed` when training must weight
-    every row. The sample is the ``sample_size``
-    rows with the smallest seeded xxhash64 of ``id_col`` — a hash-ordered
+    coarse quantizer needs a representative sample, not the corpus) and
+    why training is ONE Spark job, not one per Lloyd iteration. The
+    sample is the ``sample_size`` rows with the smallest seeded xxhash64
+    of ``id_col`` — a hash-ordered
     pseudo-random draw that is invariant under any repartitioning or AQE
     layout (unlike an unordered ``limit``) and executes as a per-partition
     top-k (TakeOrdered), never a full sort. Spherical flavor: vectors are
@@ -293,105 +241,6 @@ def train_ivf_centroids(
             if len(members):
                 m = members.mean(axis=0)
                 cent[c] = m / max(np.linalg.norm(m), 1e-12)
-    return cent
-
-
-def train_ivf_centroids_distributed(
-    corpus: DataFrame,
-    n_clusters: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    iters: int = 10,
-    seed: int = 42,
-    init_sample: int = 4096,
-):
-    """Distributed Lloyd's k-means (VERDICT r03 #7): removes the
-    driver-sample ceiling of :func:`train_ivf_centroids` — that trainer
-    is O(sample_size) by contract and never sees rows beyond its sample;
-    this one runs each iteration as a distributed assign + aggregate
-    over the ENTIRE corpus, with the driver holding only the (k × dim)
-    centroid matrix.
-
-    Per iteration: an Arrow-batched ``mapInPandas`` normalizes each
-    batch, assigns rows to their argmax-cosine centroid and emits
-    PARTIAL per-cluster component sums (one row per (cluster, dim) per
-    batch — the map-side combine); a single ``groupBy(cluster, d)``
-    shuffle of those tiny partials (≪ corpus size: batches × k × dim
-    rows) reduces them, and the driver updates/renormalizes centroids
-    from the collected k × dim matrix. Initialization reuses the
-    hash-ordered deterministic sample rule (repartition-invariant).
-
-    Determinism note: assignments are deterministic given centroids, but
-    float sums reduce in shuffle order, so centroids can differ in final
-    ulps across cluster layouts — recall parity (not bit equality) vs
-    the driver trainer is the contract, pinned by
-    tests/test_training_ops.py::test_ivf_distributed_trainer_recall_parity."""
-    from pyspark.sql import types as T
-
-    cent = train_ivf_centroids(
-        corpus,
-        n_clusters=n_clusters,
-        vec_col=vec_col,
-        id_col=id_col,
-        sample_size=init_sample,
-        iters=0,  # sample only seeds the start; Lloyd's runs distributed
-        seed=seed,
-    )
-    vecs = corpus.select(F.col(vec_col).cast("array<double>").alias("v"))
-
-    schema = T.StructType(
-        [
-            T.StructField("cluster", T.IntegerType()),
-            T.StructField("d", T.IntegerType()),
-            T.StructField("s", T.DoubleType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-    for _ in range(iters):
-        c_mat = cent  # close over this iteration's centroids
-
-        def partials(batches, c_mat=c_mat):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-                x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-                assign = (x @ c_mat.T).argmax(axis=1)
-                rows = {"cluster": [], "d": [], "s": [], "n": []}
-                for c in np.unique(assign):
-                    members = x[assign == c]
-                    sums = members.sum(axis=0)
-                    for d in range(sums.shape[0]):
-                        rows["cluster"].append(int(c))
-                        rows["d"].append(d)
-                        rows["s"].append(float(sums[d]))
-                        rows["n"].append(len(members))
-                yield pd.DataFrame(rows)
-
-        # ONE corpus pass per iteration: cluster counts ride the d==0
-        # rows (n is per-(batch, cluster), identical across d — summing
-        # the d==0 slice gives the cluster total)
-        rows = (
-            vecs.mapInPandas(partials, schema=schema)
-            .groupBy("cluster", "d")
-            .agg(
-                F.sum("s").alias("s"),
-                F.sum(F.when(F.col("d") == 0, F.col("n"))).alias("n0"),
-            )
-            .collect()
-        )
-        new = cent.copy()
-        sums = np.zeros_like(cent)
-        counts: dict[int, int] = {}
-        for r in rows:
-            sums[r["cluster"], r["d"]] = r["s"]
-            if r["d"] == 0:
-                counts[r["cluster"]] = r["n0"]
-        for c, n in counts.items():
-            if n and n > 0:
-                m = sums[c] / n
-                new[c] = m / max(np.linalg.norm(m), 1e-12)
-        cent = new
     return cent
 
 

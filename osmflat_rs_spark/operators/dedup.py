@@ -573,7 +573,6 @@ def embedding_neardup_srp(
     n_planes: int = 6,
     n_tables: int = 8,
     dim: int = 64,
-    encode: str = "jvm",
 ) -> DataFrame:
     """Global cosine near-dup pairs WITHOUT a semantic blocking key: SRP
     (signed-random-projection) LSH buckets generate candidates, exact
@@ -601,44 +600,19 @@ def embedding_neardup_srp(
     regions) bound the per-bucket quadratic exactly like the jaccard
     banding does, and finer n_planes splits them.
 
-    ``encode`` picks the bucketing implementation — same buckets, same
-    candidates, different physical plan:
-    - ``"jvm"`` (default): n_tables·n_planes ``aggregate``/``zip_with``
-      fold expressions — pure JVM, deterministic sequential-fold dots,
-      what the correctness gate pins. Codegen cost grows with the plane
-      count (the 12×12 bench point compiles a ~MB method).
-    - ``"arrow"``: ONE NumPy matmul per Arrow batch against the
-      closure-shipped ±1 weight matrix (``ann.srp_weight_matrix`` — the
-      same md5 weights). BLAS-blocked summation can differ from the
-      sequential fold in the last ulp, so a dot sitting EXACTLY on the
-      hyperplane could bucket differently — measured pair-identical on
-      the fixtures (test_embedding_neardup_srp_encode_parity); use for
-      bulk throughput, keep "jvm" where bit-pinned gates matter.
+    Bucketing is ``ann.srp_bucket_ids`` (one NumPy matmul per Arrow
+    batch); a NULL vector has no buckets, so it pairs with nothing.
 
     Reference parity note: the reference has no embedding operators —
     this extends the training-data-pipeline surface (SURVEY §2.8)."""
-    from osmflat_rs_spark.operators.ann import (
-        _dot,
-        _srp_buckets,
-        srp_bucket_ids_arrow,
-        srp_combined_id,
-    )
+    from osmflat_rs_spark.operators.ann import _dot, srp_bucket_ids
 
     v = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    if encode == "arrow":
-        bucket_arr = srp_bucket_ids_arrow(F.col("v"), n_planes, n_tables, dim)
-    elif encode == "jvm":
-        # combined (table << n_planes) | bucket long — one join key, same
-        # bucket space as the arrow path
-        bucket_arr = F.transform(
-            _srp_buckets(F.col("v"), n_planes, n_tables, dim),
-            lambda s: srp_combined_id(s, n_planes),
-        )
-    else:
-        raise ValueError(f"encode must be 'jvm' or 'arrow', got {encode!r}")
-    bk = v.withColumn("bk", F.explode(bucket_arr)).select("_id", "bk")
+    bk = v.withColumn("bk", F.explode(srp_bucket_ids(F.col("v"), n_planes, n_tables, dim))).select(
+        "_id", "bk"
+    )
     cand = (
         bk.alias("a")
         .join(bk.alias("b"), F.col("a.bk") == F.col("b.bk"))

@@ -621,9 +621,10 @@ def kmeans_assign_step(
 ) -> DataFrame:
     """ONE exact Lloyd assignment + partial-sum step over fixed integer
     centroids → (cluster, n, sum_lat, sum_lon): the inner loop of every
-    distributed k-means (the IVF coarse quantizer's float form is
-    ``ann.train_ivf_centroids_distributed``), restated on the engine's
-    fixed-point coordinates so EVERY value is an exact int64 —
+    distributed k-means (the IVF coarse quantizer,
+    ``ann.train_ivf_centroids``, runs its float form driver-side on a
+    sample), restated on the engine's fixed-point coordinates so EVERY
+    value is an exact int64 —
     assignment is argmin of squared euclidean with ties to the LOWEST
     cluster index (stated, deterministic), sums are map-side-combined
     int64 (no float reassociation anywhere, so the step is bit-stable

@@ -7,10 +7,11 @@ consecutive-pair window → line expansion as a pure JVM array expression
 (``sequence`` + ``transform`` — whole-stage-codegen'd, zero Python) →
 explode → distinct.
 
-``tile_assign`` generalizes it to web-mercator slippy tiles at a fixed
-zoom (north-rule raster↔vector assignment): per-vertex tile via a
-vectorized NumPy pandas UDF (bit-identical to the oracle's kernel), then
-the same DDA expansion on the tile grid.
+``tile_assign_segments`` generalizes it to web-mercator slippy tiles at
+a fixed zoom (north-rule raster↔vector assignment): per-endpoint tile
+via the pure column-expression encode (``functions.geo``), then the same
+DDA expansion on the tile grid. ``oracle.tile_xy`` is its NumPy
+reference.
 
 Line spec: symmetric integer DDA, round-half-up both axes, endpoints
 exact (deviation from the reference's error-accumulator form is pinned in
@@ -31,45 +32,23 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from osmflat_rs_spark.functions.geo import COORD_SCALE
 
 RASTER_W = 512
 RASTER_H = 512
 TILE_ZOOM = 14
 
 
-def dda_expand(seg: DataFrame, id_cols: list[str], fanout_partitions: int | None = None) -> DataFrame:
+def dda_expand(seg: DataFrame, id_cols: list[str]) -> DataFrame:
     """Scalar-explode DDA: explode the step index FIRST, then compute x/y
     as scalar integer expressions (``div``) — ~10× faster than building
     an array<struct> per segment (measured: 1.7s vs 17.9s on 12M pixels,
     local[32]) because no per-segment array materializes; the whole
     expansion stays in one WholeStageCodegen.
 
-    seg needs columns x0, y0, x1, y1; returns id_cols + (x, y).
-
-    ``fanout_partitions``: AQE sizes post-shuffle partitions on
-    PRE-explode bytes, so a slim upstream segment table can be coalesced
-    to 1-2 partitions and the ~100× DDA fan-out + downstream distinct
-    then run on 2 cores of 32 (measured exactly that on the sf0.1 raster
-    gate: 6s stage → 2 populated partitions of ~6M exploded rows each).
-    Passing an explicit count inserts ``repartition(n, *id_cols)`` before
-    the explode — an exchange of the SLIM segment rows (cheap), immune to
-    AQE coalescing because the count is user-specified, and hash-keyed on
-    the id columns so a downstream distinct on (id, x, y) still needs no
-    post-explode exchange. Leave None when the input is already
-    well-partitioned (e.g. the 128M-point bench job, whose session pins
-    minPartitionSize); fan-out is bounded by id-column cardinality.
-
-    CAVEAT: if ``seg`` comes straight out of a window/shuffle keyed on
-    the SAME id_cols, Catalyst removes this same-key exchange as
-    redundant and the AQE-coalesced upstream partitioning survives —
-    fan out UPSTREAM of that window instead (measured on the sf0.1
-    raster gate: pre-window repartition 6.0s -> 0.75s; post-window
-    repartition eliminated, no effect)."""
-    if fanout_partitions:
-        seg = seg.repartition(fanout_partitions, *id_cols) if id_cols else seg.repartition(fanout_partitions)
+    seg needs columns x0, y0, x1, y1; returns id_cols + (x, y). A
+    byte-small ``seg`` out of an AQE-coalesced shuffle serializes the
+    fan-out onto few cores; fan out upstream of the window that built it
+    (see the comment in ``__spark_entry__.q_raster_events``)."""
     m = F.greatest(F.abs(F.col("x1") - F.col("x0")), F.abs(F.col("y1") - F.col("y0")))
     stepped = seg.withColumn("m", m).select(
         *id_cols,
@@ -161,15 +140,8 @@ def dda_pixels_distinct(seg: DataFrame, id_cols: list[str]) -> DataFrame:
     return slim.mapInPandas(fn, out_schema)
 
 
-def _segments(coords: DataFrame, id_col: str, fanout_partitions: int | None = None) -> DataFrame:
-    """(id, pos, gx, gy) → consecutive grid pairs via lead() (SURVEY W3).
-
-    ``fanout_partitions``: repartition BEFORE the window (the only
-    placement that survives optimization — see dda_expand's caveat) so
-    the window's AQE-coalesced shuffle can't serialize the downstream
-    DDA explode onto 1-2 cores when the vertex table is byte-small."""
-    if fanout_partitions:
-        coords = coords.repartition(fanout_partitions, id_col)
+def _segments(coords: DataFrame, id_col: str) -> DataFrame:
+    """(id, pos, gx, gy) → consecutive grid pairs via lead() (SURVEY W3)."""
     w = Window.partitionBy(id_col).orderBy("pos")
     return (
         coords.withColumn("x1", F.lead("gx").over(w))
@@ -178,14 +150,10 @@ def _segments(coords: DataFrame, id_col: str, fanout_partitions: int | None = No
     )
 
 
-def raster_assign(
-    road_coords: DataFrame, bbox: tuple[int, int, int, int], fanout_partitions: int | None = None
-) -> DataFrame:
+def raster_assign(road_coords: DataFrame, bbox: tuple[int, int, int, int]) -> DataFrame:
     """road_coords: (way_idx, pos, lat, lon) fully-resolved road vertices;
     bbox: (min_lat, max_lat, min_lon, max_lon) fixed-point ints.
-    → distinct (way_idx, x, y) Bresenham-family pixels on RASTER_W×H.
-    ``fanout_partitions``: pre-window fan-out for byte-small inputs
-    (see _segments / dda_expand)."""
+    → distinct (way_idx, x, y) Bresenham-family pixels on RASTER_W×H."""
     min_lat, max_lat, min_lon, max_lon = (int(v) for v in bbox)
     lat_span = max(1, max_lat - min_lat)
     lon_span = max(1, max_lon - min_lon)
@@ -206,29 +174,11 @@ def raster_assign(
         px.alias("gx"),
         py.alias("gy"),
     )
-    seg = _segments(pix, "way_idx", fanout_partitions).withColumnRenamed("gx", "x0").withColumnRenamed("gy", "y0")
+    seg = _segments(pix, "way_idx").withColumnRenamed("gx", "x0").withColumnRenamed("gy", "y0")
     return (
         dda_expand(seg, ["way_idx"])
         .select("way_idx", F.col("x").cast("int").alias("x"), F.col("y").cast("int").alias("y"))
         .distinct()
-    )
-
-
-@F.pandas_udf(T.StructType([T.StructField("tx", T.LongType()), T.StructField("ty", T.LongType())]))
-def _tile_udf(lat_fixed: pd.Series, lon_fixed: pd.Series) -> pd.DataFrame:
-    """Vectorized slippy-tile encoding (same NumPy ops as oracle.tile_xy)."""
-    import numpy as np
-
-    zoom = TILE_ZOOM
-    n = 1 << zoom
-    lon = lon_fixed.to_numpy("float64") / COORD_SCALE
-    lat = lat_fixed.to_numpy("float64") / COORD_SCALE
-    tx = np.floor((lon + 180.0) / 360.0 * n).astype("int64")
-    latc = np.clip(lat, -85.05112878, 85.05112878)
-    latr = np.radians(latc)
-    ty = np.floor((1.0 - np.log(np.tan(latr) + 1.0 / np.cos(latr)) / np.pi) / 2.0 * n).astype("int64")
-    return pd.DataFrame(
-        {"tx": np.clip(tx, 0, n - 1), "ty": np.clip(ty, 0, n - 1)}
     )
 
 
@@ -242,31 +192,31 @@ def tile_assign_segments(
     (way_idx, lat, lon, lat2, lon2) — e.g. ``queries.road_segments``'s
     in-row pairs. The whole phase is then: one codegen stage (tile encode
     + DDA scalar-explode) feeding one distinct hash-agg — the ONLY shuffle
-    in the 100-TB tile path (contrast ``tile_assign`` below, which needs a
-    window over (way_idx, pos) when given unpaired vertices)."""
-    if jvm_tiles:
-        from osmflat_rs_spark.functions.geo import mercator_tile_x, mercator_tile_y, to_degrees
+    in the 100-TB tile path.
 
-        seg = segments.select(
-            "way_idx",
-            mercator_tile_x(to_degrees(F.col("lon")), zoom).alias("x0"),
-            mercator_tile_y(to_degrees(F.col("lat")), zoom).alias("y0"),
-            mercator_tile_x(to_degrees(F.col("lon2")), zoom).alias("x1"),
-            mercator_tile_y(to_degrees(F.col("lat2")), zoom).alias("y1"),
+    Tile coords come from the pure column-expression encode
+    (``functions.geo``), the one engine path; ``oracle.tile_xy`` is the
+    NumPy reference the tests compare it with. ``jvm_tiles`` accepts
+    only ``True`` (kept for callers that pass it); ``False`` raises
+    ValueError.
+
+    ``fanout_partitions``: keyed repartition of the slim tile segments,
+    then explode + distinct fuse into one vectorized Arrow stage (see
+    ``dda_pixels_distinct``)."""
+    if not jvm_tiles:
+        raise ValueError(
+            "tile_assign_segments has one tile encode (jvm_tiles=True); "
+            "the NumPy tile kernel is the test reference oracle.tile_xy"
         )
-    else:
-        assert zoom == TILE_ZOOM, "zoom is compiled into the vectorized UDF"
-        seg = segments.select(
-            "way_idx",
-            _tile_udf(F.col("lat"), F.col("lon")).alias("t0"),
-            _tile_udf(F.col("lat2"), F.col("lon2")).alias("t1"),
-        ).select(
-            "way_idx",
-            F.col("t0.tx").alias("x0"),
-            F.col("t0.ty").alias("y0"),
-            F.col("t1.tx").alias("x1"),
-            F.col("t1.ty").alias("y1"),
-        )
+    from osmflat_rs_spark.functions.geo import mercator_tile_x, mercator_tile_y, to_degrees
+
+    seg = segments.select(
+        "way_idx",
+        mercator_tile_x(to_degrees(F.col("lon")), zoom).alias("x0"),
+        mercator_tile_y(to_degrees(F.col("lat")), zoom).alias("y0"),
+        mercator_tile_x(to_degrees(F.col("lon2")), zoom).alias("x1"),
+        mercator_tile_y(to_degrees(F.col("lat2")), zoom).alias("y1"),
+    )
     if fanout_partitions:
         # keyed fan-out → per-partition dedup IS global dedup, so the
         # explode + distinct fuse into one vectorized Arrow stage (no
@@ -280,54 +230,6 @@ def tile_assign_segments(
             F.col("x").alias("tile_x"),
             F.col("y").alias("tile_y"),
         )
-    return (
-        dda_expand(seg, ["way_idx"])
-        .select(
-            "way_idx",
-            F.lit(zoom).alias("zoom"),
-            F.col("x").alias("tile_x"),
-            F.col("y").alias("tile_y"),
-        )
-        .distinct()
-    )
-
-
-def tile_assign(
-    road_coords: DataFrame,
-    zoom: int = TILE_ZOOM,
-    jvm_tiles: bool = False,
-    fanout_partitions: int | None = None,
-) -> DataFrame:
-    """→ distinct (way_idx, zoom, tile_x, tile_y) touched (DDA on the tile
-    grid between consecutive vertex tiles).
-
-    ``jvm_tiles=False`` (default) computes tile coords with the NumPy
-    pandas UDF — bit-identical to the model oracle (the golden path);
-    this path supports only ``zoom=TILE_ZOOM`` (the zoom is compiled
-    into the vectorized UDF) and raises ValueError otherwise, while the
-    jvm_tiles path is fully zoom-parameterized.
-    ``jvm_tiles=True`` uses the pure column-expression form (geo.py) —
-    zero Python, preferred at scale; may differ from the NumPy kernel
-    only when trig lands within 1 ulp of a tile boundary."""
-    if not jvm_tiles and zoom != TILE_ZOOM:
-        raise ValueError(
-            f"tile_assign(jvm_tiles=False) supports only zoom={TILE_ZOOM} "
-            f"(compiled into the vectorized UDF); pass jvm_tiles=True for zoom={zoom}"
-        )
-    if jvm_tiles:
-        from osmflat_rs_spark.functions.geo import mercator_tile_x, mercator_tile_y, to_degrees
-
-        tiles = road_coords.select(
-            "way_idx",
-            "pos",
-            mercator_tile_x(to_degrees(F.col("lon")), zoom).alias("gx"),
-            mercator_tile_y(to_degrees(F.col("lat")), zoom).alias("gy"),
-        )
-    else:
-        tiles = road_coords.select(
-            "way_idx", "pos", _tile_udf(F.col("lat"), F.col("lon")).alias("t")
-        ).select("way_idx", "pos", F.col("t.tx").alias("gx"), F.col("t.ty").alias("gy"))
-    seg = _segments(tiles, "way_idx", fanout_partitions).withColumnRenamed("gx", "x0").withColumnRenamed("gy", "y0")
     return (
         dda_expand(seg, ["way_idx"])
         .select(

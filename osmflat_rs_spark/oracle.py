@@ -208,8 +208,10 @@ def dda_line(x0: int, y0: int, x1: int, y1: int) -> list[tuple[int, int]]:
 
 
 def tile_xy(lat_deg: float, lon_deg: float, zoom: int) -> tuple[int, int]:
-    """Slippy-map tile via NumPy double math — the engine's tiling pandas
-    UDF uses the same np functions so results are bit-identical."""
+    """Slippy-map tile via NumPy double math — the reference for the
+    engine's column-expression encode (``geo.mercator_tile_x``/``_y`` in
+    ``tiling.tile_assign_segments``); the tiling tests and perfbench's
+    model check compare the two through ``q_tile_assign``."""
     n = 1 << zoom
     tx = int(np.floor((lon_deg + 180.0) / 360.0 * n))
     lat = min(85.05112878, max(-85.05112878, lat_deg))

@@ -46,7 +46,7 @@ def main() -> int:
     from osmflat_rs_spark.fixtures import generate_polygons, polygons_to_spark
     from osmflat_rs_spark.ingest import ingest
     from osmflat_rs_spark.operators.spatial_join import pip_join
-    from osmflat_rs_spark.operators.tiling import tile_assign
+    from osmflat_rs_spark.operators.tiling import tile_assign_segments
     from osmflat_rs_spark.sources.catalog import SnapshotCatalog
 
     if args.synthetic_nodes:
@@ -65,7 +65,7 @@ def main() -> int:
     polys = polygons_to_spark(spark, generate_polygons())
     pairs = pip_join(nodes, polys, cover_res=args.cover_res, salt=args.salt)
     cat.append("pip_pairs", pairs, job="spatial_join")
-    tiles = tile_assign(refq.road_coords({"nodes": nodes, "ways": t["ways"]}), jvm_tiles=True)
+    tiles = tile_assign_segments(refq.road_segments({**t, "nodes": nodes}))
     cat.append("tile_assign", tiles, job="spatial_join")
     cat.append("metrics", t["metrics"], job="spatial_join")
 

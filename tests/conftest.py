@@ -17,6 +17,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="session", autouse=True)
+def no_checkpoint_fallback():
+    """Fail the run when ``fresh_local_checkpoint`` fell back to the plain
+    checkpoint anywhere: its once-per-process warning is easy to miss in
+    a long run, and the plain checkpoint's inherited statistics are what
+    the rewrap exists to drop."""
+    yield
+    from osmflat_rs_spark.plans import checkpoint
+
+    assert not checkpoint._fallback_warned, "fresh_local_checkpoint fell back to the plain localCheckpoint"
+
+
 @pytest.fixture(scope="session")
 def docs_pdf():
     pdf, _truth = generate_docs()

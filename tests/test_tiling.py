@@ -3,7 +3,7 @@ web-mercator tile assignment vs the model oracle."""
 
 from osmflat_rs_spark import oracle
 from osmflat_rs_spark import queries as q
-from osmflat_rs_spark.operators.tiling import raster_assign, tile_assign
+from osmflat_rs_spark.operators.tiling import raster_assign, tile_assign_segments
 from tests.util import assert_frames_equal
 
 
@@ -25,27 +25,27 @@ def test_raster_assign(tables, model):
 
 
 def test_tile_assign(tables, model):
-    got = tile_assign(q.road_coords(tables))
+    """Segments resolved from the ingest dict (the assembled-direct path)
+    → tiles equal to the model's consecutive-vertex tiling."""
+    got = tile_assign_segments(q.road_segments(tables))
     want = oracle.q_tile_assign(model)
     assert len(want) > 0
     assert_frames_equal(got, want, ["way_idx", "zoom", "tile_x", "tile_y"])
 
 
-def test_tile_assign_segments_equals_window_form(tables):
-    """The in-row segments path (ways_geo zip — zero shuffle before the
-    distinct) must produce exactly the window-form tile set."""
-    from osmflat_rs_spark import queries as q
-    from osmflat_rs_spark.operators.tiling import tile_assign, tile_assign_segments
+def test_tile_assign_segments_equals_window_form(tables, model):
+    """The ways_geo in-row segments (zero shuffle before the distinct)
+    give exactly the model's window form: tiles of consecutive vertices.
+    The NumPy tile encode is the oracle's alone (``oracle.tile_xy``), so
+    asking the engine for it is an error."""
+    import pytest
 
-    cols = ["way_idx", "zoom", "tile_x", "tile_y"]
-    old = tile_assign(q.road_coords({"nodes": tables["nodes"], "ways": tables["ways"]}), jvm_tiles=True)
-    new = tile_assign_segments(q.road_segments(tables), jvm_tiles=True)
-    from tests.util import normalize
-
-    assert normalize(new, cols) == normalize(old, cols)
-    # and the vectorized-UDF tile encoder agrees on the fixture window
-    new_udf = tile_assign_segments(q.road_segments(tables), jvm_tiles=False)
-    assert normalize(new_udf, cols) == normalize(old, cols)
+    segs = q.road_segments({"ways_geo": tables["ways_geo"]})
+    assert_frames_equal(
+        tile_assign_segments(segs), oracle.q_tile_assign(model), ["way_idx", "zoom", "tile_x", "tile_y"]
+    )
+    with pytest.raises(ValueError, match=r"oracle\.tile_xy"):
+        tile_assign_segments(segs, jvm_tiles=False)
 
 
 def test_road_coords_inrow_equals_join_form(tables):
@@ -63,14 +63,12 @@ def test_tile_segments_plan_has_no_window_one_shuffle(spark, tables):
     Window anywhere, and the only Exchange is the distinct agg — one
     codegen stage feeds one shuffle. (Upstream ways resolution is its own
     ingest stage; here the input stands materialized.)"""
-    from osmflat_rs_spark.operators.tiling import tile_assign_segments
-
     segs = spark.createDataFrame(
         [(1, 525000000, 133000000, 525100000, 133400000)],
         schema="way_idx long, lat long, lon long, lat2 long, lon2 long",
     )
     plan = (
-        tile_assign_segments(segs, jvm_tiles=True)
+        tile_assign_segments(segs)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Window" not in plan, plan[:3000]

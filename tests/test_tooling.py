@@ -1,10 +1,13 @@
 """Repository tooling checks: no dead module-level definitions in the
-package, bench.py or scripts/, no persist/cache calls in operators, and
-the gate checker (scripts/gate.py): its row canonicalization, multiset
-row diff, oracle type-widening check and per-gate verdicts."""
+package, bench.py or scripts/, no persist/cache calls in operators, the
+gate registry's pinned oracle texts, and the gate checker
+(scripts/gate.py): its row canonicalization, multiset row diff, oracle
+type-widening check and per-gate verdicts."""
 
 import ast
+import hashlib
 import importlib.util
+import json
 import re
 from pathlib import Path
 
@@ -58,6 +61,20 @@ def test_operators_do_not_persist():
             ):
                 found.append(f"{path.relative_to(REPO)}:{node.lineno} .{node.func.attr}(")
     assert not found, "persist/cache calls in operators:\n" + "\n".join(found)
+
+
+def test_oracle_sql_fingerprints():
+    """Every ``oracle_sql()`` text hashes (sha256) to its entry in
+    tests/oracle_fingerprints.json, and ``queries()`` lists the gates in
+    the recorded order. Results recorded against a gate stay comparable
+    only while its oracle text is unchanged; an intended change updates
+    the JSON in the same commit."""
+    import __spark_entry__ as entry
+
+    pinned = json.loads((REPO / "tests" / "oracle_fingerprints.json").read_text(encoding="utf-8"))
+    assert list(entry.queries()) == pinned["queries"]
+    got = {k: hashlib.sha256(v.encode()).hexdigest() for k, v in entry.oracle_sql().items()}
+    assert got == pinned["oracle_sql_sha256"]
 
 
 def _load_gate():
