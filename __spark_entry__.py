@@ -1914,8 +1914,8 @@ def q_spatial_chi2_events(spark, sf_dir):
 
 def q_homerange_events(spark, sf_dir):
     """95% volume contour of the res-12 density surface: windowless
-    global density ranking (range-partitioned exclusive prefix sum),
-    exact-int membership 100*cum0 < 95*N."""
+    global density ranking (range-partitioned ordered scan), exact-int
+    membership 100*cum0 < 95*N with cum0 = cum - n."""
     from osmflat_rs_spark.operators.hotspot import home_range
 
     pts = _synth_coords(_t(spark, sf_dir, "events"))
@@ -3798,18 +3798,22 @@ def _pii_oracle_sql() -> str:
 
 
 def q_string_offsets_docs(spark, sf_dir):
-    """S8/A7 string-intern offsets via the scalable two-pass exclusive
-    prefix sum (strings.rs:134-145 semantics: offset = Σ (len+1) of
-    earlier strings) — no single-partition window anywhere."""
+    """S8/A7 string-intern offsets via the scalable two-pass prefix sum
+    minus each string's own length (strings.rs:134-145 semantics:
+    offset = Σ (len+1) of earlier strings) — no single-partition window
+    anywhere."""
     from osmflat_rs_spark.operators.dedup import words_expr
-    from osmflat_rs_spark.plans.indexing import exclusive_prefix_sum
+    from osmflat_rs_spark.plans.indexing import sorted_prefix_scan
 
     ws = (
         _t(spark, sf_dir, "documents")
         .select(F.explode(words_expr(F.col("text"))).alias("w"))
         .distinct()
+        .withColumn("_w", F.length("w") + 1)
     )
-    return exclusive_prefix_sum(ws, "w", F.length("w") + 1, "offset").select("w", "offset")
+    return sorted_prefix_scan(ws, ["w"], long_sums=[("_w", "_end")]).select(
+        "w", (F.col("_end") - F.col("_w")).alias("offset")
+    )
 
 
 def q_winnow_fingerprint_docs(spark, sf_dir):

@@ -213,7 +213,7 @@ def ingest(
     audit: bool = True,
     strict_kinds: bool = True,
 ) -> dict[str, DataFrame]:
-    from osmflat_rs_spark.plans.indexing import assign_dense_index_by_group, audit_dense_index
+    from osmflat_rs_spark.plans.indexing import audit_dense_index
 
     # r6: the validation probe and the dense-index audit are independent
     # driver ACTIONS (one small job each); run them from background
@@ -257,15 +257,15 @@ def ingest(
         probe_fut = _ASYNC_POOL.submit(lambda df=probe: df.collect()[0])
 
     # ONE range shuffle assigns all three per-type dense indices (grouped
-    # two-pass scheme) — vs. one shuffle+persist per entity type. The
-    # shuffled+persisted rows are RAW (doc_id, spans, keys): the range
+    # two-pass scheme) — vs. one shuffle+checkpoint per entity type. The
+    # shuffled+checkpointed rows are RAW (doc_id, spans, keys): the range
     # partitioner's sample pass then costs one header parse instead of a
-    # full assembly, the shuffle moves one span array instead of four
-    # derived arrays, and the columnar cache encodes one nested column.
-    # Per-kind arrays derive in-row (codegen'd transforms) on each read of
-    # the persisted layout — CPU-cheap vs. the memory traffic they save.
+    # full assembly, and the shuffle and the checkpoint blocks carry one
+    # span array instead of four derived arrays. Per-kind arrays derive
+    # in-row (codegen'd transforms) on each read of the checkpointed
+    # layout — CPU-cheap vs. the memory traffic they save.
     try:
-        indexed = assign_dense_index_by_group(_keyed(docs), "entity_type", ["osm_id"], "eidx")
+        indexed = assign_dense_index(_keyed(docs), ["osm_id"], "eidx", group_col="entity_type")
     except Exception:
         # same malformed input (headerless doc → NULL group) trips both
         # the probe and the assigner; surface the probe's specific error
@@ -273,7 +273,7 @@ def ingest(
             _check_probe(probe_fut.result())
         raise
     if audit:
-        # one vectorized no-shuffle pass over the persisted layout: the
+        # one vectorized no-shuffle pass over the checkpointed layout: the
         # eidx must tile 0..n_g-1 per entity type in storage order —
         # guards the local-counter/stage-fusion invariant (indexing.py)
         audit_fut = _ASYNC_POOL.submit(
@@ -498,9 +498,9 @@ def unpersist_ingest(t: dict[str, DataFrame]) -> None:
     frames, MEMORY_AND_DISK). Call when done with the archive in
     long-lived sessions that ingest repeatedly (e.g. per-scale bench
     loops) — otherwise each call pins cache for the session lifetime.
-    The dense-index internals persist/free within plans/indexing.py's
-    own contract and are reclaimed by the ContextCleaner once their
-    frames are unreachable."""
+    The dense-index layout is a local checkpoint, not a cache entry: the
+    ContextCleaner frees its blocks once the ingest frames are
+    unreachable."""
     for df in t.get("_cached", []):
         try:
             df.unpersist()
@@ -522,20 +522,21 @@ def _build_dims(assembled: DataFrame):
     ).select("tag_idx", "key", "value")
 
     # string stream: per tag_idx, key then value (strings.rs:73-109);
-    # offset = Σ (len+1) of earlier strings (strings.rs:134-145), computed
-    # with the scalable two-pass exclusive prefix sum — no global
-    # single-partition window (the distinct-string dim is NOT small at
-    # web scale; VERDICT r01 missing #6).
-    from osmflat_rs_spark.plans.indexing import exclusive_prefix_sum
+    # offset = Σ (len+1) of earlier strings (strings.rs:134-145): the
+    # scalable two-pass prefix sum minus the string's own length — no
+    # global single-partition window (the distinct-string dim is NOT
+    # small at web scale; VERDICT r01 missing #6).
+    from osmflat_rs_spark.plans.indexing import sorted_prefix_scan
 
     strs = (
         tags_dim.select((F.col("tag_idx") * 2).alias("spos"), F.col("key").alias("s"))
         .unionByName(tags_dim.select((F.col("tag_idx") * 2 + 1).alias("spos"), F.col("value").alias("s")))
         .groupBy("s")
         .agg(F.min("spos").alias("first_spos"))
+        .withColumn("_w", F.length("s") + 1)
     )
-    strings_dim = exclusive_prefix_sum(strs, "first_spos", F.length("s") + 1, "offset").select(
-        "offset", "s"
+    strings_dim = sorted_prefix_scan(strs, ["first_spos"], long_sums=[("_w", "_end")]).select(
+        (F.col("_end") - F.col("_w")).alias("offset"), "s"
     )
 
     return tags_dim, strings_dim

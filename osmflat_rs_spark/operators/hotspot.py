@@ -741,7 +741,7 @@ def home_range(
 
     Scale shape: the corpus reduces to occupied cells first; the
     global density ranking uses :func:`plans.indexing.
-    exclusive_prefix_sum` — range-partitioned by a composite order key
+    sorted_prefix_scan` — range-partitioned by a composite order key
     (−n, cell), per-partition totals to the driver, map-only Arrow
     cumsum — so there is NO single-partition window over the cell
     table (the naive ORDER BY plan), and the only full exchange is the
@@ -752,7 +752,7 @@ def home_range(
     valid while n < 2^(62−2·res).
     """
     from osmflat_rs_spark.functions.cells import grid_exprs
-    from osmflat_rs_spark.plans.indexing import exclusive_prefix_sum
+    from osmflat_rs_spark.plans.indexing import sorted_prefix_scan
 
     if not (0 < q_pct <= 100):
         raise ValueError(f"q_pct must be in (0, 100], got {q_pct}")
@@ -765,9 +765,7 @@ def home_range(
     ok = (-F.col("n")) * F.lit(side * side).cast("long") + (
         F.col("ix") * side + F.col("iy")
     )
-    ranked = exclusive_prefix_sum(
-        cells.withColumn("_ok", ok), "_ok", F.col("n"), out_col="_cum0"
-    )
+    ranked = sorted_prefix_scan(cells.withColumn("_ok", ok), ["_ok"], long_sums=[("n", "cum")])
     tot = cells.agg(F.sum("n").alias("_N"))
     return (
         ranked.crossJoin(F.broadcast(tot))
@@ -775,8 +773,8 @@ def home_range(
             "ix",
             "iy",
             "n",
-            (F.col("_cum0") + F.col("n")).alias("cum"),
-            (F.lit(100) * F.col("_cum0") < F.lit(int(q_pct)) * F.col("_N")).alias("in_range"),
+            "cum",
+            (F.lit(100) * (F.col("cum") - F.col("n")) < F.lit(int(q_pct)) * F.col("_N")).alias("in_range"),
         )
     )
 

@@ -471,8 +471,8 @@ def pack_sequences(
     to < capacity.
 
     Scale shape: the ONLY global coordination is the exclusive prefix
-    sum of (n_tok + sep) in id order, delegated to
-    ``plans.indexing.exclusive_prefix_sum`` (range partition + per-
+    sum of (n_tok + sep) in id order: ``plans.indexing.sorted_prefix_scan``'s
+    inclusive sum minus the doc's own slots (range partition + per-
     partition totals + driver-side #partitions-sized prefix — never a
     1-partition window). Everything after is per-row arithmetic + one
     bounded explode (a doc spans ceil(n/capacity)+1 sequences at most).
@@ -482,13 +482,13 @@ def pack_sequences(
     """
     if capacity <= 0 or sep_tokens < 0:
         raise ValueError(f"capacity must be positive, sep_tokens >= 0, got {capacity}/{sep_tokens}")
-    from osmflat_rs_spark.plans.indexing import exclusive_prefix_sum
+    from osmflat_rs_spark.plans.indexing import sorted_prefix_scan
 
     base = docs.select(
         F.col(id_col), F.size(words_expr(F.col(text_col))).cast("long").alias("n_tok_doc")
-    )
-    off = exclusive_prefix_sum(
-        base, id_col, F.col("n_tok_doc") + F.lit(int(sep_tokens)), out_col="g_off"
+    ).withColumn("_w", F.col("n_tok_doc") + int(sep_tokens))
+    off = sorted_prefix_scan(base, [id_col], long_sums=[("_w", "_end")]).withColumn(
+        "g_off", F.col("_end") - F.col("_w")
     )
 
     def fdiv(col):  # exact floor-div for non-negative int64 positions

@@ -1,6 +1,6 @@
-"""How operators materialize an intermediate: eager local checkpoints only.
+"""How operators and plans materialize an intermediate: local checkpoints only.
 
-Operators use exactly two forms, and never ``persist``/``cache``:
+There are three forms, and never ``persist``/``cache``:
 
 - :func:`fresh_local_checkpoint` — for iterative loops and for tables
   several consumers read (a pair table feeding three joins, a reduce
@@ -16,8 +16,14 @@ Operators use exactly two forms, and never ``persist``/``cache``:
   joined on that key). Routing those sites through the rewrap below
   re-shuffles them: ``ngram_jaccard_prefix_docs`` at sf0.1 went from
   6.2 to 11.3 s (and 7.4 to 13.6 s in a second set of 5 warm runs).
+- Spark's lazy ``localCheckpoint(eager=False)`` — only in
+  ``plans/indexing.py``, to pin a range-partitioned layout between the
+  stats collect and the map-only pass that adds the collected offsets.
+  It costs no job of its own: Spark runs the shuffle stage when the
+  checkpoint is taken, and the stats collect right after stores the
+  blocks. An eager checkpoint there would add one job per call.
 
-Ownership: neither form registers anything with the session
+Ownership: no form registers anything with the session
 CacheManager. The checkpoint blocks belong to the plan that reads them,
 and Spark's ContextCleaner frees them once that plan is garbage
 collected — so an operator call leaves nothing pinned, also when it

@@ -1,25 +1,37 @@
-"""Deterministic dense index assignment without a global single-partition sort.
+"""Deterministic dense indices and ordered scans without a global
+single-partition sort.
 
 The reference assigns every entity a consecutive positional index in input
-order and asserts it (osmflatc/src/main.rs:192-193, ids.rs:115-128). In
-Spark a naive ``row_number() OVER (ORDER BY key)`` collapses to ONE
-partition — a non-starter at 10^12 rows. This module implements the
-classic scalable two-pass scheme:
+order and asserts it (osmflatc/src/main.rs:192-193, ids.rs:115-128), and
+every interned string a byte offset (strings.rs:73-109). In Spark a naive
+``row_number() OVER (ORDER BY key)`` collapses to ONE partition — a
+non-starter at 10^12 rows. This module writes the classic scalable
+two-pass scheme once, in :func:`_range_layout`, and builds every scan on
+it:
 
 1. range-partition by the sort key and sort within partitions (ONE
    shuffle; each partition holds a contiguous key range);
-2. count rows per partition (cheap agg over the persisted layout),
-   prefix-sum the counts on the driver (#partitions values, not rows);
-3. final index = partition offset + intra-partition position, where the
-   position comes from ``monotonically_increasing_id() & 0x1FFFFFFFF``
-   (Spark's mid is ``partition_id << 33 | local_counter`` with the local
-   counter following partition iteration order — the sorted order, since
-   the projection sits in the same stage as the sort). This avoids the
-   extra hash-shuffle + re-sort a ``row_number() OVER (PARTITION BY pid)``
-   window would cost — measured ~2× faster on the ingest path.
+2. collect per-partition stats (row counts, sums, first keys — a cheap
+   agg over the pinned layout) and prefix them on the driver
+   (#partitions values, not rows);
+3. finish map-only. A dense index is partition offset + intra-partition
+   position, where the position comes from
+   ``monotonically_increasing_id() & 0x1FFFFFFFF`` (Spark's mid is
+   ``partition_id << 33 | local_counter`` with the local counter
+   following partition iteration order — the stored sorted order). This
+   avoids the extra hash-shuffle + re-sort a ``row_number() OVER
+   (PARTITION BY pid)`` window would cost — measured ~2× faster on the
+   ingest path. Running sums are an Arrow cumsum with the partition
+   offsets captured in the closure.
 
-The partition→offset map is tiny and broadcast via a literal-DataFrame
-join. ``persist`` pins partition identity between the passes.
+The layout is pinned between the passes by a LAZY local checkpoint: the
+driver-side offsets are computed against its exact partition layout, and
+a recompute could re-sample different range bounds. A lost checkpoint
+block fails the job instead of being recomputed silently. The lazy form
+adds no job (Spark runs the shuffle stage when the checkpoint is taken
+and stores the blocks during the stats collect that follows), registers
+nothing with the session CacheManager, and ContextCleaner frees its
+blocks once the result is dropped.
 """
 
 from __future__ import annotations
@@ -29,9 +41,23 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
-from pyspark.storagelevel import StorageLevel
 
 _LOCAL_MASK = (1 << 33) - 1
+# a binary search over an int64 domain halves 2^64 values in 64 rounds
+_QUANTILE_ROUNDS = 64
+
+
+def _range_layout(df: DataFrame, cols: list, num_partitions: int | None) -> DataFrame:
+    """``df`` range-partitioned and sorted by ``cols`` (names or
+    Columns), its partition id in ``_pid``, pinned by a lazy local
+    checkpoint (module doc)."""
+    n_part = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.repartitionByRange(n_part, *cols)
+        .sortWithinPartitions(*cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
+    )
 
 
 def assign_dense_index(
@@ -39,37 +65,69 @@ def assign_dense_index(
     sort_cols: list[str],
     out_col: str = "idx",
     num_partitions: int | None = None,
+    group_col: str | None = None,
 ) -> DataFrame:
     """Add ``out_col`` = 0-based dense rank of the row in ``sort_cols``
-    order (sort keys must be globally distinct for full determinism).
+    order within its ``group_col`` value (0..n_g-1 per group; over the
+    whole frame when ``group_col`` is None). Sort keys must be distinct
+    within a group for full determinism; ``group_col`` must be a string
+    column without NULLs.
 
-    Scales: one range shuffle + one tiny collect; no global sort into a
-    single partition, no window shuffle. The returned DataFrame is
-    persisted MEMORY_AND_DISK; unpersist when done.
+    Scales: ONE range shuffle on (group, keys) for ALL groups + one tiny
+    collect; no global sort into a single partition, no window shuffle.
+    Within a partition the rows of a group are contiguous (sorted), so
+    from the per-(pid, group) counts alone the driver derives both
+      - the group's global offset before this partition, and
+      - the group's starting local position inside the partition,
+    and ``idx = global_offset + (local_counter - group_local_start)``.
+    No group is the constant group ``''``.
     """
     spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in sort_cols]
-    part = (
-        df.repartitionByRange(n_part, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn("_local", F.monotonically_increasing_id().bitwiseAND(F.lit(_LOCAL_MASK)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    g = F.col(group_col) if group_col else F.lit("")
+    g_type = df.select(g).schema[0].dataType
+    if not isinstance(g_type, StringType):
+        # the off_df schema and the driver-side ordering below assume a
+        # STRING group key (str() sort must match the range partitioner's
+        # order — '10' < '2' under str but not under int); widen here
+        # explicitly rather than computing scrambled offsets
+        raise TypeError(
+            f"assign_dense_index requires a string group column; "
+            f"{group_col} is {g_type.simpleString()} — cast it first"
+        )
+    part = _range_layout(df, [g, *sort_cols], num_partitions).withColumn(
+        "_local", F.monotonically_increasing_id().bitwiseAND(F.lit(_LOCAL_MASK))
     )
-    counts = {r["_pid"]: r["cnt"] for r in part.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    counts = [
+        (r["_pid"], r["_g"], r["cnt"])
+        for r in part.groupBy("_pid", g.alias("_g")).agg(F.count("*").alias("cnt")).collect()
+    ]
+    if any(grp is None for _pid, grp, _cnt in counts):
+        # the inner join below never matches NULL keys, so null-group
+        # rows would vanish from the indexed output with no error (in
+        # ingest: a doc with no parseable header span)
+        raise ValueError(
+            f"assign_dense_index: NULL values in group column {group_col!r} "
+            f"({sum(c for p_, g_, c in counts if g_ is None)} rows) — filter or label them first"
+        )
+    # group's global offset = Σ counts of same group in earlier partitions
+    # (range pids ascend with the sort order); group's local start in pid =
+    # Σ counts of earlier groups in the same pid (groups are contiguous in
+    # (group, keys) sort order; string sort matches the range order here)
+    by_group_running: dict = {}
+    by_pid_running: dict = {}
+    off_rows = []
+    for pid, grp, cnt in sorted(counts):
+        off_rows.append((int(pid), grp, by_group_running.get(grp, 0), by_pid_running.get(pid, 0)))
+        by_group_running[grp] = by_group_running.get(grp, 0) + cnt
+        by_pid_running[pid] = by_pid_running.get(pid, 0) + cnt
     off_df = spark.createDataFrame(
-        pd.DataFrame(sorted(offsets.items()), columns=["_pid", "_offset"]),
-        schema="_pid int, _offset long",
+        pd.DataFrame(off_rows, columns=["_opid", "_og", "_goffset", "_lstart"]),
+        schema="_opid int, _og string, _goffset long, _lstart long",
     )
     return (
-        part.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, (F.col("_local") + F.col("_offset")).cast("long"))
-        .drop("_pid", "_offset", "_local")
+        part.join(F.broadcast(off_df), (F.col("_pid") == F.col("_opid")) & (g == F.col("_og")))
+        .withColumn(out_col, (F.col("_local") - F.col("_lstart") + F.col("_goffset")).cast("long"))
+        .drop("_pid", "_local", "_opid", "_og", "_goffset", "_lstart")
     )
 
 
@@ -81,280 +139,104 @@ def sorted_prefix_scan(
     lead_col: str | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Distributed ordered scan (r6): INCLUSIVE running sums and an
-    optional boundary-aware ``lead(order_cols[0])`` over the global
-    ``order_cols`` order, with the same two-pass windowless composition
-    as ``exclusive_prefix_sum`` — range partition on the order key (the
-    ONLY shuffle), per-partition totals + first-key collected to the
-    driver (O(#partitions) rows), then a map-only Arrow cumsum with the
+    """Distributed ordered scan: INCLUSIVE running sums and an optional
+    boundary-aware ``lead(order_cols[0])`` over the global ``order_cols``
+    order — range partition on the order key (the ONLY shuffle),
+    per-partition totals + first key collected to the driver
+    (O(#partitions) rows), then a map-only Arrow cumsum with the
     partition offsets and the next partition's first key captured in the
-    closure.
+    closure. The cumsum streams batch by batch, carrying the running sums
+    and the pending ``lead`` across batches, so no partition is ever
+    held whole in a Python worker. A ``SUM OVER (PARTITION BY pid)``
+    window would instead force a SECOND full-data ``Exchange
+    hashpartitioning(_pid)`` — Catalyst can't see that the rows already
+    sit in those partitions — and hashing #partitions distinct pids into
+    #partitions buckets collides (skew); the map-only cumsum shuffles
+    zero bytes.
 
     This is the shared kernel that de-single-partitions the CDF/stats
-    family (VERDICT r05 "What's wrong" #2): their
-    ``Window.orderBy(...)`` with no partitionBy collapses the whole
-    distinct-value table into ONE task, which is only benign while
-    values repeat heavily; on continuous domains the distinct table is
-    the corpus.
+    family (VERDICT r05 "What's wrong" #2): their ``Window.orderBy(...)``
+    with no partitionBy collapses the whole distinct-value table into ONE
+    task, which is only benign while values repeat heavily; on continuous
+    domains the distinct table is the corpus. An EXCLUSIVE prefix (the
+    string-intern offsets of strings.rs:134-145, offset += len+1) is the
+    inclusive sum minus the row's own weight.
+
+    Contract: ``order_cols`` values must be UNIQUE (a single NULL key is
+    fine) — a running sum among tied rows would otherwise depend on the
+    physical sort's tie order. Callers pass groupBy-distinct keys or a
+    key made unique by a tiebreak column.
 
     - ``long_sums`` / ``double_sums``: (src_col, out_col) pairs; long
       sums are exact int64 in any association, so results are
       bit-identical to the window form. Double sums run NumPy-sequential
-      within a partition with the per-partition offset added first —
+      within a partition with the per-partition offset added last —
       associativity differs from a single sequential pass in the last
       ulp (callers in this family publish ROUND-6 contracts; their
       oracles' own window sums carry engine-specific association
       already).
-    - ``lead_col``: next row's ``order_cols[0]`` in global order (NULL
-      on the global last row); partition boundaries are fed from the
-      driver's per-partition first-key table.
+    - ``lead_col``: next row's ``order_cols[0]`` (an integer column) in
+      global order, NULL on the global last row; partition boundaries
+      are fed from the driver's per-partition first-key table.
 
-    Returns ``df``'s columns plus the requested outputs. The
-    range-partitioned intermediate stays persisted (same contract and
-    reason as ``exclusive_prefix_sum``).
+    Returns ``df``'s columns plus the requested outputs.
     """
     import numpy as np
 
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    part = (
-        df.repartitionByRange(n_part, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for i, (src, _out) in enumerate(long_sums):
-        aggs.append(F.sum(F.col(src).cast("long")).alias(f"_ls{i}"))
-    for i, (src, _out) in enumerate(double_sums):
-        aggs.append(F.sum(F.col(src).cast("double")).alias(f"_ds{i}"))
-    aggs.append(F.min(F.col(order_cols[0])).alias("_first"))
+    part = _range_layout(df, order_cols, num_partitions)
+    sums = [(s, o, np.int64, "long") for s, o in long_sums]
+    sums += [(s, o, np.float64, "double") for s, o in double_sums]
+    aggs = [F.count(F.lit(1)).alias("_n"), F.min(F.col(order_cols[0])).alias("_first")]
+    aggs += [F.sum(F.col(s).cast(t)).alias(f"_s{i}") for i, (s, _o, _dt, t) in enumerate(sums)]
     stats = sorted(part.groupBy("_pid").agg(*aggs).collect(), key=lambda r: r["_pid"])
-    loff: dict[int, tuple] = {}
-    doff: dict[int, tuple] = {}
-    run_l = [0] * len(long_sums)
-    run_d = [0.0] * len(double_sums)
+    offsets: dict[int, tuple] = {}
+    run = [0 if t == "long" else 0.0 for _s, _o, _dt, t in sums]
     for r in stats:
-        loff[r["_pid"]] = tuple(run_l)
-        doff[r["_pid"]] = tuple(run_d)
-        for i in range(len(long_sums)):
-            run_l[i] += int(r[f"_ls{i}"] or 0)
-        for i in range(len(double_sums)):
-            run_d[i] += float(r[f"_ds{i}"] or 0.0)
-    nxt: dict[int, int] = {}
+        offsets[r["_pid"]] = tuple(run)
+        for i in range(len(sums)):
+            run[i] += r[f"_s{i}"] or 0
     nonempty = [r for r in stats if r["_n"]]
-    for a, b in zip(nonempty, nonempty[1:]):
-        nxt[a["_pid"]] = b["_first"]
+    nxt = {a["_pid"]: b["_first"] for a, b in zip(nonempty, nonempty[1:])}
 
-    dtypes = dict(df.dtypes)
-    out_fields = [f"`{f.name}` {t}" for f, t in zip(df.schema.fields, [dtypes[c] for c in df.columns])]
-    out_fields += [f"`{o}` long" for _s, o in long_sums]
-    out_fields += [f"`{o}` double" for _s, o in double_sums]
+    out_fields = [f"`{c}` {t}" for c, t in df.dtypes] + [f"`{o}` {t}" for _s, o, _dt, t in sums]
     if lead_col:
-        out_fields.append(f"`{lead_col}` {dtypes[order_cols[0]]}")
-    schema = ", ".join(out_fields)
-    l_sums, d_sums = list(long_sums), list(double_sums)
+        out_fields.append(f"`{lead_col}` {dict(df.dtypes)[order_cols[0]]}")
     ord0, in_cols = order_cols[0], list(df.columns)
 
+    def with_lead(out, lead, last):
+        lead[-1] = last
+        out[lead_col] = lead
+        return out
+
     def scan(batches):
-        chunks = [p for p in batches if len(p)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        pid = int(pdf["_pid"].iloc[0])
-        out = pdf[in_cols].copy()
-        for i, (src, o) in enumerate(l_sums):
-            out[o] = loff[pid][i] + np.cumsum(pdf[src].to_numpy(np.int64))
-        for i, (src, o) in enumerate(d_sums):
-            out[o] = doff[pid][i] + np.cumsum(pdf[src].to_numpy(np.float64))
-        if lead_col:
-            ov = pdf[ord0].to_numpy()
-            lead = pd.array(
-                np.append(ov[1:], 0), dtype="Int64"
-            )
-            lead[-1] = nxt.get(pid)
-            out[lead_col] = lead
-        yield out
-
-    return part.mapInPandas(scan, schema=schema)
-
-
-def exclusive_prefix_sum(
-    df: DataFrame,
-    order_col: str,
-    weight_col,
-    out_col: str = "offset",
-    num_partitions: int | None = None,
-    assert_unique: bool = False,
-) -> DataFrame:
-    """``out_col`` = Σ weight over all rows strictly before this one in
-    ``order_col`` order — the scalable form of
-    ``SUM(w) OVER (ORDER BY o ROWS UNBOUNDED PRECEDING ... -1)``, whose
-    naive plan collapses to ONE partition (a non-starter for a large
-    distinct-string dimension at web scale; reference semantics:
-    osmflatc/src/strings.rs:134-145 offset += len+1).
-
-    Same two-pass composition as ``assign_dense_index``: range-partition
-    by the order key (the ONLY shuffle), per-partition weight totals →
-    driver-side exclusive prefix (#partitions values), then an
-    intra-partition running Arrow cumsum (``mapInPandas`` over the
-    already-sorted cached partitions, partition offset captured in the
-    closure). A ``SUM OVER (PARTITION BY pid)`` window would instead
-    force a SECOND full-data ``Exchange hashpartitioning(_pid)`` —
-    Catalyst can't see that the rows already sit in those partitions —
-    and hashing #partitions distinct pids into #partitions buckets
-    collides, so some reducers carry 2-3 partitions of data (skew). The
-    map-only cumsum shuffles zero bytes. ``weight_col`` may be a Column
-    expression.
-
-    Contract (ADVICE r02): ``order_col`` values must be UNIQUE — the
-    prefix among tied rows would otherwise depend on the physical sort's
-    tie order. Pass ``assert_unique=True`` to verify (one cheap agg over
-    the already-persisted frame). The range-partitioned intermediate
-    stays persisted because the driver-side offsets were computed against
-    its exact partition layout (a recompute could re-sample different
-    range boundaries); like ``assign_dense_index``, the caller should
-    ``unpersist()`` the RETURNED frame's lineage when done — materialize
-    the result (write/cache) and call ``spark.catalog.clearCache()`` or
-    keep the default and let the ContextCleaner reclaim it."""
-    import pyspark.sql.functions as _F
-
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    w_col = weight_col if not isinstance(weight_col, str) else _F.col(weight_col)
-    part = (
-        df.repartitionByRange(n_part, F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .withColumn("_w", w_col.cast("long"))
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if assert_unique:
-        # count(lit(1)) counts ALL rows — count(order_col) skips NULL
-        # keys, which would let duplicate NULLs (whose tie order is
-        # physical-sort-dependent, exactly what this gate exists to
-        # forbid) slip through
-        u = part.agg(
-            F.count(F.lit(1)).alias("n"),
-            (
-                F.countDistinct(order_col)
-                + F.coalesce(F.max(F.col(order_col).isNull().cast("int")), F.lit(0))
-            ).alias("d"),
-        ).collect()[0]
-        if u["n"] != u["d"]:
-            part.unpersist()
-            raise ValueError(
-                f"exclusive_prefix_sum requires unique {order_col!r} values: "
-                f"{u['n']} rows but only {u['d']} distinct keys"
-            )
-    totals = {r["_pid"]: r["t"] for r in part.groupBy("_pid").agg(F.sum("_w").alias("t")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += totals[pid] or 0
-    import numpy as np
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_fields = [f for f in part.schema.fields if f.name not in ("_w", "_pid")]
-    out_schema = StructType(out_fields + [StructField(out_col, LongType(), False)])
-    out_names = [f.name for f in out_schema.fields]
-
-    def _cumsum(batches):
-        # One call per physical partition; batches arrive in the cached
-        # (sorted) row order, so a running accumulator across batches is
-        # exactly the intra-partition prefix. acc seeds from the
-        # driver-computed offset of THIS partition's pid (constant per
-        # partition by construction).
-        acc = None
+        # one call per partition; batches arrive in the stored (sorted)
+        # row order, so a running accumulator across batches is exactly
+        # the intra-partition prefix
+        pid = acc = pending = None
         for pdf in batches:
-            if len(pdf) == 0:
+            if not len(pdf):
                 continue
-            if acc is None:
-                acc = int(offsets.get(int(pdf["_pid"].iloc[0]), 0))
-            w = pdf["_w"].to_numpy(dtype=np.int64)
-            c = np.cumsum(w)
-            pdf = pdf.drop(columns=["_w", "_pid"])
-            pdf[out_col] = acc + c - w  # exclusive: sum strictly before
-            acc += int(c[-1]) if len(c) else 0
-            yield pdf[out_names]
+            if pid is None:
+                pid = int(pdf["_pid"].iloc[0])
+                acc = [dt(0) for _s, _o, dt, _t in sums]
+            out = pdf[in_cols].copy()
+            for i, (src, o, dt, _t) in enumerate(sums):
+                v = pdf[src].to_numpy(dt, copy=True)
+                v[0] += acc[i]  # sequential across batches, bit-identical to one cumsum
+                c = np.cumsum(v)
+                acc[i] = c[-1]
+                out[o] = offsets[pid][i] + c
+            if not lead_col:
+                yield out
+                continue
+            ov = pdf[ord0].to_numpy()
+            if pending is not None:
+                yield with_lead(*pending, ov[0])
+            pending = out, pd.array(np.append(ov[1:], 0), dtype="Int64")
+        if pending is not None:
+            yield with_lead(*pending, nxt.get(pid))
 
-    return part.mapInPandas(_cumsum, schema=out_schema)
-
-
-def assign_dense_index_by_group(
-    df: DataFrame,
-    group_col: str,
-    sort_cols: list[str],
-    out_col: str = "idx",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Per-group dense index (0..n_g-1 within each ``group_col`` value, in
-    ``sort_cols`` order) with ONE shuffle for ALL groups — fusing what
-    would otherwise be one ``assign_dense_index`` per group.
-
-    Layout: range-partition by (group, keys); within a partition, rows of
-    a group are contiguous (sorted), so from the per-(pid, group) counts
-    alone the driver derives both
-      - the group's global offset before this partition, and
-      - the group's starting local position inside the partition,
-    and ``idx = global_offset + (local_counter - group_local_start)``.
-    """
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(group_col)] + [F.col(c) for c in sort_cols]
-    part = (
-        df.repartitionByRange(n_part, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn("_local", F.monotonically_increasing_id().bitwiseAND(F.lit(_LOCAL_MASK)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if not isinstance(df.schema[group_col].dataType, StringType):
-        # the off_df schema and the driver-side ordering below assume a
-        # STRING group key (str() sort must match the range partitioner's
-        # order — '10' < '2' under str but not under int); widen here
-        # explicitly rather than computing scrambled offsets
-        raise TypeError(
-            f"assign_dense_index_by_group requires a string group column; "
-            f"{group_col} is {df.schema[group_col].dataType.simpleString()} — cast it first"
-        )
-    counts = [
-        (r["_pid"], r[group_col], r["cnt"])
-        for r in part.groupBy("_pid", group_col).agg(F.count("*").alias("cnt")).collect()
-    ]
-    if any(grp is None for _pid, grp, _cnt in counts):
-        # the USING join below never matches NULL keys, so null-group
-        # rows would vanish from the indexed output with no error (in
-        # ingest: a doc with no parseable header span)
-        part.unpersist()
-        raise ValueError(
-            f"assign_dense_index_by_group: NULL values in group column {group_col!r} "
-            f"({sum(c for p_, g, c in counts if g is None)} rows) — filter or label them first"
-        )
-    # group's global offset = Σ counts of same group in earlier partitions
-    # (range pids ascend with the sort order); group's local start in pid =
-    # Σ counts of earlier groups in the same pid (groups are contiguous in
-    # (group, keys) sort order; string sort matches the range order here)
-    ordered = sorted(counts, key=lambda x: (x[0], str(x[1])))
-    by_group_running: dict = {}
-    by_pid_running: dict = {}
-    off_rows = []
-    for pid, grp, cnt in ordered:
-        off_rows.append(
-            (int(pid), grp, int(by_group_running.get(grp, 0)), int(by_pid_running.get(pid, 0)))
-        )
-        by_group_running[grp] = by_group_running.get(grp, 0) + cnt
-        by_pid_running[pid] = by_pid_running.get(pid, 0) + cnt
-    off_df = spark.createDataFrame(
-        pd.DataFrame(off_rows, columns=["_pid", group_col, "_goffset", "_lstart"]),
-        schema=f"_pid int, {group_col} string, _goffset long, _lstart long",
-    )
-    return (
-        part.join(F.broadcast(off_df), ["_pid", group_col])
-        .withColumn(out_col, (F.col("_local") - F.col("_lstart") + F.col("_goffset")).cast("long"))
-        .drop("_pid", "_goffset", "_lstart", "_local")
-    )
+    return part.mapInPandas(scan, schema=", ".join(out_fields))
 
 
 def audit_dense_index(
@@ -364,21 +246,22 @@ def audit_dense_index(
 ) -> int:
     """Full-order audit of a dense index assignment — guards the
     ``monotonically_increasing_id``-follows-``sortWithinPartitions``
-    invariant both assigners lean on (an AQE/stage-boundary change could
-    silently scramble indices; VERDICT r01 "What's wrong" #6).
+    invariant ``assign_dense_index`` leans on (an AQE/stage-boundary
+    change could silently scramble indices; VERDICT r01 "What's wrong"
+    #6).
 
-    One vectorized pass (``mapInPandas``, NO shuffle): in storage order —
-    which IS the sorted order the two-pass scheme produced — every
-    maximal same-group run of rows must carry consecutive indices; the
-    tiny run summaries (first, last, n) come back to the driver, which
-    sorts each group's runs by first index and verifies they tile
-    0..n_g-1 exactly (any duplicate, gap, or scramble breaks the tiling).
-    Returns the total row count; raises RuntimeError on violation (a real
-    exception, not ``assert`` — the guard must survive ``python -O``).
+    In storage order — which IS the sorted order the two-pass scheme
+    produced — every maximal same-group run of rows must carry
+    consecutive indices; the tiny run summaries (first, last, n) come
+    back to the driver, which sorts each group's runs by first index and
+    verifies they tile 0..n_g-1 exactly (any duplicate, gap, or scramble
+    breaks the tiling). Returns the total row count; raises RuntimeError
+    on violation (a real exception, not ``assert`` — the guard must
+    survive ``python -O``).
 
-    Cost: one scan of the (persisted) indexed frame + a collect of
-    O(#partitions × #groups) rows — cheap enough to stay on by default
-    in ingest.
+    Cost: one scan of the indexed frame (its checkpointed layout) + a
+    collect of O(#partitions × #groups) rows — cheap enough to stay on by
+    default in ingest.
 
     r6: pure-JVM form (guide §4 — the prior ``mapInPandas`` pass cost
     ~7 s of executor CPU per warm ingest in Python worker round-trips).
@@ -446,12 +329,12 @@ def exclusive_prefix_min(
     """``out_col`` = MIN(value) over all rows strictly before this one in
     ``order_col`` order (NULL for the global first row) — the scalable
     form of ``MIN(v) OVER (ORDER BY o ROWS UNBOUNDED PRECEDING ... -1)``,
-    same two-pass windowless composition as ``exclusive_prefix_sum``
+    same two-pass windowless composition as ``sorted_prefix_scan``
     (range partition = the only shuffle; per-partition minima → driver
     exclusive running min over #partitions values; map-only Arrow
-    cummin over the cached sorted partitions). ``order_col`` values must
-    be unique (same contract and reason as the prefix sum; callers here
-    pass groupBy-distinct keys). Min is idempotent/commutative, so
+    cummin over the checkpointed sorted partitions). ``order_col`` values
+    must be unique (same contract and reason as the prefix sum; callers
+    here pass groupBy-distinct keys). Min is idempotent/commutative, so
     unlike the sum there is no overflow story; NULL values in
     ``value_col`` are not allowed (asserted cheaply via the totals
     collect)."""
@@ -459,20 +342,11 @@ def exclusive_prefix_min(
 
     from pyspark.sql.types import LongType, StructField, StructType
 
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    part = (
-        df.repartitionByRange(n_part, F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .withColumn("_v", F.col(value_col).cast("long"))
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    part = _range_layout(df.withColumn("_v", F.col(value_col).cast("long")), [order_col], num_partitions)
     stats = part.groupBy("_pid").agg(
         F.min("_v").alias("m"), F.max(F.col("_v").isNull().cast("int")).alias("has_null")
     ).collect()
     if any(r["has_null"] for r in stats):
-        part.unpersist()
         raise ValueError(f"exclusive_prefix_min: NULL {value_col!r} values not allowed")
     mins = {r["_pid"]: r["m"] for r in stats}
     offsets, acc = {}, None
@@ -511,7 +385,6 @@ def exact_quantile(
     df,
     col: str,
     qs: list,
-    max_rounds: int = 70,
 ):
     """EXACT distributed quantiles of an integer column WITHOUT a
     global sort → list of (q, k, value) driver-side tuples, where
@@ -526,56 +399,51 @@ def exact_quantile(
 
     Algorithm: per quantile, binary search on the VALUE DOMAIN with one
     map-side-combined ``count(col ≤ mid)`` per round — the smallest v
-    with count(≤ v) ≥ k. log2(range) rounds (one cheap scan each, over
-    a persisted single-column projection), zero shuffles beyond each
-    count's partial merge, no ``Window.orderBy`` single-partition
-    collapse, no sort: at 100 TB this is ~32 cached column scans where
-    a sort-based quantile pays a full shuffle of the corpus. The
-    monotone invariant (count(≤ v) nondecreasing in v) makes the result
-    deterministic and partition-invariant by construction.
+    with count(≤ v) ≥ k. log2(range) rounds (at most 64; one cheap scan
+    each, over a single-column projection pinned by a lazy local
+    checkpoint), zero shuffles beyond each count's partial merge, no
+    ``Window.orderBy`` single-partition collapse, no sort: at 100 TB
+    this is ~32 checkpointed column scans where a sort-based quantile
+    pays a full shuffle of the corpus. The monotone invariant (count(≤ v)
+    nondecreasing in v) makes the result deterministic and
+    partition-invariant by construction.
 
     Returns driver-side (num, den, k, value) tuples (the quantile IS a
     scalar); callers needing a DataFrame wrap it. NULLs are excluded
     (SQL aggregate convention). Raises on an empty input or a rational
     outside (0, 1].
     """
-    from pyspark.sql import functions as F
-
     if not qs:
         raise ValueError("qs must be non-empty")
     for num, den in qs:
         if den < 1 or not (0 < num <= den):
             raise ValueError(f"need 0 < num <= den, got ({num}, {den})")
-    proj = df.select(F.col(col).cast("long").alias("v")).filter(
-        F.col("v").isNotNull()
+    proj = (
+        df.select(F.col(col).cast("long").alias("v"))
+        .filter(F.col("v").isNotNull())
+        .localCheckpoint(eager=False)
     )
-    proj = proj.persist()
-    try:
-        row = proj.agg(
-            F.count("*").alias("n"), F.min("v").alias("lo"), F.max("v").alias("hi")
-        ).collect()[0]
-        n, gmin, gmax = row["n"], row["lo"], row["hi"]
-        if n == 0:
-            raise ValueError("exact_quantile over an empty/all-NULL column")
-        out = []
-        for num, den in qs:
-            k = (num * n + den - 1) // den  # exact integer ceil
-            lo, hi = int(gmin), int(gmax)
-            rounds = 0
-            while lo < hi:
-                if rounds >= max_rounds:
-                    raise RuntimeError("exact_quantile: domain did not converge")
-                rounds += 1
-                mid = (lo + hi) // 2  # floor also for negative lo+hi in Python
-                c = proj.filter(F.col("v") <= mid).count()
-                if c >= k:
-                    hi = mid
-                else:
-                    lo = mid + 1
-            out.append((num, den, int(k), int(lo)))
-        return out
-    finally:
-        proj.unpersist()
+    row = proj.agg(F.count("*").alias("n"), F.min("v").alias("lo"), F.max("v").alias("hi")).collect()[0]
+    n, gmin, gmax = row["n"], row["lo"], row["hi"]
+    if n == 0:
+        raise ValueError("exact_quantile over an empty/all-NULL column")
+    out = []
+    for num, den in qs:
+        k = (num * n + den - 1) // den  # exact integer ceil
+        lo, hi = int(gmin), int(gmax)
+        rounds = 0
+        while lo < hi:
+            if rounds >= _QUANTILE_ROUNDS:
+                raise RuntimeError("exact_quantile: domain did not converge")
+            rounds += 1
+            mid = (lo + hi) // 2  # floor also for negative lo+hi in Python
+            c = proj.filter(F.col("v") <= mid).count()
+            if c >= k:
+                hi = mid
+            else:
+                lo = mid + 1
+        out.append((num, den, int(k), int(lo)))
+    return out
 
 
 def grouped_quantile(

@@ -109,7 +109,8 @@ class SnapshotCatalog:
         # the counts are collected (bounded: #partitions rows), written as
         # the lineage table, and summed for n_rows; a second full read of
         # the snapshot just to count() would triple append I/O at scale.
-        written = self.spark.read.parquet(ddir)
+        # The schema is the one just written: inferring it costs a job.
+        written = self.spark.read.schema(df.schema).parquet(ddir)
         rows = (
             written.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count("*").alias("n_rows"))

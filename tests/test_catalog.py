@@ -26,6 +26,22 @@ def test_append_read_snapshot_chain(spark, cat):
     assert inc2 is None and head2 == s2
 
 
+def test_append_reads_back_with_known_schema(spark, cat):
+    """append counts the rows it wrote by reading the snapshot back with
+    the schema it just wrote; inferring that schema from the files
+    would cost one more job (5 instead of 4)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"append-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one SnapshotCatalog.append")
+    try:
+        cat.append("t", spark.range(100).withColumn("v", F.col("id") * 2))
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+
 def test_full_rewrite_truncates_chain(spark, cat):
     cat.append("t", spark.range(5))
     cat.append("t", spark.range(100, 103), full_rewrite=True)

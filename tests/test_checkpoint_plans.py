@@ -1,5 +1,6 @@
 """Round-6 machinery: stats-reset checkpoint (the BigInt snowball fix)
-and its disk-only form, operators leaving no CacheManager entry,
+and its disk-only form, operators and ordered scans leaving no
+CacheManager entry,
 partition-spanning-forest reduction, the CC reduce-then-solve path, and
 the signed-zero ROUND restoration."""
 
@@ -16,9 +17,13 @@ from osmflat_rs_spark.operators.graph import (
     connected_components,
     label_propagation,
 )
-from osmflat_rs_spark.operators.hotspot import dbscan, spatial_mutual_information
-from osmflat_rs_spark.operators.textops import corpus_kl
+from osmflat_rs_spark.operators.hotspot import dbscan, home_range, spatial_mutual_information
+from osmflat_rs_spark.operators.intervals import concurrency_curve
+from osmflat_rs_spark.operators.sessions import kaplan_meier
+from osmflat_rs_spark.operators.skyline import skyline_2d
+from osmflat_rs_spark.operators.textops import corpus_kl, pack_sequences
 from osmflat_rs_spark.plans.checkpoint import fresh_local_checkpoint
+from osmflat_rs_spark.plans.indexing import assign_dense_index, exact_quantile
 
 
 def _stats_digits(df):
@@ -135,13 +140,26 @@ def _path_cc_one_round(spark):
         lambda s: spatial_mutual_information(_points(s), "cat").count(),
         lambda s: corpus_kl(_docs(s), "text", "g", dim=32).count(),
         _path_cc_one_round,
+        lambda s: kaplan_meier(_points(s).withColumn("e", F.col("node_idx") % 2), "lat", "e").count(),
+        lambda s: concurrency_curve(_points(s).withColumn("end", F.col("lat") + 5000), "lat", "end").count(),
+        lambda s: skyline_2d(_points(s), "lat", "lon").count(),
+        lambda s: home_range(_points(s)).count(),
+        lambda s: pack_sequences(_docs(s), "doc_id", "text", capacity=8).count(),
+        lambda s: exact_quantile(_points(s), "lat", [(1, 2), (9, 10)]),
+        lambda s: assign_dense_index(_points(s), ["node_idx"]).count(),
+        lambda s: assign_dense_index(_points(s), ["node_idx"], group_col="cat").count(),
     ],
-    ids=["cc", "cc_pre_reduce", "lpa", "dbscan", "boruvka", "spatial_mi", "corpus_kl", "cc_raises"],
+    ids=[
+        "cc", "cc_pre_reduce", "lpa", "dbscan", "boruvka", "spatial_mi", "corpus_kl", "cc_raises",
+        "kaplan_meier", "concurrency_curve", "skyline_2d", "home_range", "pack_sequences",
+        "exact_quantile", "dense_index", "dense_index_grouped",
+    ],
 )
 def test_operator_calls_leave_no_cache_manager_entry(spark, call):
-    """Operators materialize through local checkpoints only: a call
-    (forced, or raising half way) registers nothing with the session
-    CacheManager, so nothing stays pinned after its result is dropped."""
+    """Operators and the ordered scans under them (``plans.indexing``)
+    materialize through local checkpoints only: a call (forced, or
+    raising half way) registers nothing with the session CacheManager,
+    so nothing stays pinned after its result is dropped."""
     before = _cached_entries(spark)
     call(spark)
     assert _cached_entries(spark) == before

@@ -332,9 +332,11 @@ def test_coloc_join_broadcast_plan_never_shuffles_left(spark):
 
 def test_chunk_and_pack_plan_shapes(spark):
     """chunk_tokens is a pure map pipeline: ZERO Exchanges, no UDF.
-    pack_sequences' only Exchanges are the prefix sum's range partition
-    (+AQE bookkeeping) — never a hashpartitioning on doc rows."""
+    pack_sequences' only Exchange on doc rows is the prefix sum's range
+    partition, which runs while the call checkpoints the sorted layout —
+    never a hashpartitioning on doc rows."""
     from osmflat_rs_spark.operators.textops import pack_sequences
+    from tests.util import plans_of_call
 
     pdf = pd.DataFrame({"doc_id": range(100), "text": ["a b c d e"] * 100})
     docs = spark.createDataFrame(pdf)
@@ -345,12 +347,10 @@ def test_chunk_and_pack_plan_shapes(spark):
     assert "Exchange" not in chunk_plan, chunk_plan[:3000]
     assert "Python" not in chunk_plan, chunk_plan[:3000]  # no UDF anywhere
 
-    pack_plan = (
-        pack_sequences(docs, "doc_id", "text", capacity=7)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    pack, call_plans = plans_of_call(spark, lambda: pack_sequences(docs, "doc_id", "text", capacity=7))
+    pack_plan = pack._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in pack_plan, pack_plan[:3000]
-    assert "rangepartitioning" in pack_plan, pack_plan[:3000]
+    assert any("rangepartitioning" in p for p in call_plans), call_plans
 
 
 # ------------------------------------------------------------------ knox

@@ -91,15 +91,17 @@ def test_cell_encode_is_pure_jvm(spark):
 
 
 def test_dense_index_has_no_single_partition_sort(spark):
-    """The dense-index plan must not contain a global (single-partition)
-    Sort — rangepartitioning only (the 10^12-row safety property)."""
+    """The dense-index plans must not contain a global (single-partition)
+    Sort — rangepartitioning only (the 10^12-row safety property). The
+    range partition runs while the call checkpoints its layout."""
     from osmflat_rs_spark.plans.indexing import assign_dense_index
+    from tests.util import plans_of_call
 
     df = spark.range(10000).select((F.col("id") * 7 % 99991).alias("k"))
-    out = assign_dense_index(df, ["k"], "idx")
-    plan = _plan(out)
-    assert "rangepartitioning" in plan
-    assert "Window" not in plan  # the windowless scheme
+    out, call_plans = plans_of_call(spark, lambda: assign_dense_index(df, ["k"], "idx"))
+    plans = [_plan(out), *call_plans]
+    assert any("rangepartitioning" in p for p in plans)
+    assert not any("Window" in p for p in plans)  # the windowless scheme
     # verify correctness while here
     rows = out.orderBy("k").collect()
     assert [r["idx"] for r in rows] == list(range(len(rows)))
@@ -153,8 +155,8 @@ def test_spark_docs_generator_ingests(spark):
 
 def test_strings_dim_has_no_single_partition_exchange(tables):
     """The string-intern offset prefix sum must never collapse to one
-    partition (VERDICT r01 missing #6): the two-pass exclusive_prefix_sum
-    windows only inside bounded pid partitions."""
+    partition (VERDICT r01 missing #6): the two-pass sorted_prefix_scan
+    sums only inside bounded pid partitions."""
     plan = tables["strings_dim"]._jdf.queryExecution().executedPlan().toString()
     assert "Exchange SinglePartition" not in plan, plan[:3000]
 
@@ -166,15 +168,22 @@ def test_strings_dim_offsets_still_match_model(tables, model):
 
 
 def test_exclusive_prefix_sum_unit(spark):
-    from osmflat_rs_spark.plans.indexing import exclusive_prefix_sum
-    from pyspark.sql import functions as F
+    """An exclusive prefix sum is sorted_prefix_scan's inclusive sum minus
+    the row's own weight; unique keys, a single NULL key sorting first."""
+    from osmflat_rs_spark.plans.indexing import sorted_prefix_scan
 
-    df = spark.createDataFrame([(i, (i * 7) % 23 + 1) for i in range(200)], schema="o int, w long")
-    got = {r["o"]: r["off"] for r in exclusive_prefix_sum(df, "o", "w", "off", num_partitions=7).collect()}
+    def offsets(rows):
+        df = spark.createDataFrame(rows, schema="o int, w long")
+        scan = sorted_prefix_scan(df, ["o"], long_sums=[("w", "cw")], num_partitions=7)
+        return {r["o"]: r["off"] for r in scan.select("o", (F.col("cw") - F.col("w")).alias("off")).collect()}
+
+    got = offsets([(i, (i * 7) % 23 + 1) for i in range(200)])
     acc = 0
     for i in range(200):
         assert got[i] == acc, f"offset mismatch at {i}"
         acc += (i * 7) % 23 + 1
+    assert offsets([(1, 10), (2, 20), (3, 5)]) == {1: 0, 2: 10, 3: 30}
+    assert offsets([(None, 10), (2, 20), (3, 5)]) == {None: 0, 2: 10, 3: 30}
 
 
 def test_knn_bulk_plan_broadcasts_cover_never_shuffles_points(spark, tables):
@@ -218,20 +227,6 @@ def test_srp_candidate_exchange_keyed_on_ids_only(spark):
         assert "va#" not in key and "vb#" not in key, line
 
 
-def test_exclusive_prefix_sum_rejects_duplicate_keys(spark):
-    """ADVICE r02: the generic API now documents/enforces the unique
-    order-key contract instead of silently returning tie-order-dependent
-    offsets."""
-    from osmflat_rs_spark.plans.indexing import exclusive_prefix_sum
-
-    dup = spark.createDataFrame([(1, 10), (1, 20), (2, 5)], schema="o int, w long")
-    with pytest.raises(ValueError, match="unique"):
-        exclusive_prefix_sum(dup, "o", "w", assert_unique=True).collect()
-    ok = spark.createDataFrame([(1, 10), (2, 20), (3, 5)], schema="o int, w long")
-    got = {r["o"]: r["offset"] for r in exclusive_prefix_sum(ok, "o", "w", assert_unique=True).collect()}
-    assert got == {1: 0, 2: 10, 3: 30}
-
-
 def test_minhash_pipeline_plan_shape(spark):
     """Lock in the r3 MinHash plan claims (BENCH/BASELINE.md round-3
     section): the signature stage shuffles exactly once (the per-doc
@@ -272,20 +267,6 @@ def test_minhash_pipeline_plan_shape(spark):
     assert "CartesianProduct" not in pairs_plan and "BroadcastNestedLoopJoin" not in pairs_plan
     # the bucket join is keyed on (band, bh), never on raw ids alone
     assert "band" in pairs_plan
-
-
-def test_exclusive_prefix_sum_rejects_duplicate_null_keys(spark):
-    """count(order_col) skips NULLs, which used to let duplicate NULL
-    order keys (tie order = physical sort order) through the uniqueness
-    gate; a single NULL key remains legal."""
-    from osmflat_rs_spark.plans.indexing import exclusive_prefix_sum
-
-    dup_null = spark.createDataFrame([(None, 10), (None, 20), (2, 5)], schema="o int, w long")
-    with pytest.raises(ValueError, match="unique"):
-        exclusive_prefix_sum(dup_null, "o", "w", assert_unique=True).collect()
-    one_null = spark.createDataFrame([(None, 10), (2, 20), (3, 5)], schema="o int, w long")
-    got = {r["o"]: r["offset"] for r in exclusive_prefix_sum(one_null, "o", "w", assert_unique=True).collect()}
-    assert set(got) == {None, 2, 3} and sorted(got.values()) == [0, 10, 30]
 
 
 def test_knn_bulk_fallback_handles_string_and_null_ids(spark):
@@ -1313,8 +1294,11 @@ def test_cdf_stats_family_has_no_single_partition_window(spark):
     """r6 (VERDICT r05 #2): the CDF/stats operators must plan WITHOUT a
     global Window.orderBy (which collapses the distinct-value table to
     one task on continuous domains) — rangepartitioning + the map-only
-    prefix scan only."""
+    prefix scan only. The range partitions run while each call
+    checkpoints its sorted layouts."""
     import pandas as pd
+
+    from tests.util import plans_of_call
 
     from osmflat_rs_spark.operators.intervals import concurrency_curve
     from osmflat_rs_spark.operators.sessions import bh_fdr, kaplan_meier, sprt_bernoulli
@@ -1337,15 +1321,17 @@ def test_cdf_stats_family_has_no_single_partition_window(spark):
     )
     stream = spark.range(1000).select(F.col("id").alias("o"), (F.col("id") % 5 > 0).cast("int").alias("x"))
 
-    plans = {
-        "ks": _plan(ks_two_sample(a, b, "v")),
-        "mwu": _plan(mann_whitney_u(a, b, "v")),
-        "w1": _plan(wasserstein1_two_sample(a, b, "v")),
-        "km": _plan(kaplan_meier(life, "dur", "e")),
-        "sprt": _plan(sprt_bernoulli(stream, "o", "x", p0=0.5, p1=0.7)),
-        "bh": _plan(bh_fdr(tests_df, "t", "pn", "pd_")),
-        "conc": _plan(concurrency_curve(iv, "s", "e")),
+    calls = {
+        "ks": lambda: ks_two_sample(a, b, "v"),
+        "mwu": lambda: mann_whitney_u(a, b, "v"),
+        "w1": lambda: wasserstein1_two_sample(a, b, "v"),
+        "km": lambda: kaplan_meier(life, "dur", "e"),
+        "sprt": lambda: sprt_bernoulli(stream, "o", "x", p0=0.5, p1=0.7),
+        "bh": lambda: bh_fdr(tests_df, "t", "pn", "pd_"),
+        "conc": lambda: concurrency_curve(iv, "s", "e"),
     }
-    for name, plan in plans.items():
-        assert "Window" not in plan, name
-        assert "rangepartitioning" in plan, name
+    for name, call in calls.items():
+        out, call_plans = plans_of_call(spark, call)
+        plans = [_plan(out), *call_plans]
+        assert not any("Window" in p for p in plans), name
+        assert any("rangepartitioning" in p for p in plans), name

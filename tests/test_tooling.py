@@ -1,6 +1,6 @@
 """Repository tooling checks: no dead module-level definitions in the
-package, bench.py or scripts/, no persist/cache calls in operators, the
-gate registry's pinned oracle texts, and the gate checker
+package, bench.py or scripts/, no persist/cache calls in operators or
+plans, the gate registry's pinned oracle texts, and the gate checker
 (scripts/gate.py): its row canonicalization, multiset row diff, oracle
 type-widening check and per-gate verdicts."""
 
@@ -46,12 +46,12 @@ def test_no_unreferenced_module_level_defs():
 
 
 def test_operators_do_not_persist():
-    """Operators materialize through local checkpoints only
-    (``plans.checkpoint``): a ``persist``/``cache`` call pins blocks in
-    the session CacheManager until someone unpersists them, and an
-    ``unpersist`` is dead without one."""
+    """Operators and the plans they build on (``plans/``) materialize
+    through local checkpoints only: a ``persist``/``cache`` call pins
+    blocks in the session CacheManager until someone unpersists them,
+    and an ``unpersist`` is dead without one."""
     found = []
-    for path in sorted((PACKAGE / "operators").rglob("*.py")):
+    for path in sorted([*(PACKAGE / "operators").rglob("*.py"), *(PACKAGE / "plans").rglob("*.py")]):
         tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
         for node in ast.walk(tree):
             if (
@@ -60,7 +60,7 @@ def test_operators_do_not_persist():
                 and node.func.attr in ("persist", "cache", "unpersist")
             ):
                 found.append(f"{path.relative_to(REPO)}:{node.lineno} .{node.func.attr}(")
-    assert not found, "persist/cache calls in operators:\n" + "\n".join(found)
+    assert not found, "persist/cache calls in operators or plans:\n" + "\n".join(found)
 
 
 def test_oracle_sql_fingerprints():

@@ -53,3 +53,27 @@ def assert_frames_equal(engine_df, oracle_pdf, columns: list[str]):
     assert len(e) == len(o), f"row count: engine {len(e)} vs oracle {len(o)}"
     mismatches = [(i, a, b) for i, (a, b) in enumerate(zip(e, o)) if a != b]
     assert not mismatches, f"{len(mismatches)} mismatches; first: {mismatches[:5]}"
+
+
+def plans_of_call(spark, call):
+    """Run ``call()`` and return (its result, the physical plan texts of
+    the SQL executions it ran). A checkpoint taken inside the call runs
+    its exchanges there, out of sight of the returned frame's own plan."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()  # the store is fed by the listener bus
+        return store.executionsList()  # ascending execution id
+
+    before = executions()
+    mark = before.last().executionId() if before.nonEmpty() else -1
+    result = call()
+    after = executions()
+    plans = []
+    for i in range(after.size() - 1, -1, -1):
+        e = after.apply(i)
+        if e.executionId() <= mark:
+            break
+        plans.append(e.physicalPlanDescription())
+    return result, plans
