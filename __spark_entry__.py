@@ -1950,9 +1950,8 @@ def q_emst_events(spark, sf_dir):
     q = pts.select(F.col("event_id").cast("string").alias("query_id"), "lat", "lon")
     # the self radius-join emits each undirected edge once per
     # orientation with the same d2; keeping query < point halves the
-    # edge list with a free filter, so boruvka can skip its per-pair
-    # dedup aggregate (dedup_edges=False — min-struct reductions absorb
-    # duplicates exactly, the forest is unchanged)
+    # edge list with a free filter (boruvka's min-struct reductions
+    # absorb the duplicates exactly; the filter only shrinks its input)
     pairs = radius_join(
         pts, q, radius_m=KNN_RADIUS_FIXED, res=CELL_RES, metric="sqeuclid",
         id_col="event_id",
@@ -1962,7 +1961,7 @@ def q_emst_events(spark, sf_dir):
         F.col("event_id").alias("dst"),
         F.col("dist_m").alias("w"),
     )
-    return boruvka_mst(edges, dedup_edges=False)
+    return boruvka_mst(edges)
 
 
 def q_cramers_v_events(spark, sf_dir):
@@ -2964,7 +2963,7 @@ def q_viewshed_events(spark, sf_dir):
     a cell is visible iff no intermediate DDA-line cell blocks the
     sight line (cross-multiplied slope compare; d as doubles of exact
     integer squares — mirrored verbatim). Engine: one density agg +
-    the scalar-explode DDA fan + one broadcast grid join + one
+    the dda_pixels_distinct fan + one broadcast grid join + one
     max-obstruction groupBy; oracle: the same DDA closed form
     (_dda_sql) + identical comparison."""
     from osmflat_rs_spark.operators.tiling import viewshed_grid
@@ -3330,9 +3329,9 @@ def q_trend_events(spark, sf_dir):
 
 
 def q_raster_events(spark, sf_dir):
-    """F7 Bresenham-family rasterization (render-roads.rs:132-155) as a
-    fused vectorized DDA+distinct stage (one Arrow pass over the slim
-    segment rows — see dda_pixels_distinct for the r6 rationale)."""
+    """F7 Bresenham-family rasterization (render-roads.rs:132-155) through
+    the engine's one DDA, ``dda_pixels_distinct`` (expand + distinct
+    fused into one Arrow pass over the slim segment rows)."""
     from osmflat_rs_spark.operators.tiling import dda_pixels_distinct
 
     pts = _synth_coords(_t(spark, sf_dir, "events", spread=False))
@@ -3341,7 +3340,7 @@ def q_raster_events(spark, sf_dir):
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # Fan out BEFORE the window: AQE sizes the window's shuffle on the
     # slim PRE-explode segment bytes and coalesces it to ~2 partitions,
-    # serializing the 120x DDA explode + 10.7M-group distinct onto 2 of
+    # serializing the 120x DDA fan-out + 10.7M-pixel dedup onto 2 of
     # 32 cores (measured 6.0s -> 0.75s at sf0.1). A user-specified
     # repartition(n, key) ahead of the window satisfies its clustering
     # requirement, becomes the stage's ONLY exchange, and AQE leaves
@@ -3356,10 +3355,8 @@ def q_raster_events(spark, sf_dir):
         .withColumn("y1", F.lead("y0").over(w))
         .filter(F.col("x1").isNotNull())
     )
-    # r6: the explode + 10.7M-group distinct is fused into one NumPy
-    # stage (dedup within the user_id partitioning == global dedup); the
-    # JVM codegen form paid a 2-4x C1/JIT ramp on every fresh JVM that
-    # the vectorized form does not (see dda_pixels_distinct docstring).
+    # dedup within the user_id partitioning == global dedup; the same
+    # keyed fan-out + DDA stage as tiling.raster_assign
     return dda_pixels_distinct(seg, ["user_id"])
 
 

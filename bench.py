@@ -163,11 +163,9 @@ def run_suite(cpus: int, sf_dir: str) -> dict:
         t = {**t, "nodes": nodes}
         _force(pip_join(nodes, polys))
         # road_segments at this scale comes out of an AQE-coalesced shuffle
-        # as ONE partition; explicit fan-out spreads the DDA explode +
-        # distinct (see q_raster_events in __spark_entry__.py). The
-        # 128M-point jobs pin minPartitionSize instead and keep their
-        # natural partitioning.
-        _force(tile_assign_segments(refq.road_segments(t), fanout_partitions=cpus))
+        # as ONE partition; tile_assign_segments' keyed fan-out spreads the
+        # DDA stage over every core
+        _force(tile_assign_segments(refq.road_segments(t)))
         dt = min(dt, time.time() - t0)
         unpersist_ingest(t)
         nodes.unpersist()

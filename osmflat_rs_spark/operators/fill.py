@@ -1,8 +1,8 @@
 """Polygon interior rasterization: the grid cells a polygon FILLS.
 
-The stroke half of rasterization exists (``tiling.raster_assign``'s DDA
-draws way outlines exactly as the reference's renderer does,
-render-roads.rs); this is the fill half — the cells whose CENTER lies
+The stroke half of rasterization exists (``tiling.raster_assign`` draws
+way outlines through the engine's one DDA, ``dda_pixels_distinct``,
+exactly as the reference's renderer does, render-roads.rs); this is the fill half — the cells whose CENTER lies
 inside a polygon, the mask a zonal raster / fill renderer / label-
 burn-in step needs per polygon (reference anchor: the multipolygon
 features the engine assembles for rendering, render-features.rs:133-149,

@@ -1038,13 +1038,17 @@ def random_walks(
     return res.select("walk_id", "step", "node")
 
 
+# Borůvka merging rounds before boruvka_mst gives up: every round at least
+# halves the component count of each connected component that still has
+# a live edge, so an int64 node set (< 2^64 nodes) converges within 64
+_BORUVKA_ROUNDS = 64
+
+
 def boruvka_mst(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    max_rounds: int = 30,
-    dedup_edges: bool = True,
 ) -> DataFrame:
     """Minimum spanning forest by distributed Borůvka (1926; THE
     MST algorithm that parallelizes — Kruskal/Prim are inherently
@@ -1061,30 +1065,22 @@ def boruvka_mst(
     reproduces dbscan-style clusters for every d ≤ rmax at once
     (HDBSCAN's first phase).
 
-    Input edges are undirected (one row per pair suffices); self-loops
-    drop. Not SQL-restatable (iterative contraction), so gates are
-    rows-only; the pytest reference is a pure-Python Prim run asserting
-    edge-set equality (unique by the deterministic tie-break).
-
-    ``dedup_edges=False`` skips the per-(u, v) min(w) pre-aggregation.
-    The RESULT cannot change: every later step reduces by MIN over the
-    struct (w, u, v) per component or component pair, and the min over
-    all raw rows equals the min over per-pair minima — duplicate rows
-    and multi-edges are absorbed exactly. The pre-agg only pays for
-    itself when the input is duplicate-heavy; a caller that already
-    holds one row per pair (e.g. a half-filtered radius join) saves a
-    full-width hash aggregate by opting out (r6: ~1/3 of the sf0.1
-    EMST gate's edge-build time).
+    Input edges are undirected; self-loops drop. Duplicate rows, both
+    orientations of a pair and multi-edges need no pre-aggregation:
+    every step reduces by MIN over the struct (w, u, v) per component or
+    component pair, and the min over all raw rows equals the min over
+    per-pair minima, so they are absorbed exactly. Not SQL-restatable
+    (iterative contraction), so gates are rows-only; the pytest
+    reference is a pure-Python Prim run asserting edge-set equality
+    (unique by the deterministic tie-break). Raises RuntimeError if
+    edges between components remain after ``_BORUVKA_ROUNDS`` rounds —
+    impossible for a correct contraction, so never a partial forest.
     """
-    if max_rounds < 1:
-        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     e = edges.select(
         F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
         F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
         F.col(weight).cast("long").alias("w"),
     ).filter(F.col("u") != F.col("v"))
-    if dedup_edges:
-        e = e.groupBy("u", "v").agg(F.min("w").alias("w"))
     # disk-only: the raw edge list scales with graph density and a
     # deserialized in-memory checkpoint OOMed the JVM at 5x the bench
     # density; every round reads the checkpointed blocks
@@ -1094,7 +1090,7 @@ def boruvka_mst(
     ).distinct()
     comp = nodes.select("node", F.col("node").alias("c")).transform(fresh_local_checkpoint)
     mst_parts: list[DataFrame] = []
-    for rnd in range(max_rounds):
+    for rnd in range(_BORUVKA_ROUNDS + 1):
         cu = comp.select(F.col("node").alias("u"), F.col("c").alias("cu"))
         cv = comp.select(F.col("node").alias("v"), F.col("c").alias("cv"))
         live = e.join(cu, "u").join(cv, "v").filter(F.col("cu") != F.col("cv"))
@@ -1109,8 +1105,9 @@ def boruvka_mst(
         # and the accumulated per-round checkpoint blocks GC-thrashed
         # the driver JVM into 80s contraction calls) to Θ(component
         # pairs), which shrinks geometrically. Round 0 skips the
-        # aggregation — components are singletons, the pair-min IS the
-        # (u, v)-deduped input.
+        # aggregation — components are singletons, so the pair-min is
+        # the per-(u, v) min, which the per-component struct min below
+        # takes over the raw rows anyway.
         if rnd == 0:
             # same width class as e itself -> disk-only (see above)
             contracted = live.select(
@@ -1129,6 +1126,8 @@ def boruvka_mst(
             )
         if contracted.isEmpty():
             break
+        if rnd == _BORUVKA_ROUNDS:
+            raise RuntimeError(f"boruvka_mst: edges between components remain after {rnd} rounds")
         # each pair edge is outgoing for BOTH endpoint components; the
         # per-component argmin must see both orientations before the
         # min (two partial minima unioned as edges would let a

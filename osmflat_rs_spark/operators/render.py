@@ -8,7 +8,7 @@ string with per-category styling and fixed 5-decimal coordinate
 formatting (F11, render-features.rs:285).
 
 The pixel/geometry computation is distributed (the DataFrames produced by
-tiling.raster_assign / queries.classify); only the final image assembly
+tiling.raster_assign — the fused Arrow DDA stage — / queries.classify); only the final image assembly
 is driver-side — exactly like the reference, which accumulates the raster
 in RAM before writing (render-roads.rs:161-214).
 """

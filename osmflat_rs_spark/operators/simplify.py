@@ -130,7 +130,8 @@ def chaikin_smooth(
     stage's parallelism (AQE coalesced the ~MB array shuffle to 3 tasks
     at the sf0.1 gate); the K subdivision passes run VECTORIZED in one
     Arrow stage over flat int64 coordinate arrays (offset-indexed
-    NumPy — the same concat/repeat pattern as dda_pixels_distinct),
+    NumPy — the concat/repeat pattern of the engine's one DDA stage,
+    tiling.dda_pixels_distinct),
     which also emits the exploded (pos, lat_s, lon_s) rows. The prior
     in-row Catalyst-HOF cascade evaluated interpreted per ELEMENT and,
     with K stacked passes, re-derived pass k−1 on every element access

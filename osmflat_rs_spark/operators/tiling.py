@@ -3,28 +3,28 @@
 ``raster_assign`` re-expresses the reference's Bresenham renderer
 (osmflat/examples/render-roads.rs:71-81 affine transform, :132-155 line
 rasterization) as a DataFrame pipeline: integer affine pixel transform →
-consecutive-pair window → line expansion as a pure JVM array expression
-(``sequence`` + ``transform`` — whole-stage-codegen'd, zero Python) →
-explode → distinct.
+keyed fan-out → consecutive-pair window → ``dda_pixels_distinct``, the
+one line rasterizer.
 
 ``tile_assign_segments`` generalizes it to web-mercator slippy tiles at
 a fixed zoom (north-rule raster↔vector assignment): per-endpoint tile
 via the pure column-expression encode (``functions.geo``), then the same
-DDA expansion on the tile grid. ``oracle.tile_xy`` is its NumPy
-reference.
+DDA stage on the tile grid. ``oracle.tile_xy`` is its NumPy reference.
 
 Line spec: symmetric integer DDA, round-half-up both axes, endpoints
 exact (deviation from the reference's error-accumulator form is pinned in
 oracle.dda_line — engine and oracle implement the identical closed form).
 
-Investigated and rejected (r2): in-row consecutive-tile dedup before the
-DDA explode (transform → zip-with-shifted → filter → slice chains) to
-shrink the distinct agg's input. Measured 5-10× SLOWER than this flat
-explode+codegen pipeline at 128M vertices: every array HOF materializes
-a fresh ArrayData per row, and a lambda referencing an outer array
-expression is re-evaluated per ELEMENT after projection collapse. The
-flat form (explode early, scalar codegen, one hash-agg with map-side
-partial) is the fast shape in this engine.
+One DDA: raster, tile assignment, the ``raster_events`` gate and the
+viewshed fan all run ``dda_pixels_distinct``. The JVM form (codegen
+``sequence`` explode + ``distinct`` hash-agg) was deleted after a warm
+A/B on 4 CPUs (BENCH/BASELINE.md, last section): the fused Arrow stage
+won 1.8–5× from ~1M output pixels upward (8.75M tile rows: 17–19 s →
+3.3–3.8 s; the sf0.1 raster segments: 5.5–6.4 s → 2.3–2.7 s), tied at
+1M, and lost 0.1–0.2 s on 68k tiles — too little to keep a second path
+with a size selector. In-row array-HOF dedup before the expansion (r2)
+was 5-10× slower still: every array HOF materializes a fresh ArrayData
+per row.
 """
 
 from __future__ import annotations
@@ -38,59 +38,32 @@ RASTER_H = 512
 TILE_ZOOM = 14
 
 
-def dda_expand(seg: DataFrame, id_cols: list[str]) -> DataFrame:
-    """Scalar-explode DDA: explode the step index FIRST, then compute x/y
-    as scalar integer expressions (``div``) — ~10× faster than building
-    an array<struct> per segment (measured: 1.7s vs 17.9s on 12M pixels,
-    local[32]) because no per-segment array materializes; the whole
-    expansion stays in one WholeStageCodegen.
-
-    seg needs columns x0, y0, x1, y1; returns id_cols + (x, y). A
-    byte-small ``seg`` out of an AQE-coalesced shuffle serializes the
-    fan-out onto few cores; fan out upstream of the window that built it
-    (see the comment in ``__spark_entry__.q_raster_events``)."""
-    m = F.greatest(F.abs(F.col("x1") - F.col("x0")), F.abs(F.col("y1") - F.col("y0")))
-    stepped = seg.withColumn("m", m).select(
-        *id_cols,
-        "x0",
-        "y0",
-        "x1",
-        "y1",
-        "m",
-        F.explode(F.sequence(F.lit(0).cast("long"), F.col("m"))).alias("i"),
-    )
-    # greatest(m,1) avoids div-by-zero on degenerate (single-pixel) segments
-    x = F.expr("x0 + (CASE WHEN x1 >= x0 THEN 1 ELSE -1 END) * ((2*abs(x1-x0)*i + m) div (2*greatest(m, 1)))")
-    y = F.expr("y0 + (CASE WHEN y1 >= y0 THEN 1 ELSE -1 END) * ((2*abs(y1-y0)*i + m) div (2*greatest(m, 1)))")
-    return stepped.select(*id_cols, x.alias("x"), y.alias("y"))
-
-
 def dda_pixels_distinct(seg: DataFrame, id_cols: list[str]) -> DataFrame:
-    """Fused DDA expand + distinct as ONE vectorized Arrow stage: takes the
-    slim segment rows (id_cols + x0,y0,x1,y1), emits distinct
-    (id_cols + x, y) pixels. Same closed form as ``dda_expand`` (integer
-    DDA, p_i = p0 + sign*((2|d|i + m) div 2·max(m,1))), identical rows.
+    """The engine's one line rasterizer: DDA expand + distinct fused into
+    ONE vectorized Arrow stage. Takes the slim segment rows (id_cols +
+    x0,y0,x1,y1), emits distinct (id_cols + x, y) bigint pixels by the
+    closed form p_i = p0 + sign·((2|d|·i + m) div 2·max(m,1)), m =
+    max(|dx|,|dy|), i = 0..m — ``oracle.dda_line`` per row.
 
-    Why it exists next to the pure-JVM ``dda_expand`` + ``distinct`` form
-    (guide §4.2): the generated whole-stage loop for explode+hash-distinct
-    runs at C1/interpreted speed until HotSpot's Tier-4 backedge counters
-    trip — measured 48s task CPU on its first sf0.1 execution vs 11.5s
-    steady on the raster gate — so short-lived sessions (and the frozen
-    bench's best-of-2 protocol, whose sf0.001 warmup never reaches the
-    compile thresholds) pay 2-4× on every fresh JVM. NumPy has no such
-    ramp: first call ≈ steady state (~0.35s of task CPU for the same
-    11.8M pixels). Only the slim segment rows cross the JVM→Python
-    boundary (§4: pass only needed columns); the deduped pixels come back
-    once as Arrow batches.
+    Why it is the only form: the JVM alternative explodes every pixel
+    into a row and dedups it in a hash aggregate; per-row explode + hash
+    probe cost more than one NumPy pass over whole Arrow batches once
+    the fan-out reaches ~1M pixels (2.4× slower warm on the sf0.1 raster
+    segments), and its generated loop also ran at C1 speed on a fresh
+    JVM until HotSpot's Tier-4 counters tripped (48 s task CPU on the
+    first sf0.1 run vs 11.5 s steady). Only the slim segment rows cross
+    the JVM→Python boundary; the deduped pixels come back once.
 
-    Dedup scope: within the input partition. Callers must have the input
-    hash-partitioned by (a subset of) id_cols — equal (ids,x,y) tuples
-    are then co-located and per-partition dedup IS global dedup, exactly
-    the property the JVM form's exchange-free HashAggregate relies on.
-    Memory: one partition's exploded pixels live as transient int64
-    arrays (fan-out bounded by grid geometry, same class as the JVM hash
-    table); at 100 TB the id-partition count scales with the input, so
-    per-task state stays bounded.
+    Dedup scope: within the input partition. Callers hash-partition the
+    input by (a subset of) id_cols — ``repartition(n, key)`` with n =
+    ``defaultParallelism`` — so equal (ids, x, y) tuples are co-located
+    and per-partition dedup IS global dedup; the keyed exchange is the
+    stage's only shuffle. (A caller whose rows each carry a unique id
+    needs no partitioning: one segment's pixels are already distinct,
+    the major axis advancing by exactly 1 per step.)
+    Memory contract: one task holds one partition's exploded pixels as
+    transient int64 arrays — the input's pixels / n. At scale, raise n
+    with the input so per-task state stays bounded.
     """
     import numpy as np
 
@@ -168,17 +141,20 @@ def raster_assign(road_coords: DataFrame, bbox: tuple[int, int, int, int]) -> Da
     ).cast("long")
     # NOTE: (a*b)/c on longs in Spark yields double — exact here because
     # |a*b| < 2^53; for planet-scale rasters switch to expr("a*b div c").
+    # fan out BEFORE the window (the q_raster_events shape): an
+    # explicit-count keyed exchange is never coalesced by AQE and
+    # satisfies the window's clustering, so it is the only shuffle and
+    # the DDA stage's per-partition dedup is global
+    n = road_coords.sparkSession.sparkContext.defaultParallelism
     pix = road_coords.select(
         "way_idx",
         "pos",
         px.alias("gx"),
         py.alias("gy"),
-    )
+    ).repartition(n, "way_idx")
     seg = _segments(pix, "way_idx").withColumnRenamed("gx", "x0").withColumnRenamed("gy", "y0")
-    return (
-        dda_expand(seg, ["way_idx"])
-        .select("way_idx", F.col("x").cast("int").alias("x"), F.col("y").cast("int").alias("y"))
-        .distinct()
+    return dda_pixels_distinct(seg, ["way_idx"]).select(
+        "way_idx", F.col("x").cast("int").alias("x"), F.col("y").cast("int").alias("y")
     )
 
 
@@ -186,23 +162,20 @@ def tile_assign_segments(
     segments: DataFrame,
     zoom: int = TILE_ZOOM,
     jvm_tiles: bool = True,
-    fanout_partitions: int | None = None,
 ) -> DataFrame:
     """→ distinct (way_idx, zoom, tile_x, tile_y) from PRE-PAIRED segments
     (way_idx, lat, lon, lat2, lon2) — e.g. ``queries.road_segments``'s
-    in-row pairs. The whole phase is then: one codegen stage (tile encode
-    + DDA scalar-explode) feeding one distinct hash-agg — the ONLY shuffle
-    in the 100-TB tile path.
+    in-row pairs. The whole phase is then: one codegen stage (tile
+    encode) → a keyed fan-out of the slim tile segments to
+    ``defaultParallelism`` partitions by way_idx — the ONLY shuffle in
+    the 100-TB tile path — → ``dda_pixels_distinct``, whose
+    per-partition dedup is global dedup under that keying.
 
     Tile coords come from the pure column-expression encode
-    (``functions.geo``), the one engine path; ``oracle.tile_xy`` is the
-    NumPy reference the tests compare it with. ``jvm_tiles`` accepts
-    only ``True`` (kept for callers that pass it); ``False`` raises
-    ValueError.
-
-    ``fanout_partitions``: keyed repartition of the slim tile segments,
-    then explode + distinct fuse into one vectorized Arrow stage (see
-    ``dda_pixels_distinct``)."""
+    (``functions.geo``), the one engine path: its float log/tan tree is
+    the bit-pinned one. ``oracle.tile_xy`` is the NumPy reference the
+    tests compare it with. ``jvm_tiles`` accepts only ``True`` (kept for
+    callers that pass it); ``False`` raises ValueError."""
     if not jvm_tiles:
         raise ValueError(
             "tile_assign_segments has one tile encode (jvm_tiles=True); "
@@ -210,6 +183,7 @@ def tile_assign_segments(
         )
     from osmflat_rs_spark.functions.geo import mercator_tile_x, mercator_tile_y, to_degrees
 
+    n = segments.sparkSession.sparkContext.defaultParallelism
     seg = segments.select(
         "way_idx",
         mercator_tile_x(to_degrees(F.col("lon")), zoom).alias("x0"),
@@ -217,28 +191,11 @@ def tile_assign_segments(
         mercator_tile_x(to_degrees(F.col("lon2")), zoom).alias("x1"),
         mercator_tile_y(to_degrees(F.col("lat2")), zoom).alias("y1"),
     )
-    if fanout_partitions:
-        # keyed fan-out → per-partition dedup IS global dedup, so the
-        # explode + distinct fuse into one vectorized Arrow stage (no
-        # JIT ramp, no 100x-exploded rows in the JVM hash-agg — see
-        # dda_pixels_distinct). Tile encode stays in JVM codegen: its
-        # float log/tan tree is the bit-pinned one.
-        pix = dda_pixels_distinct(seg.repartition(fanout_partitions, "way_idx"), ["way_idx"])
-        return pix.select(
-            "way_idx",
-            F.lit(zoom).alias("zoom"),
-            F.col("x").alias("tile_x"),
-            F.col("y").alias("tile_y"),
-        )
-    return (
-        dda_expand(seg, ["way_idx"])
-        .select(
-            "way_idx",
-            F.lit(zoom).alias("zoom"),
-            F.col("x").alias("tile_x"),
-            F.col("y").alias("tile_y"),
-        )
-        .distinct()
+    return dda_pixels_distinct(seg.repartition(n, "way_idx"), ["way_idx"]).select(
+        "way_idx",
+        F.lit(zoom).alias("zoom"),
+        F.col("x").alias("tile_x"),
+        F.col("y").alias("tile_y"),
     )
 
 
@@ -977,10 +934,10 @@ def viewshed_grid(
     z = per-cell point count (or ``value_col`` sum), absent cells 0;
     z_o = observer cell's z + ``observer_height``.
 
-    Scale shape: ONE density aggregate, then the scalar-explode DDA
-    fan (one codegen stage, sum of line lengths = O(occupied x radius)
-    — the inherent viewshed cost; bound the input to the analysis
-    window upstream), one left join back to the density grid for
+    Scale shape: ONE density aggregate, then the DDA fan
+    (``dda_pixels_distinct``, one Arrow stage; sum of line lengths =
+    O(occupied x radius) — the inherent viewshed cost; bound the input
+    to the analysis window upstream), one left join back to the density grid for
     intermediate elevations (broadcast when the occupied set is small),
     one groupBy(target) max-obstruction. → (ix, iy, z, visible);
     the observer's own cell is omitted (self-visibility is vacuous)."""
@@ -1016,7 +973,9 @@ def viewshed_grid(
         F.col("tx").cast("long").alias("x1"),
         F.col("ty").cast("long").alias("y1"),
     )
-    line = dda_expand(seg, ["tx", "ty", "zt", "_zo"])
+    # each target is one row and a DDA line never repeats a pixel, so
+    # the stage's dedup keeps every row under any partitioning
+    line = dda_pixels_distinct(seg, ["tx", "ty", "zt", "_zo"])
     mids = line.filter(
         ~((F.col("x") == ox) & (F.col("y") == oy))
         & ~((F.col("x") == F.col("tx")) & (F.col("y") == F.col("ty")))

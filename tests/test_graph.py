@@ -747,14 +747,19 @@ def test_random_walks_validation(spark):
         random_walks(df, 2, 3, 0)
 
 
-def test_boruvka_mst_matches_prim_reference(spark):
+def test_boruvka_mst_matches_prim_reference(spark, monkeypatch):
     """Distributed Borůvka equals a pure-Python Prim under the same
     (w, u, v) total order (unique forest), across a connected random
-    graph AND a disconnected forest; total weight minimal."""
+    graph AND a disconnected forest — also with every row duplicated
+    and swapped (src, dst); total weight minimal. A round cap that
+    leaves edges between components raises instead of returning a
+    partial forest."""
     import heapq
 
     import numpy as np
+    import pytest
 
+    from osmflat_rs_spark.operators import graph
     from osmflat_rs_spark.operators.graph import boruvka_mst
 
     rng = np.random.default_rng(163)
@@ -800,6 +805,16 @@ def test_boruvka_mst_matches_prim_reference(spark):
     # forest size = n_nodes - n_components
     comps = 2  # main graph is connected with 250 random edges? verify via want
     assert len(got) == len(nodes) - (len(nodes) - len(want))
+    # duplicated rows and both orientations: no pre-aggregation needed
+    noisy = edges + [(v, u, w) for u, v, w in edges] + edges[::3]
+    df2 = spark.createDataFrame(noisy, "src long, dst long, w long")
+    assert sorted((r["u"], r["v"], r["w"]) for r in boruvka_mst(df2).collect()) == want
+    # path a-b (1), b-c (3), c-d (2): round 0 merges {a,b} and {c,d},
+    # so one round leaves the b-c edge live
+    path = spark.createDataFrame([(1, 2, 1), (2, 3, 3), (3, 4, 2)], "src long, dst long, w long")
+    monkeypatch.setattr(graph, "_BORUVKA_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="after 1 rounds"):
+        boruvka_mst(path)
 
 
 def test_cooccurrence_pairs_matches_counter_model(spark):

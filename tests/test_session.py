@@ -62,3 +62,21 @@ def test_default_master_fits_host(monkeypatch, env_cpus, want):
         session.get_spark("probe")
     assert _Builder.conf["master"] == f"local[{want}]"
     assert _Builder.conf["spark.sql.shuffle.partitions"] == str(want)
+
+
+def test_driver_table_spread_decision(spark):
+    """``_t`` spreads a map-side table whose scan yields fewer splits than
+    cores by one round-robin exchange to ``defaultParallelism``; a
+    shuffle-first table and a ``spread=False`` caller get none."""
+    import __spark_entry__ as e
+
+    sf = "/root/testdata/sf0.001"
+    n = spark.sparkContext.defaultParallelism
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    spread = plan(e._t(spark, sf, "events"))
+    assert f"Exchange RoundRobinPartitioning({n}), REPARTITION_BY_NUM" in spread, spread
+    assert "Exchange" not in plan(e._t(spark, sf, "lineitem"))
+    assert "Exchange" not in plan(e._t(spark, sf, "events", spread=False))

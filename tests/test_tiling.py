@@ -1,6 +1,8 @@
 """Tiling golden tests: Bresenham-family raster assignment and z14
 web-mercator tile assignment vs the model oracle."""
 
+import re
+
 from osmflat_rs_spark import oracle
 from osmflat_rs_spark import queries as q
 from osmflat_rs_spark.operators.tiling import raster_assign, tile_assign_segments
@@ -22,6 +24,13 @@ def test_raster_assign(tables, model):
     want = oracle.q_raster_assign(model)
     assert len(want) > 0
     assert_frames_equal(got, want, ["way_idx", "x", "y"])
+    assert got.schema.simpleString() == "struct<way_idx:bigint,x:int,y:int>"
+    # the keyed fan-out sits BELOW the window: an explicit-count hash
+    # exchange on way_idx that AQE does not coalesce
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    window_at = plan.index("Window ")
+    fanout = re.search(r"Exchange hashpartitioning\(way_idx#\d+L?, \d+\), REPARTITION_BY_NUM", plan)
+    assert fanout and fanout.start() > window_at, plan[:3000]
 
 
 def test_tile_assign(tables, model):
@@ -60,20 +69,21 @@ def test_road_coords_inrow_equals_join_form(tables):
 
 def test_tile_segments_plan_has_no_window_one_shuffle(spark, tables):
     """Scale assertion for the tile OPERATOR (segments → tiles): no
-    Window anywhere, and the only Exchange is the distinct agg — one
-    codegen stage feeds one shuffle. (Upstream ways resolution is its own
-    ingest stage; here the input stands materialized.)"""
+    Window anywhere, and the only Exchange is the keyed fan-out feeding
+    the fused Arrow DDA stage — no hash aggregate. (Upstream ways
+    resolution is its own ingest stage; here the input stands
+    materialized.)"""
     segs = spark.createDataFrame(
         [(1, 525000000, 133000000, 525100000, 133400000)],
         schema="way_idx long, lat long, lon long, lat2 long, lon2 long",
     )
-    plan = (
-        tile_assign_segments(segs)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    out = tile_assign_segments(segs)
+    assert out.schema.simpleString() == "struct<way_idx:bigint,zoom:int,tile_x:bigint,tile_y:bigint>"
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, plan[:3000]
     n_exchange = plan.count("Exchange")
-    assert n_exchange <= 1, f"expected 1 Exchange (distinct agg), got {n_exchange}:\n{plan[:3000]}"
+    assert n_exchange <= 1, f"expected 1 Exchange (keyed fan-out), got {n_exchange}:\n{plan[:3000]}"
+    assert "MapInPandas" in plan and "HashAggregate" not in plan, plan[:3000]
     # and road_segments itself is pure in-row: no Window, no join beyond
     # the ingest-owned resolution chain
     from osmflat_rs_spark import queries as q
@@ -1075,14 +1085,14 @@ def test_weighted_overlay_matches_model(spark):
         weighted_overlay(df, w_density=0, w_focal=0)
 
 
-def test_dda_pixels_distinct_equals_jvm_form(spark):
-    """The fused Arrow DDA+dedup stage (r6, q_raster_events /
-    tile_assign_segments fan-out path) emits exactly the rows of the JVM
-    dda_expand + distinct form — including degenerate (m=0) segments,
-    negative coordinates, duplicate segments, and multi-id partitions."""
+def test_dda_pixels_distinct_equals_oracle_dda_line(spark):
+    """The engine's one DDA stage emits exactly the set of
+    ``oracle.dda_line`` pixels per segment row — including degenerate
+    (m=0) segments, negative coordinates, duplicate segments, and
+    multi-id partitions."""
     import numpy as np
 
-    from osmflat_rs_spark.operators.tiling import dda_expand, dda_pixels_distinct
+    from osmflat_rs_spark.operators.tiling import dda_pixels_distinct
 
     rng = np.random.default_rng(41)
     rows = []
@@ -1097,8 +1107,9 @@ def test_dda_pixels_distinct_equals_jvm_form(spark):
         rows, "user_id long, x0 long, y0 long, x1 long, y1 long"
     ).repartition(4, "user_id")
     want = sorted(
-        tuple(r) for r in dda_expand(seg, ["user_id"]).distinct().collect()
+        {(uid, x, y) for uid, x0, y0, x1, y1 in rows for x, y in oracle.dda_line(x0, y0, x1, y1)}
     )
-    got = sorted(tuple(r) for r in dda_pixels_distinct(seg, ["user_id"]).collect())
+    got = [tuple(r) for r in dda_pixels_distinct(seg, ["user_id"]).collect()]
     assert len(want) > 400
-    assert got == want
+    assert len(got) == len(set(got))
+    assert sorted(got) == want
