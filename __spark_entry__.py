@@ -2672,8 +2672,8 @@ def q_dtw_events(spark, sf_dir):
     trajectories as frechet_events: pairs with DTW cost (sum of squared
     coupled step distances over the best monotone warp, Sakoe & Chiba
     1978) <= 1e13, WITH the exact cost. Engine: shared lossless
-    candidate prune (tau = isqrt(C)) + pure-codegen nested-fold DP
-    (dtw_expr) — zero Python; oracle: the identical DP as a recursive
+    candidate prune (tau = isqrt(C)) + batch-vectorized NumPy DP over
+    Arrow batches (mapInPandas); oracle: the identical DP as a recursive
     CTE over DP rows with the inner column scan as a list reduce. All
     arithmetic int64 → bit-exact."""
     from osmflat_rs_spark.operators.trajectory import dtw_join
@@ -2706,8 +2706,8 @@ def q_lcss_events(spark, sf_dir):
     Vlachos ICDE 2002) trajectory-similarity join on the same 32 patch
     trajectories as dtw_events: pairs with >= 2 matched points at eps =
     120k fixed-point units, WITH the exact match count. Engine: lossless
-    any-match cell prune + pure-codegen nested-fold DP (lcss_expr) —
-    zero Python; oracle: the identical integer DP as a recursive CTE
+    any-match cell prune + batch-vectorized NumPy DP over Arrow batches
+    (mapInPandas); oracle: the identical integer DP as a recursive CTE
     (list reduce per DP row). All arithmetic int64 → bit-exact."""
     from osmflat_rs_spark.operators.trajectory import lcss_join
 
@@ -2723,7 +2723,8 @@ def q_edr_events(spark, sf_dir):
     28 at the same eps = 120k, WITH the exact distance. Includes the
     zero-match escape leg (EDR of a matchless pair = max(n, m) — pairs
     of short-enough trajectories qualify with no shared cell). Engine:
-    codegen nested-fold DP; oracle: identical DP as a recursive CTE."""
+    batch-vectorized NumPy DP over Arrow batches (mapInPandas); oracle:
+    identical DP as a recursive CTE."""
     from osmflat_rs_spark.operators.trajectory import edr_join
 
     pts = _q_traj32(spark, sf_dir)

@@ -63,18 +63,13 @@ def _check_probe(probe) -> None:
             f"every doc needs a header span 'node|way|relation <osm_id>'"
         )
     if problems:
-        # NB: strict_kinds=False only skips THIS validation; docs
-        # without a usable header still fail later (the dense-index
-        # assignment rejects NULL group keys), just with a less
-        # specific error. Unknown span kinds are silently dropped.
-        raise ValueError(
-            "ingest: " + "; ".join(problems) + " — fix the input "
-            "(strict_kinds=False skips this check, but headerless docs "
-            "still fail in dense-index assignment)"
-        )
+        # NB: headerless docs also trip the dense-index assignment (it
+        # rejects NULL group keys); ingest raises THIS error in that case
+        # because it names the offending docs' problem precisely.
+        raise ValueError("ingest: " + "; ".join(problems) + " — fix the input")
 
 # the six span kinds the carrier tables can represent; ingest REJECTS
-# anything else (strict_kinds) — an unrecognized kind has no entity-table
+# anything else (_check_probe) — an unrecognized kind has no entity-table
 # home, so silently passing it would break the lossless-roundtrip
 # invariant without any diagnostic
 SPAN_KINDS = ("header", "coord", "tag", "ref", "member", "media")
@@ -210,8 +205,6 @@ def ingest(
     docs: DataFrame,
     compute_metrics: bool = True,
     with_dims: bool = True,
-    audit: bool = True,
-    strict_kinds: bool = True,
 ) -> dict[str, DataFrame]:
     from osmflat_rs_spark.plans.indexing import audit_dense_index
 
@@ -222,39 +215,38 @@ def ingest(
     # rest of ingest spends on the driver. Their exceptions surface at
     # ingest's return (or, for the probe, as soon as the dense-index
     # assignment fails on the same malformed input — precedence kept).
-    probe_fut = audit_fut = None
-    if strict_kinds:
-        # ONE validation job, ONE scan (ADVICE r03: the old form ran two
-        # eager collect() jobs, each re-scanning the raw docs — one of
-        # them exploding every span — inside every ingest call, including
-        # the bench's timed window): an unknown span kind, a doc without
-        # a header span, or an unknown entity type has nowhere to live in
-        # the entity tables, so the lossless roundtrip would break
-        # SILENTLY (span_layout's elem_pos join covers SPAN_KINDS only;
-        # entity staging filters on node/way/relation). Per-row in-row
-        # extraction (no explode), problem rows filtered BEFORE the
-        # aggregate so the collected state is empty on clean inputs.
-        bad_type_cond = F.col("entity_type").isNull() | ~F.col("entity_type").isin(
-            "node", "way", "relation"
+    #
+    # ONE validation job, ONE scan (ADVICE r03: the old form ran two
+    # eager collect() jobs, each re-scanning the raw docs — one of
+    # them exploding every span — inside every ingest call, including
+    # the bench's timed window): an unknown span kind, a doc without
+    # a header span, or an unknown entity type has nowhere to live in
+    # the entity tables, so the lossless roundtrip would break
+    # SILENTLY (span_layout's elem_pos join covers SPAN_KINDS only;
+    # entity staging filters on node/way/relation). Per-row in-row
+    # extraction (no explode), problem rows filtered BEFORE the
+    # aggregate so the collected state is empty on clean inputs.
+    bad_type_cond = F.col("entity_type").isNull() | ~F.col("entity_type").isin(
+        "node", "way", "relation"
+    )
+    probe = (
+        _keyed(docs)
+        .select(
+            F.filter(
+                F.transform("spans", lambda s: F.coalesce(s["kind"], F.lit("<null kind>"))),
+                lambda k: ~k.isin(*SPAN_KINDS),
+            ).alias("bad_kinds"),
+            F.when(
+                bad_type_cond, F.coalesce(F.col("entity_type"), F.lit("<no header span>"))
+            ).alias("bad_type"),
         )
-        probe = (
-            _keyed(docs)
-            .select(
-                F.filter(
-                    F.transform("spans", lambda s: F.coalesce(s["kind"], F.lit("<null kind>"))),
-                    lambda k: ~k.isin(*SPAN_KINDS),
-                ).alias("bad_kinds"),
-                F.when(
-                    bad_type_cond, F.coalesce(F.col("entity_type"), F.lit("<no header span>"))
-                ).alias("bad_type"),
-            )
-            .filter((F.size("bad_kinds") > 0) | F.col("bad_type").isNotNull())
-            .agg(
-                F.array_distinct(F.flatten(F.collect_list("bad_kinds"))).alias("kinds"),
-                F.collect_set("bad_type").alias("types"),
-            )
+        .filter((F.size("bad_kinds") > 0) | F.col("bad_type").isNotNull())
+        .agg(
+            F.array_distinct(F.flatten(F.collect_list("bad_kinds"))).alias("kinds"),
+            F.collect_set("bad_type").alias("types"),
         )
-        probe_fut = _ASYNC_POOL.submit(lambda df=probe: df.collect()[0])
+    )
+    probe_fut = _ASYNC_POOL.submit(lambda df=probe: df.collect()[0])
 
     # ONE range shuffle assigns all three per-type dense indices (grouped
     # two-pass scheme) — vs. one shuffle+checkpoint per entity type. The
@@ -269,16 +261,14 @@ def ingest(
     except Exception:
         # same malformed input (headerless doc → NULL group) trips both
         # the probe and the assigner; surface the probe's specific error
-        if probe_fut is not None:
-            _check_probe(probe_fut.result())
+        _check_probe(probe_fut.result())
         raise
-    if audit:
-        # one vectorized no-shuffle pass over the checkpointed layout: the
-        # eidx must tile 0..n_g-1 per entity type in storage order —
-        # guards the local-counter/stage-fusion invariant (indexing.py)
-        audit_fut = _ASYNC_POOL.submit(
-            audit_dense_index, indexed, "eidx", group_col="entity_type"
-        )
+    # one vectorized no-shuffle pass over the checkpointed layout: the
+    # eidx must tile 0..n_g-1 per entity type in storage order —
+    # guards the local-counter/stage-fusion invariant (indexing.py)
+    audit_fut = _ASYNC_POOL.submit(
+        audit_dense_index, indexed, "eidx", group_col="entity_type"
+    )
     assembled = _assemble_keyed(indexed, carrier=False)
     carrier = _assemble_keyed(indexed)  # lazy: only computed if media/layout read
 
@@ -469,10 +459,8 @@ def ingest(
     else:
         metrics = None
 
-    if probe_fut is not None:
-        _check_probe(probe_fut.result())
-    if audit_fut is not None:
-        audit_fut.result()
+    _check_probe(probe_fut.result())
+    audit_fut.result()
 
     return {
         "_cached": [refs_resolved, members_resolved],

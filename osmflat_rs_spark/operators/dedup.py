@@ -910,159 +910,79 @@ def hamming_neardup_pairs(
     (``simhash``), image dHash/pHash (``multimodal.dhash_images``) —
     any per-row bit signature.
 
-    Scale shape — MULTI-INDEX banding (the pigeonhole construction,
-    e.g. Manku et al. WWW'07 simhash dedup): split the word into
-    ``max_hamming + 1`` bit-bands; distance ≤ k can corrupt at most k
-    bands, so qualifying pairs match EXACTLY on ≥ 1 band — candidates
-    come from one equi-join on (band_idx, band_value), LOSSLESS, never
-    all-pairs. Exactly-once with NO dedup shuffle: a pair is owned by
-    its FIRST matching band (the join row survives only if every lower
-    band differs — pure column predicates over the carried hashes),
-    and orientation by ``id_a < id_b``. Verification is one
-    ``bit_count(a XOR b)`` per surviving candidate — JVM codegen,
-    reproducible in SQL (the gate's DuckDB oracle).
+    Scale shape — Manku et al.'s (WWW'07 simhash dedup) block-combination
+    multi-index: split the word into B = ``n_blocks`` bit-blocks (the
+    last absorbs the remainder); distance ≤ k corrupts at most k blocks,
+    so for every qualifying pair some (B−k)-combination of blocks is
+    fully intact. Key every combination — C(B, k) tables, each keyed on
+    the hash masked to that combination's bits — and candidates come
+    from ONE equi-join on (combination, key): LOSSLESS, never all-pairs.
+    The default B = k+1 makes each combination a single block (classic
+    pigeonhole banding). Exactly-once with NO dedup shuffle: a pair is
+    owned by its FIRST intact combination — the join row on combination
+    c survives only if ``(a XOR b) & M_c' != 0`` for every c' < c, M_c'
+    being that combination's bit mask — and orientation by ``id_a <
+    id_b``. Verification is one ``bit_count(a XOR b)`` per surviving
+    candidate — JVM codegen, reproducible in SQL (the gate's DuckDB
+    oracle). Masks are plain int64 bit patterns, so 64-bit hashes with
+    the sign bit set key correctly and no key can overflow.
 
-    Band extraction uses LOGICAL shifts, so 64-bit hashes with the
-    sign bit set band correctly. Per-band-value candidate density is
-    the skew surface (a zero-image dHash cluster is the classic hot
-    value) — AQE skew split plus the verify's cheapness bound it; the
-    within-cluster quadratic is genuine duplication, the thing being
-    found.
+    **Corpus-size regime — pick B.** k+1 banding keys on bits/(k+1)-wide
+    values (16 bits at 64/k=3), so ACCIDENTAL candidate density grows
+    ~n²·(k+1)/2^(bits/(k+1)) — fine to ~10^5 rows, a birthday blowup at
+    10^7 (measured: 4M random hashes did not finish where B=6 takes
+    seconds). A larger B trades table fan-out (C(B,k)× explode) for key
+    width bits·(B−k)/B: B=6, k=3 → 20 tables × ~32-bit keys → density
+    n²·20/2^32. The right B depends on the corpus size, which the join
+    cannot know without an extra job, so the caller sets it.
 
-    **Corpus-size regime — pick the scheme.** Simple k+1 banding keys
-    on bits/(k+1)-wide values (16 bits at 64/k=3), so ACCIDENTAL
-    candidate density grows ~n²·(k+1)/2^(bits/(k+1)) — fine to ~10^5
-    rows, a birthday blowup at 10^7 (measured: 4M random hashes did
-    not finish where the block scheme takes seconds). ``n_blocks=B``
-    switches to Manku et al.'s block-combination tables: split into B
-    blocks; distance ≤ k corrupts ≤ k blocks, so some C(B−k of B)
-    combination is fully intact — key on EVERY (B−k)-block
-    combination (C(B,k) tables, key width bits·(B−k)/B, e.g. B=6,k=3
-    → 20 tables × ~32-bit keys → density n²·20/2^32). The trade is
-    table fan-out (C(B,k)× explode) for key width; pairs can match
-    several tables, so this path dedups with one OUTPUT-sized
-    ``dropDuplicates`` (pairs are few; candidates were the problem).
+    Per-key candidate density is the skew surface (a zero-image dHash
+    cluster is the classic hot value) — AQE skew split plus the
+    verify's cheapness bound it; the within-cluster quadratic is
+    genuine duplication, the thing being found.
     """
-    if bits < 1 or bits > 64:
-        raise ValueError(f"bits must be in [1, 64], got {bits}")
-    if not (0 <= max_hamming < bits):
-        raise ValueError(f"max_hamming must be in [0, bits), got {max_hamming}")
-    if n_blocks is not None:
-        return _hamming_blocks(df, id_col, hash_col, bits, max_hamming, n_blocks)
-    nb = max_hamming + 1
-    w = bits // nb  # last band absorbs the remainder
-    if w < 1:
-        raise ValueError(f"bits={bits} too narrow for {nb} bands")
-
-    def band(h, j):
-        width = bits - j * w if j == nb - 1 else w
-        mask = F.lit(-1 if width >= 64 else (1 << width) - 1).cast("long")
-        return F.shiftrightunsigned(h.cast("long"), j * w).bitwiseAND(mask)
-
-    def band_of(h):
-        bv = F.when(F.col("_j") == 0, band(h, 0))
-        for j in range(1, nb):
-            bv = bv.when(F.col("_j") == j, band(h, j))
-        return bv
-
-    base = df.select(F.col(id_col).alias("_id"), F.col(hash_col).cast("long").alias("_h"))
-    js = F.explode(F.array(*[F.lit(j) for j in range(nb)]))
-    probe = (
-        base.select(F.col("_id").alias("id_a"), F.col("_h").alias("_ha"))
-        .withColumn("_j", js)
-        .withColumn("_bv", band_of(F.col("_ha")))
-    )
-    home = (
-        base.select(F.col("_id").alias("id_b"), F.col("_h").alias("_hb"))
-        .withColumn("_j", js)
-        .withColumn("_bv", band_of(F.col("_hb")))
-    )
-    joined = probe.join(home.hint("shuffle_hash"), ["_j", "_bv"]).filter(
-        F.col("id_a") < F.col("id_b")
-    )
-    # first-match ownership: every band below _j must DIFFER
-    own = F.lit(True)
-    for j in range(nb):
-        own = own & ((F.col("_j") <= j) | (band(F.col("_ha"), j) != band(F.col("_hb"), j)))
-    ham = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).cast("long")
-    return (
-        joined.filter(own)
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def _hamming_blocks(
-    df: DataFrame,
-    id_col: str,
-    hash_col: str,
-    bits: int,
-    max_hamming: int,
-    n_blocks: int,
-) -> DataFrame:
-    """Block-combination Hamming tables (``hamming_neardup_pairs``
-    docstring, the large-corpus regime): key every (B−k)-combination of
-    B bit-blocks; pigeonhole guarantees a fully-intact combination for
-    every pair within distance k. Keys pack the combination's block
-    values positionally into one int64 (width ≤ bits − k·min_block ≤
-    64), join on (table_idx, key), verify with bit_count, dedup at
-    OUTPUT size."""
     import itertools
 
+    if bits < 1 or bits > 64:
+        raise ValueError(f"bits must be in [1, 64], got {bits}")
     k = max_hamming
-    if n_blocks <= k:
-        raise ValueError(f"n_blocks must exceed max_hamming, got {n_blocks} <= {k}")
-    if n_blocks > bits:
-        raise ValueError(f"n_blocks={n_blocks} exceeds bits={bits}")
-    w = bits // n_blocks
-    widths = [w] * (n_blocks - 1) + [bits - w * (n_blocks - 1)]
-    offs = [w * j for j in range(n_blocks)]
-    combos = list(itertools.combinations(range(n_blocks), n_blocks - k))
+    if not (0 <= k < bits):
+        raise ValueError(f"max_hamming must be in [0, bits), got {k}")
+    nb = k + 1 if n_blocks is None else n_blocks
+    if nb <= k:
+        raise ValueError(f"n_blocks must exceed max_hamming, got {nb} <= {k}")
+    if nb > bits:
+        raise ValueError(f"n_blocks={nb} exceeds bits={bits}")
+    w = bits // nb
+    widths = [w] * (nb - 1) + [bits - w * (nb - 1)]
 
-    def block(h, j):
-        mask = F.lit(-1 if widths[j] >= 64 else (1 << widths[j]) - 1).cast("long")
-        return F.shiftrightunsigned(h.cast("long"), offs[j]).bitwiseAND(mask)
+    def signed(u):  # unsigned 64-bit pattern -> the int64 literal Spark holds
+        return u - (1 << 64) if u >= 1 << 63 else u
 
-    def key_for(h, combo):
-        # positional pack: block values side by side, LSB-first
-        kexpr = F.lit(0).cast("long")
-        shift = 0
-        for j in combo:
-            kexpr = kexpr + F.shiftleft(block(h, j), shift)
-            shift += widths[j]
-        if shift > 63:
-            raise ValueError(
-                f"combination key width {shift} exceeds 63 bits — raise n_blocks"
-            )
-        return kexpr
-
-    def key_of(h):
-        kv = F.when(F.col("_c") == 0, key_for(h, combos[0]))
-        for ci in range(1, len(combos)):
-            kv = kv.when(F.col("_c") == ci, key_for(h, combos[ci]))
-        return kv
-
+    masks = [
+        F.lit(signed(sum(((1 << widths[j]) - 1) << (w * j) for j in combo))).cast("long")
+        for combo in itertools.combinations(range(nb), nb - k)
+    ]
     base = df.select(F.col(id_col).alias("_id"), F.col(hash_col).cast("long").alias("_h"))
-    cs = F.explode(F.array(*[F.lit(c) for c in range(len(combos))]))
-    probe = (
-        base.select(F.col("_id").alias("id_a"), F.col("_h").alias("_ha"))
-        .withColumn("_c", cs)
-        .withColumn("_kv", key_of(F.col("_ha")))
-    )
-    home = (
-        base.select(F.col("_id").alias("id_b"), F.col("_h").alias("_hb"))
-        .withColumn("_c", cs)
-        .withColumn("_kv", key_of(F.col("_hb")))
-    )
-    ham = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).cast("long")
+    tables = F.posexplode(F.array(*masks)).alias("_c", "_m")
+
+    def side(id_alias, h_alias):
+        return base.select(
+            F.col("_id").alias(id_alias), F.col("_h").alias(h_alias), tables
+        ).select(id_alias, h_alias, "_c", F.col(h_alias).bitwiseAND(F.col("_m")).alias("_kv"))
+
+    x = F.col("_ha").bitwiseXOR(F.col("_hb"))
+    # first-intact ownership: every combination below _c must differ
+    own = F.lit(True)
+    for c, m in enumerate(masks[:-1]):
+        own = own & ((F.col("_c") <= c) | (x.bitwiseAND(m) != 0))
     return (
-        probe.join(home.hint("shuffle_hash"), ["_c", "_kv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
+        side("id_a", "_ha")
+        .join(side("id_b", "_hb").hint("shuffle_hash"), ["_c", "_kv"])
+        .filter((F.col("id_a") < F.col("id_b")) & own)
+        .withColumn("hamming", F.bit_count(x).cast("long"))
+        .filter(F.col("hamming") <= k)
         .select("id_a", "id_b", "hamming")
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 

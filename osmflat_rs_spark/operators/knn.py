@@ -435,7 +435,6 @@ def isolated_points(
     metric: str = "sqeuclid",
     id_col: str = "node_idx",
     backend=None,
-    dense_prune: bool = True,
 ) -> DataFrame:
     """Distance ANTI-join: points with NO other point within
     ``radius_m`` → the input's (id, lat, lon) rows that are isolated.
@@ -444,7 +443,7 @@ def isolated_points(
 
     Two-phase, mirroring the interior/boundary split of the PIP kernel:
 
-    1. DENSE PRUNE (sqeuclid only, ``dense_prune``): at the finest res
+    1. DENSE PRUNE (sqeuclid only): at the finest res
        whose cell DIAGONAL is ≤ r, any two co-cell points are within r
        by construction — ONE cell-keyed exchange (count-over-cell
        window; no pair generation, no distance math) eliminates every
@@ -470,7 +469,7 @@ def isolated_points(
         F.col(id_col), F.col("lat").cast("long"), F.col("lon").cast("long")
     ).filter(F.col("lat").isNotNull() & F.col("lon").isNotNull())
     survivors = pts
-    if dense_prune and metric == "sqeuclid":
+    if metric == "sqeuclid":
         r2 = float(radius_m) ** 2
         inner = next(
             (

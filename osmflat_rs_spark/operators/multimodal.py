@@ -322,7 +322,8 @@ def dhash_images(media: DataFrame, fake: bool = False) -> DataFrame:
     bit 0 the top-left comparison. Robust to rescaling/recompression
     where exact digests fail — the image half of the dedup family; feed
     the hashes to ``dedup.hamming_neardup_pairs(bits=64)`` for the
-    banded near-dup join (hamming ≤ ~3 is the conventional dup bar).
+    block-combination near-dup join (hamming ≤ ~3 is the conventional
+    dup bar).
 
     Arrow-batched mapInPandas; ``fake=True`` routes the digest-seeded
     pseudo-decoder (deterministic zero-dependency path, same contract

@@ -22,7 +22,7 @@ it and Catalyst plans NO second exchange (same contract as
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -801,44 +801,6 @@ def densify_segments(
     return dense.unionByName(last)
 
 
-def dtw_expr(lats_a, lons_a, lats_b, lons_b) -> Column:
-    """EXACT int64 dynamic-time-warping cost between two in-row
-    coordinate sequences: min over monotone warping paths of the SUM of
-    squared euclidean step costs (Sakoe & Chiba 1978, the classic sum
-    form; contrast frechet_join's max form).
-
-    Pure whole-stage-codegen expression — the DP runs as a nested
-    ``F.aggregate`` fold (rows of the (n+1)x(m+1) table; the inner fold
-    carries the growing current row, so element_at(cur, -1) is the
-    left neighbor and ``prev`` the row above). No Python, no UDF, no
-    shuffle: per-pair cost is O(n*m) inside the JVM.
-
-    Int64 contract (same discipline as the other exact geo ops): with
-    fixed-point inputs, max squared step cost * (n+m) must stay below
-    the 1e16 sentinel; callers with degree-scale fixed-point coords
-    (|delta| <= ~4e6) and trajectories up to ~1e4 points are 2 orders
-    inside it. NULL coords must be filtered upstream (the join does)."""
-    INF = F.lit(10_000_000_000_000_000)
-    pa = F.arrays_zip(lats_a.alias("x"), lons_a.alias("y"))
-    pb = F.arrays_zip(lats_b.alias("x"), lons_b.alias("y"))
-    row0 = F.concat(F.array(F.lit(0).cast("long")), F.transform(lats_b, lambda _: INF))
-
-    def step(prev, p):
-        def inner(cur, q):
-            j = F.size(cur)
-            cost = (p["x"] - q["x"]) * (p["x"] - q["x"]) + (p["y"] - q["y"]) * (
-                p["y"] - q["y"]
-            )
-            best = F.least(
-                F.element_at(prev, j + 1), F.element_at(prev, j), F.element_at(cur, -1)
-            )
-            return F.concat(cur, F.array(cost + best))
-
-        return F.aggregate(pb, F.array(INF), inner)
-
-    return F.element_at(F.aggregate(pa, row0, step), F.size(lats_b) + 1)
-
-
 def dtw_join(
     points: DataFrame,
     max_cost: int,
@@ -847,11 +809,12 @@ def dtw_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     res: int | None = None,
-    refine: str = "arrow",
 ) -> DataFrame:
     """ORDERED trajectory-similarity self-join on DTW cost: unordered
-    pairs whose exact int64 DTW cost (see ``dtw_expr``) is <=
-    ``max_cost`` → (traj_a, traj_b, dtw).
+    pairs whose exact int64 dynamic-time-warping cost is <= ``max_cost``
+    → (traj_a, traj_b, dtw). DTW is the min over monotone warping paths
+    of the SUM of squared euclidean step costs (Sakoe & Chiba 1978, the
+    classic sum form; contrast frechet_join's max form).
 
     Candidates reuse ``_traj_pruned_pairs`` with tau = isqrt(max_cost),
     which is LOSSLESS for DTW: every point of each trajectory is coupled
@@ -859,15 +822,10 @@ def dtw_join(
     the DTW sum, so DTW <= C implies Hausdorff <= sqrt(C) — exactly the
     condition the shared prune was built for.
 
-    ``refine``: ``"arrow"`` (default) refines in a batch-vectorized
-    NumPy DP — DTW's weighted min forbids the LCSS/EDR scan trick, so
-    the inner j loop stays Python but every step is an O(batch) NumPy
-    op (across-pair vectorization). ``"expr"`` uses the in-JVM
-    ``dtw_expr`` fold — UDF-free, but Spark evaluates higher-order
-    lambdas INTERPRETED (boxed, ~1 ms per 40x40 pair measured), so at
-    many-candidate scale it is allocation-bound; right when Python
-    workers are unavailable or the pair count is tiny. Both paths are
-    exact int64 and return identical rows."""
+    The refine is a batch-vectorized NumPy DP over Arrow batches
+    (``_dtw_refine``): DTW's weighted min forbids the LCSS/EDR scan
+    trick, so the inner j loop stays Python, but every step is an
+    O(batch) NumPy op (across-pair vectorization)."""
     import math as _math
 
     if max_cost <= 0:
@@ -876,17 +834,6 @@ def dtw_join(
     pruned = _traj_pruned_pairs(
         points, tau, traj_col, lat_col, lon_col, res, order_col=order_col
     )
-    if refine == "expr":
-        d = dtw_expr(
-            F.col("_lats_a"), F.col("_lons_a"), F.col("_lats_b"), F.col("_lons_b")
-        )
-        return (
-            pruned.withColumn("dtw", d)
-            .filter(F.col("dtw") <= F.lit(int(max_cost)))
-            .select("traj_a", "traj_b", "dtw")
-        )
-    if refine != "arrow":
-        raise ValueError(f"refine must be 'arrow' or 'expr', got {refine!r}")
     id_dtype = dict(points.dtypes)[traj_col]
     return pruned.mapInPandas(
         _dtw_refine(int(max_cost)),
@@ -902,7 +849,14 @@ def _dtw_refine(max_cost: int):
     per-pair interpreter cost). Padded cells only ever propagate
     RIGHTWARD past each pair's true m, and padded rows lie below its
     true n; every pair's answer is snapshotted at (n_i, m_i), so
-    padding never leaks. Same int64 overflow contract as dtw_expr."""
+    padding never leaks.
+
+    Int64 contract (same discipline as the other exact geo ops): with
+    fixed-point inputs, max squared step cost * (n+m) must stay below
+    the 1e16 unreachable-cell sentinel; callers with degree-scale
+    fixed-point coords (|delta| <= ~4e6) and trajectories up to ~1e4
+    points are 2 orders inside it. NULL coords must be filtered
+    upstream (the join does)."""
     import numpy as np
     import pandas as pd
 
@@ -927,7 +881,7 @@ def _dtw_refine(max_cost: int):
                 A_lon[p, : n[p]] = lo[p]
                 B_lat[p, : m[p]] = lb[p]
                 B_lon[p, : m[p]] = lob[p]
-            INF = np.int64(10_000_000_000_000_000)  # dtw_expr's sentinel
+            INF = np.int64(10_000_000_000_000_000)  # unreachable-cell sentinel
             res = np.zeros(P, dtype=np.int64)
             prev = np.full((P, maxm + 1), INF, dtype=np.int64)
             prev[:, 0] = 0
@@ -1041,75 +995,6 @@ def _traj_match_pairs(
     return cand.join(a_side, "traj_a").join(b_side, "traj_b")
 
 
-def lcss_expr(lats_a, lons_a, lats_b, lons_b, eps: int) -> Column:
-    """EXACT longest-common-subsequence similarity between two in-row
-    coordinate sequences (Vlachos, Kollios & Gunopulos, ICDE 2002): the
-    length of the longest monotone pairing in which every matched pair
-    lies within euclidean ``eps`` (squared-int comparison — no sqrt).
-    The classic LCSS recurrence: match -> diag + 1, else
-    max(up, left).
-
-    Same pure whole-stage-codegen nested-fold shape as ``dtw_expr`` —
-    the inner fold builds DP row i with ``element_at(cur, -1)`` as the
-    left neighbor and ``prev`` as row i-1. No Python, no UDF, no
-    shuffle; O(n*m) int64 per pair inside the JVM. The ICDE-2002
-    temporal window delta is NOT constrained (pre-trim sequences if
-    needed)."""
-    e2 = F.lit(int(eps) * int(eps))
-    zero = F.lit(0).cast("long")
-    pa = F.arrays_zip(lats_a.alias("x"), lons_a.alias("y"))
-    pb = F.arrays_zip(lats_b.alias("x"), lons_b.alias("y"))
-    row0 = F.concat(F.array(zero), F.transform(lats_b, lambda _: zero))
-
-    def step(prev, p):
-        def inner(cur, q):
-            j = F.size(cur)
-            d2 = (p["x"] - q["x"]) * (p["x"] - q["x"]) + (p["y"] - q["y"]) * (
-                p["y"] - q["y"]
-            )
-            val = F.when(d2 <= e2, F.element_at(prev, j) + F.lit(1)).otherwise(
-                F.greatest(F.element_at(prev, j + 1), F.element_at(cur, -1))
-            )
-            return F.concat(cur, F.array(val))
-
-        return F.aggregate(pb, F.array(zero), inner)
-
-    return F.element_at(F.aggregate(pa, row0, step), F.size(lats_b) + 1)
-
-
-def edr_expr(lats_a, lons_a, lats_b, lons_b, eps: int) -> Column:
-    """EXACT Edit Distance on Real sequence (Chen, Özsu & Oria, SIGMOD
-    2005): edit distance where two points "agree" when within euclidean
-    ``eps`` (subcost 0) and disagree otherwise (subcost 1), insert/
-    delete cost 1. Robust to noise like LCSS but metric-like (respects
-    gaps). Same codegen nested-fold DP as ``dtw_expr``/``lcss_expr``;
-    row 0 is [0..m] and row i starts at i (= prev[1] + 1 — no explicit
-    index needed inside the fold)."""
-    e2 = F.lit(int(eps) * int(eps))
-    one = F.lit(1).cast("long")
-    pa = F.arrays_zip(lats_a.alias("x"), lons_a.alias("y"))
-    pb = F.arrays_zip(lats_b.alias("x"), lons_b.alias("y"))
-    row0 = F.sequence(F.lit(0).cast("long"), F.size(lats_b).cast("long"))
-
-    def step(prev, p):
-        def inner(cur, q):
-            j = F.size(cur)
-            d2 = (p["x"] - q["x"]) * (p["x"] - q["x"]) + (p["y"] - q["y"]) * (
-                p["y"] - q["y"]
-            )
-            sub = F.when(d2 <= e2, F.lit(0)).otherwise(F.lit(1)).cast("long")
-            val = F.least(
-                F.element_at(prev, j) + sub,
-                F.element_at(prev, j + 1) + one,
-                F.element_at(cur, -1) + one,
-            )
-            return F.concat(cur, F.array(val))
-
-        return F.aggregate(pb, F.array(F.element_at(prev, 1) + one), inner)
-
-    return F.element_at(F.aggregate(pa, row0, step), F.size(lats_b) + 1)
-
-
 def lcss_join(
     points: DataFrame,
     eps: int,
@@ -1119,37 +1004,26 @@ def lcss_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     res: int | None = None,
-    refine: str = "arrow",
 ) -> DataFrame:
     """ORDERED trajectory-similarity self-join on LCSS: unordered pairs
-    whose exact LCSS match count (see ``lcss_expr``) is >=
-    ``min_matches`` → (traj_a, traj_b, lcss). Candidates are the
-    any-match cell prune (`_traj_match_pairs`) — lossless for
-    ``min_matches`` >= 1 because LCSS >= 1 requires at least one point
-    pair within eps. Normalize to a similarity in [0, 1] downstream with
-    lcss / least(n, m) if needed.
+    whose exact longest-common-subsequence match count is >=
+    ``min_matches`` → (traj_a, traj_b, lcss). LCSS (Vlachos, Kollios &
+    Gunopulos, ICDE 2002) is the length of the longest monotone pairing
+    in which every matched pair lies within euclidean ``eps``
+    (squared-int comparison — no sqrt); the recurrence is match ->
+    diag + 1, else max(up, left). The ICDE-2002 temporal window delta
+    is NOT constrained (pre-trim sequences if needed).
 
-    ``refine``: ``"arrow"`` (default — the scale path: batch-vectorized
-    NumPy DP, measured ~20x the fold at 50k trajectories) or ``"expr"``
-    (the in-JVM ``lcss_expr`` fold — no Python workers, right when the
-    pair count is small or Python workers are unavailable). Both are
-    exact int64 and return identical rows."""
+    Candidates are the any-match cell prune (`_traj_match_pairs`) —
+    lossless for ``min_matches`` >= 1 because LCSS >= 1 requires at
+    least one point pair within eps. The refine is the batch-vectorized
+    NumPy DP (``_lcss_edr_refine``). Normalize to a similarity in
+    [0, 1] downstream with lcss / least(n, m) if needed."""
     if min_matches < 1:
         raise ValueError(f"min_matches must be >= 1, got {min_matches}")
     cand = _traj_match_pairs(
         points, eps, traj_col, lat_col, lon_col, res, order_col
     )
-    if refine == "expr":
-        l = lcss_expr(
-            F.col("_lats_a"), F.col("_lons_a"), F.col("_lats_b"), F.col("_lons_b"), eps
-        )
-        return (
-            cand.withColumn("lcss", l)
-            .filter(F.col("lcss") >= F.lit(int(min_matches)))
-            .select("traj_a", "traj_b", "lcss")
-        )
-    if refine != "arrow":
-        raise ValueError(f"refine must be 'arrow' or 'expr', got {refine!r}")
     id_dtype = dict(points.dtypes)[traj_col]
     return cand.mapInPandas(
         _lcss_edr_refine("lcss", int(eps), int(min_matches)),
@@ -1166,35 +1040,27 @@ def edr_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     res: int | None = None,
-    refine: str = "arrow",
 ) -> DataFrame:
     """ORDERED trajectory-similarity self-join on EDR: unordered pairs
-    with exact edit distance (see ``edr_expr``) <= ``max_dist`` →
-    (traj_a, traj_b, edr). Candidates: the any-match cell prune PLUS the
-    zero-match escape — a no-match pair costs exactly max(n, m), so
-    pairs of trajectories both <= ``max_dist`` points long qualify with
-    no shared cell and are unioned in (`_traj_match_pairs
-    include_short_leq`). Lossless for any threshold.
+    with exact edit distance <= ``max_dist`` → (traj_a, traj_b, edr).
+    EDR (Edit Distance on Real sequence; Chen, Özsu & Oria, SIGMOD 2005)
+    is edit distance where two points "agree" when within euclidean
+    ``eps`` (subcost 0) and disagree otherwise (subcost 1), insert/
+    delete cost 1 — robust to noise like LCSS but metric-like (respects
+    gaps).
 
-    ``refine``: ``"arrow"`` (default, batch-vectorized NumPy DP — the
-    scale path) or ``"expr"`` (in-JVM fold); identical exact rows."""
+    Candidates: the any-match cell prune PLUS the zero-match escape — a
+    no-match pair costs exactly max(n, m), so pairs of trajectories both
+    <= ``max_dist`` points long qualify with no shared cell and are
+    unioned in (`_traj_match_pairs include_short_leq`). Lossless for any
+    threshold. The refine is the batch-vectorized NumPy DP
+    (``_lcss_edr_refine``)."""
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     cand = _traj_match_pairs(
         points, eps, traj_col, lat_col, lon_col, res, order_col,
         include_short_leq=int(max_dist),
     )
-    if refine == "expr":
-        d = edr_expr(
-            F.col("_lats_a"), F.col("_lons_a"), F.col("_lats_b"), F.col("_lons_b"), eps
-        )
-        return (
-            cand.withColumn("edr", d)
-            .filter(F.col("edr") <= F.lit(int(max_dist)))
-            .select("traj_a", "traj_b", "edr")
-        )
-    if refine != "arrow":
-        raise ValueError(f"refine must be 'arrow' or 'expr', got {refine!r}")
     id_dtype = dict(points.dtypes)[traj_col]
     return cand.mapInPandas(
         _lcss_edr_refine("edr", int(eps), int(max_dist)),
@@ -1219,8 +1085,7 @@ def _lcss_edr_refine(kind: str, eps: int, threshold: int):
       running-min(t[k] - k) — one ``np.minimum.accumulate``.
 
     Match tests stay EXACT int64: deltas are range-checked (|d| <= eps)
-    before squaring so the squares can never overflow, matching the
-    codegen exprs bit-for-bit. Pairs with different lengths are padded
+    before squaring so the squares can never overflow. Pairs with different lengths are padded
     to the batch max; each pair's answer is snapshotted from DP row
     n_i at column m_i, so padding never leaks into results."""
     import numpy as np

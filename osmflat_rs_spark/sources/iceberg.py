@@ -268,11 +268,10 @@ def make_catalog(
     warehouse: str,
     catalog: str = "local",
     namespace: str = "osmflat",
-    prefer_iceberg: bool = True,
 ):
     """The catalog factory the engine should use: real Iceberg when the
     runtime is bound, the parquet SnapshotCatalog otherwise. Both expose
     the same method surface, so callers never branch."""
-    if prefer_iceberg and IcebergCatalog.available(spark, catalog):
+    if IcebergCatalog.available(spark, catalog):
         return IcebergCatalog(spark, warehouse, catalog=catalog, namespace=namespace)
     return SnapshotCatalog(spark, warehouse)

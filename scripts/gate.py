@@ -16,6 +16,11 @@ not. A gate without oracle SQL runs on Spark only (``rows-only``).
 One flushed JSON line per gate (name, verdict, rows, Spark sec, and on a
 row mismatch the differing-row count plus the first differing pair),
 then a summary line; the exit status is 1 when any gate failed.
+
+``sec`` times the engine alone: building the gate's plan and running it
+to Spark's ``noop`` sink (the sink perfbench and the BENCH/BASELINE.md
+A/Bs use). The rows for the compare come from a second, untimed run of
+the same plan that collects to the driver, so each gate executes twice.
 """
 
 from __future__ import annotations
@@ -99,17 +104,20 @@ def oracle_connection(sf_dir: str):
 
 
 def check_gate(spark, con, sf_dir: str, name: str, fn, sql: str | None) -> dict:
-    """Run one gate on Spark (timed) and, given ``sql``, on DuckDB; the
-    report's ``verdict`` is ``OK``, ``rows-only`` or a failure kind."""
+    """Run one gate on Spark (timed to the noop sink, then collected
+    untimed) and, given ``sql``, on DuckDB; the report's ``verdict`` is
+    ``OK``, ``rows-only`` or a failure kind."""
     out = {"name": name}
-    t0 = time.time()
     try:
+        t0 = time.time()
         sdf = fn(spark, sf_dir)
+        sdf.write.mode("overwrite").format("noop").save()
+        sec = round(time.time() - t0, 3)
         scols = sdf.columns
         srecs = sdf.collect()
     except Exception as e:  # noqa: BLE001
         return {**out, "verdict": "spark-error", "error": f"{type(e).__name__}: {str(e)[:300]}"}
-    out.update(rows=len(srecs), sec=round(time.time() - t0, 3))
+    out.update(rows=len(srecs), sec=sec)
     if sql is None:
         return {**out, "verdict": "rows-only"}
     try:

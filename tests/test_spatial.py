@@ -480,8 +480,9 @@ def test_zonal_stats_exact_and_no_rejoin(spark):
 
 
 def test_isolated_points_matches_bruteforce(spark):
-    """Mixed clustered + sparse synth vs an O(n²) NumPy oracle; the
-    phase-1 dense prune must change nothing (prune on == prune off);
+    """Mixed clustered + sparse synth vs an O(n²) NumPy oracle, through
+    the phase-1 dense prune (radius above the finest cell diagonal) and
+    without it (radius below that diagonal: no prune cell exists);
     exact-duplicate coordinates are never isolated."""
     import numpy as np
 
@@ -501,18 +502,30 @@ def test_isolated_points_matches_bruteforce(spark):
                     base_lon + int(rng.integers(0, 40_000_000))))
     pts.append(pts[-1])  # exact duplicate pair: both non-isolated
     rows = [(i, la, lo) for i, (la, lo) in enumerate(pts)]
+
+    def brute(rows, r):
+        arr = np.array([(la, lo) for _, la, lo in rows], dtype=np.float64)
+        d2 = ((arr[:, None, :] - arr[None, :, :]) ** 2).sum(axis=2)
+        np.fill_diagonal(d2, np.inf)
+        return {rows[i][0] for i in range(len(rows)) if d2[i].min() > r * r}
+
     r = 200_000
-    arr = np.array([(la, lo) for _, la, lo in rows], dtype=np.float64)
-    d2 = ((arr[:, None, :] - arr[None, :, :]) ** 2).sum(axis=2)
-    np.fill_diagonal(d2, np.inf)
-    want = {i for i in range(len(rows)) if d2[i].min() > r * r}
+    want = brute(rows, r)
     df = spark.createDataFrame(rows, "node_idx long, lat long, lon long")
     got = {r_["node_idx"] for r_ in isolated_points(df, r).collect()}
     assert got == want and 0 < len(got) < len(rows)
-    got_np = {r_["node_idx"] for r_ in
-              isolated_points(df, r, dense_prune=False).collect()}
-    assert got_np == want
     assert rows[-1][0] not in got and rows[-2][0] not in got
+
+    # radius 3 is below the finest cell diagonal (~3.75 units): the dense
+    # prune has no cell to work at and every point goes to the radius join
+    tiny = [(i, base_lat + int(rng.integers(0, 40)), base_lon + int(rng.integers(0, 40)))
+            for i in range(80)]
+    tiny.append((80, tiny[-1][1], tiny[-1][2]))  # exact duplicate again
+    want_tiny = brute(tiny, 3)
+    got_tiny = {r_["node_idx"] for r_ in isolated_points(
+        spark.createDataFrame(tiny, "node_idx long, lat long, lon long"), 3).collect()}
+    assert got_tiny == want_tiny and 0 < len(got_tiny) < len(tiny)
+    assert 79 not in got_tiny and 80 not in got_tiny
 
 
 # ----------------------------------------------------------- service areas

@@ -1932,7 +1932,7 @@ def test_dhash_images_model_and_robustness(spark):
     assert not any("other" in p for p in pairs)
 
 
-def test_hamming_blocks_scheme_matches_bands_and_brute(spark):
+def test_hamming_n_blocks_match_default_and_brute(spark):
     import numpy as np
     import pytest as _pytest
 
@@ -1948,24 +1948,42 @@ def test_hamming_blocks_scheme_matches_bands_and_brute(spark):
             for b in rng.choice(64, size=nf, replace=False):
                 u ^= 1 << int(b)
             rows.append((rid, u - (1 << 64) if u >= 1 << 63 else u)); rid += 1
+    rows += [(rid + i, h) for i, (_, h) in enumerate(rows[:15:5])]  # exact dups
+    assert any(h < 0 for _, h in rows[-3:])  # incl. a sign-bit-set hash
     df = spark.createDataFrame(rows, "doc_id long, h long")
-    for k in (1, 3):
+    for k in (0, 1, 3):
         want = {
             (a, b): bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
             for (a, ha) in rows for (b, hb) in rows
             if a < b and bin((ha ^ hb) & ((1 << 64) - 1)).count("1") <= k
         }
+        assert want
         bands = {(r["id_a"], r["id_b"]): r["hamming"]
                  for r in hamming_neardup_pairs(df, "doc_id", "h", bits=64, max_hamming=k).collect()}
-        for nb in (k + 2, 6, 8):
+        assert bands == want, f"k={k} default"
+        # k=0 with B=1: one combination keyed on the full 64-bit hash
+        for nb in (k + 1, k + 2, 6, 8):
             blocks = {(r["id_a"], r["id_b"]): r["hamming"]
                       for r in hamming_neardup_pairs(
                           df, "doc_id", "h", bits=64, max_hamming=k, n_blocks=nb).collect()}
-            assert blocks == want == bands, f"k={k} nb={nb}"
+            assert blocks == want, f"k={k} nb={nb}"
     with _pytest.raises(ValueError):
         hamming_neardup_pairs(df, "doc_id", "h", bits=64, max_hamming=3, n_blocks=3)
     with _pytest.raises(ValueError):
         hamming_neardup_pairs(df, "doc_id", "h", bits=64, max_hamming=3, n_blocks=65)
+
+
+def test_hamming_block_join_plans_no_dedup_aggregate(spark):
+    """Several (B−k)-combinations can be intact for one pair; ownership
+    by the first intact one emits it once, so the block-combination plan
+    needs no dedup aggregate (no dropDuplicates / HashAggregate)."""
+    from osmflat_rs_spark.operators.dedup import hamming_neardup_pairs
+
+    df = spark.createDataFrame([(i, i * 7919) for i in range(50)], "doc_id long, h long")
+    out = hamming_neardup_pairs(df, "doc_id", "h", bits=64, max_hamming=3, n_blocks=6)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" not in plan, plan[:3000]
+    assert "Join" in plan, plan[:3000]
 
 
 def test_edit_distance_qgram_boundary_regime(spark):

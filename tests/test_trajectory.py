@@ -926,10 +926,11 @@ def test_lcss_edr_identity_properties(spark):
     assert ed[(0, 1)] == 0 and ed[(0, 2)] == 1
 
 
-def test_lcss_edr_arrow_and_expr_refines_identical(spark):
-    """The batch-vectorized Arrow DP and the in-JVM fold must return
-    IDENTICAL rows (both exact int64) — including ragged lengths,
-    negative coordinates, and the EDR short-pair escape leg."""
+def test_lcss_edr_dtw_refines_match_scalar_dp_oracles(spark):
+    """The batch-vectorized Arrow DPs against the scalar DP oracles over
+    EVERY pair — ragged lengths (padding must never leak), negative
+    coordinates, and the EDR short-pair escape leg: each join returns
+    exactly the pairs the oracle admits, with the oracle's value."""
     import pandas as pd
 
     from osmflat_rs_spark.operators.trajectory import dtw_join, edr_join, lcss_join
@@ -950,25 +951,34 @@ def test_lcss_edr_arrow_and_expr_refines_identical(spark):
                 }
             )
         )
-    df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
-    for join, kw, col in (
-        (lcss_join, {"min_matches": 1}, "lcss"),
-        (edr_join, {"max_dist": 20}, "edr"),
-        (dtw_join, {}, "dtw"),
+    pdf = pd.concat(frames, ignore_index=True)
+    df = spark.createDataFrame(pdf)
+    groups = {
+        int(t): (g["lat"].to_numpy(np.int64), g["lon"].to_numpy(np.int64))
+        for t, g in pdf.sort_values("seq").groupby("traj_id")
+    }
+    ids = sorted(groups)
+    got = {}
+    for join, kw, col, oracle, keep in (
+        (lcss_join, {"min_matches": 1}, "lcss",
+         lambda a, b: _lcss_dp(*a, *b, 50_000), lambda v: v >= 1),
+        (edr_join, {"max_dist": 20}, "edr",
+         lambda a, b: _edr_dp(*a, *b, 50_000), lambda v: v <= 20),
+        (dtw_join, {}, "dtw", lambda a, b: _dtw_dp(*a, *b), lambda v: v <= 10**13),
     ):
         thr = 10**13 if col == "dtw" else 50_000
-        a = {
+        every = {
+            (a, b): oracle(groups[a], groups[b])
+            for ii, a in enumerate(ids) for b in ids[ii + 1 :]
+        }
+        want = {p: v for p, v in every.items() if keep(v)}
+        got[col] = {
             (r["traj_a"], r["traj_b"]): r[col]
             for r in join(
-                df, thr, traj_col="traj_id", order_col="seq",
-                refine="arrow", **kw,
+                df, thr, traj_col="traj_id", order_col="seq", **kw,
             ).collect()
         }
-        e = {
-            (r["traj_a"], r["traj_b"]): r[col]
-            for r in join(
-                df, thr, traj_col="traj_id", order_col="seq",
-                refine="expr", **kw,
-            ).collect()
-        }
-        assert a == e and a
+        assert got[col] == want and 0 < len(want) < len(every), (
+            col, set(got[col]) ^ set(want))
+    # the EDR escape leg is exercised: admitted pairs that match nothing
+    assert set(got["edr"]) - set(got["lcss"])
