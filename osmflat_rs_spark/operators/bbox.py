@@ -78,26 +78,21 @@ def bbox_join(
     right_id: str = "r_id",
     left_cols: tuple[str, str, str, str] = ("x_min", "y_min", "x_max", "y_max"),
     right_cols: tuple[str, str, str, str] = ("x_min", "y_min", "x_max", "y_max"),
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """All intersecting (left, right) box pairs →
     (<left_id>, <right_id>, ix_min, iy_min, ix_max, iy_max) where i*
     is the exact integer intersection box. Exactly-once by min-corner
     cell ownership (module docstring); closed boxes, touching counts.
 
-    ``broadcast_right=True`` pins a broadcast of the right cover when
-    the right side is a small reference set (then the left table never
-    shuffles — the stream-static-compatible shape); otherwise the join
-    is a shuffle-hash on the cell key (both sides size-opaque after the
-    explode, same rationale as ``coloc_pairs``).
+    The join is a shuffle-hash on the cell key (both sides size-opaque
+    after the explode, same rationale as ``coloc_pairs``).
     """
     if cell_size <= 0:
         raise ValueError(f"cell_size must be positive, got {cell_size}")
     if left_id == right_id:
         raise ValueError(f"left_id and right_id must differ, both are {left_id!r}")
     lc = _covered(_boxes(left, left_id, left_cols, "l"), "l", cell_size)
-    rc = _covered(_boxes(right, right_id, right_cols, "r"), "r", cell_size)
-    rc = F.broadcast(rc) if broadcast_right else rc.hint("shuffle_hash")
+    rc = _covered(_boxes(right, right_id, right_cols, "r"), "r", cell_size).hint("shuffle_hash")
     ox0 = F.greatest("lx0", "rx0")
     oy0 = F.greatest("ly0", "ry0")
     ox1 = F.least("lx1", "rx1")

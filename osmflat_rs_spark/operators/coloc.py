@@ -177,15 +177,14 @@ def coloc_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     res: int | None = None,
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """Two-table co-location: every (left, right) pair within the
     spacetime bounds -> (<left_id>, <right_id>, d2, dt_us). Same exact
     superset construction as ``coloc_pairs``; the LEFT side carries the
     27x explode, so put the bigger (or streaming) table on the left and
-    the reference set on the right (``broadcast_right=True`` pins the
-    broadcast when the reference is small — then the left table never
-    shuffles at all, the streaming-compatible shape)."""
+    the reference set on the right. The right side always broadcasts,
+    so the left table never shuffles at all — the streaming-compatible
+    shape."""
     if window_us <= 0:
         raise ValueError(f"window_us must be positive, got {window_us}")
     if left_id == right_id:
@@ -193,14 +192,8 @@ def coloc_join(
     r = res if res is not None else pick_coloc_res(int(radius))
     lk = _exploded(_keyed(left, left_id, t_col, lat_col, lon_col, r, window_us), left_id, "a")
     rk = _plain(_keyed(right, right_id, t_col, lat_col, lon_col, r, window_us), right_id, "b")
-    if broadcast_right:
-        rk = F.broadcast(rk)
-    else:
-        # Caller declined the broadcast => treat the right table as big;
-        # don't let a blind size estimate re-pick broadcast (see
-        # coloc_pairs). Build side = right, the non-exploded table.
-        rk = rk.hint("shuffle_hash")
-    return _exact(lk.join(rk, ["_jx", "_jy", "_jb"]), left_id, right_id, radius, window_us)
+    j = lk.join(F.broadcast(rk), ["_jx", "_jy", "_jb"])
+    return _exact(j, left_id, right_id, radius, window_us)
 
 
 def knox_statistic(

@@ -311,7 +311,7 @@ def minhash_dedup(
 
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, bucket_col: str, threshold: float = 0.6,
-    salt: int | None = None, method: str = "allpairs",
+    method: str = "allpairs",
 ) -> DataFrame:
     """Exact word-set jaccard ≥ threshold WITHIN a bucket column (e.g.
     source/domain). Two LOSSLESS candidate-generation methods, identical
@@ -331,10 +331,9 @@ def ngram_jaccard_pairs(
       right trade once buckets grow past ~10^4 docs.
     - ``method="allpairs"`` (default for small buckets): per-bucket
       pair enumeration with the length-ratio prune; zero word-level
-      shuffles. The per-bucket O(n²) is the declared bound.
-
-    ``salt`` applies to allpairs only (the prefix join key already
-    spreads by token; AQE skew-split covers hot tokens).
+      shuffles. The per-bucket O(n²) is the declared bound; for a
+      bucket whose n² is itself intractable use the prefix method or
+      MinHash-LSH.
 
     Length-ratio prefilter (lossless): jaccard(A,B) ≥ t ⟹ |A∩B| ≥
     t·|A∪B| with |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), so
@@ -344,24 +343,13 @@ def ngram_jaccard_pairs(
     pair enumeration and the word-level intersection join — the hot-bucket
     quadratic only materializes length-compatible pairs.
 
-    ``salt=S`` (VERDICT r02 #9): deterministic triangle salting for hot
-    buckets, the same scheme as ``embedding_cosine_pairs`` — the b-side
-    keeps its hash chunk ``pmod(xxhash64(id_b), S)``, the a-side
-    replicates ×S, so one hot bucket's quadratic pair enumeration spreads
-    over S tasks. Output identical (each (a,b) meets exactly once, in b's
-    chunk); the a-side replication is the price. The per-bucket work is
-    spread, not reduced — for corpora where a single bucket's n² is
-    itself intractable, route through MinHash-LSH instead.
-
     Shape (r3): the pair join carries the word-set ARRAYS in-row and the
     intersection is ``size(array_intersect(wa, wb))`` — the old
     word-exploded self-join (a per-(bucket, word) shuffle of the whole
-    corpus) is gone; the only shuffle left is the salted pair join."""
+    corpus) is gone; the only shuffle left is the pair join."""
     if method not in ("allpairs", "prefix"):
         raise ValueError(f"method must be 'allpairs' or 'prefix', got {method!r}")
     if method == "prefix":
-        if salt:
-            raise ValueError("salt applies to method='allpairs' only")
         return _ngram_jaccard_prefix(df, id_col, text_col, bucket_col, threshold)
     base = df.select(
         F.col(id_col).alias("_id"),
@@ -376,14 +364,9 @@ def ngram_jaccard_pairs(
     b = base.select(
         F.col("_bk"), F.col("_id").alias("id_b"), F.col("n").alias("nb"), F.col("ws").alias("wb")
     )
-    keys = ["_bk"]
-    if salt and salt > 1:
-        a = a.withColumn("_ck", F.explode(F.sequence(F.lit(0).cast("int"), F.lit(salt - 1).cast("int"))))
-        b = b.withColumn("_ck", F.pmod(F.xxhash64(F.col("id_b")), F.lit(salt)).cast("int"))
-        keys = keys + ["_ck"]
     inter = F.size(F.array_intersect("wa", "wb")).cast("long")
     return (
-        a.join(b, keys)
+        a.join(b, "_bk")
         .filter((F.col("id_a") < F.col("id_b")) & ratio_ok)
         .select(
             "id_a",
@@ -517,7 +500,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
 
 def embedding_cosine_pairs(
     df: DataFrame, id_col: str, vec_col: str, bucket_col: str, threshold: float = 0.9,
-    salt: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by cosine similarity within a bucket (blocking key).
     Dot products via aggregate/zip_with HOFs — JVM-side, sequential fold
@@ -526,12 +508,10 @@ def embedding_cosine_pairs(
     Scale note: within a bucket this is exact all-pairs (O(n²) per
     bucket — that IS the operator's semantics; unlike jaccard there is no
     lossless norm-based prefilter for cosine of arbitrary-sign vectors,
-    and an SRP pre-bucket would make the result approximate). The knobs
-    for hot buckets are (a) ``salt=S``: a deterministic triangle-salted
-    join — the b-side keeps its hash chunk, the a-side replicates ×S, so
-    one hot bucket's n²/S pair work spreads over S tasks instead of one,
-    output identical; (b) pick a finer ``bucket_col``; (c) route through
-    ``ann.srp_bucketed_topk`` when approximate recall is acceptable."""
+    and an SRP pre-bucket would make the result approximate). For hot
+    buckets pick a finer ``bucket_col``, or route through
+    ``embedding_neardup_srp`` / ``ann.srp_bucketed_topk`` when
+    approximate recall is acceptable."""
     v = df.select(
         F.col(id_col).alias("_id"),
         F.col(bucket_col).alias("_bk"),
@@ -539,14 +519,8 @@ def embedding_cosine_pairs(
     ).withColumn("norm", F.sqrt(F.aggregate(F.zip_with("v", "v", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x)))
     a = v.select("_bk", F.col("_id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
     b = v.select("_bk", F.col("_id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    if salt and salt > 1:
-        a = a.withColumn("_ck", F.explode(F.sequence(F.lit(0).cast("int"), F.lit(salt - 1).cast("int"))))
-        b = b.withColumn("_ck", F.pmod(F.xxhash64(F.col("id_b")), F.lit(salt)).cast("int"))
-        keys = ["_bk", "_ck"]
-    else:
-        keys = ["_bk"]
     return (
-        a.join(b, keys)
+        a.join(b, "_bk")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "cosine",
@@ -840,7 +814,6 @@ def containment_pairs(
     text_col: str,
     bucket_col: str,
     threshold: float = 0.8,
-    salt: int | None = None,
 ) -> DataFrame:
     """Exact word-set CONTAINMENT ≥ threshold within a bucket →
     ORDERED pairs (id_a, id_b, containment) where containment =
@@ -853,7 +826,7 @@ def containment_pairs(
     Same physical shape as ``ngram_jaccard_pairs(method='allpairs')``:
     in-row distinct word sets, per-bucket pair join carrying the arrays
     (no word-level corpus shuffle), one ``array_intersect`` per
-    surviving candidate, optional triangle ``salt`` for hot buckets.
+    surviving candidate.
     LOSSLESS prune before the intersect: |A∩B| ≤ min(|A|,|B|), so
     containment ≤ min(na,nb)/na — the bound is applied with the SAME
     float division shape as the final filter, so no qualifying pair is
@@ -874,18 +847,13 @@ def containment_pairs(
     b = base.select(
         F.col("_bk"), F.col("_id").alias("id_b"), F.col("n").alias("nb"), F.col("ws").alias("wb")
     )
-    keys = ["_bk"]
-    if salt and salt > 1:
-        a = a.withColumn("_ck", F.explode(F.sequence(F.lit(0).cast("int"), F.lit(salt - 1).cast("int"))))
-        b = b.withColumn("_ck", F.pmod(F.xxhash64(F.col("id_b")), F.lit(salt)).cast("int"))
-        keys = keys + ["_ck"]
     prune_ok = (
         F.least(F.col("na"), F.col("nb")).cast("double") / F.col("na").cast("double")
         >= F.lit(threshold)
     )
     inter = F.size(F.array_intersect("wa", "wb")).cast("long")
     return (
-        a.join(b, keys)
+        a.join(b, "_bk")
         .filter((F.col("id_a") != F.col("id_b")) & prune_ok)
         .select(
             "id_a",
@@ -1087,13 +1055,12 @@ def retain_best(
     -> (id, component, score, keep): all input docs, their duplicate
     component (own id when unpaired), and the keep decision.
 
-    Scale shape: components come from the O(log n) min-label/pointer-
-    jumping CC (graph.connected_components) over the pair graph only —
-    the corpus never enters the iteration; the corpus-wide work is one
-    left join onto the (node, component) table and ONE map-side-combined
-    aggregate per component computing max(struct(score, -id)) — the
-    argmax is a 16-byte partial, never a per-group collect, and the
-    keep-mark rejoin shares the component key with the aggregate so AQE
+    Scale shape: components come from graph.connected_components over
+    the pair graph only — the corpus never enters it; the corpus-wide
+    work is one left join onto the (node, component) table and ONE
+    map-side-combined aggregate per component computing
+    max(struct(score, -id)) — the argmax is a 16-byte partial, never a
+    per-group collect, and the keep-mark rejoin shares the component key with the aggregate so AQE
     reuses the exchange. Scores compare as their column type — use an
     integer score for a bit-stable contract (float NaN sorts above all
     values in Spark but below in some engines; the oracle gate uses a
@@ -1146,10 +1113,9 @@ def cluster_safe_split(
     these cross-split duplicates).
 
     Composition, not a new kernel: components come from
-    ``graph.connected_components`` over the near-dup pair graph
-    (min-label + pointer jumping, O(log n) rounds on the PAIRED subset
-    only); unpaired docs are their own singleton cluster via LEFT JOIN
-    + COALESCE (the retain_best shape). The bucket is
+    ``graph.connected_components`` over the near-dup pair graph (the
+    PAIRED subset only); unpaired docs are their own singleton cluster
+    via LEFT JOIN + COALESCE (the retain_best shape). The bucket is
     ``md5_int60('split:' || cluster) mod 100`` — the engine's portable
     hash family, so the SQL oracle reproduces every assignment and the
     split is stable across runs, partitionings, and engines. Corpus

@@ -4,8 +4,13 @@ rest): the step every dedup pipeline needs after MinHash/SimHash/SRP
 candidate generation, and the reference has no analog for (its relations
 form a static forest resolved at build time; a dedup graph is dynamic).
 
-Algorithm: iterative MIN-LABEL PROPAGATION with a ROOT RELAY and
-POINTER JUMPING (the hash-to-min family — Rastogi et al. 2013 "Finding
+Plan: the edge count picks it. An edge list that fits one task is
+solved there by union-find; a larger one is first shrunk by
+per-partition spanning forests (exact), and only a forest that still
+does not fit falls back to the iterative algorithm below.
+
+Fallback algorithm: iterative MIN-LABEL PROPAGATION with a ROOT RELAY
+and POINTER JUMPING (the hash-to-min family — Rastogi et al. 2013 "Finding
 Connected Components in Map-Reduce"; Kiveris et al. 2014). Per round:
 (1) each node takes the minimum label over itself and its neighbors
 (one shuffle: edges ⋈ labels → groupBy-min, map-side partials);
@@ -40,13 +45,26 @@ Scale notes:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmflat_rs_spark.plans.checkpoint import fresh_local_checkpoint
 
+_log = logging.getLogger(__name__)
 
-def _partition_spanning_forest(und: DataFrame, target_edges_per_task: int = 250_000) -> DataFrame:
+# connected_components budgets: a forest-reduction task holds at most
+# _CC_REDUCE_EDGES edges (memory bound per task), the one-task solve
+# absorbs up to _CC_SOLVE_EDGES (an in-memory union-find over a
+# few-million-edge forest is seconds of one core), and the iterative
+# fallback raises after _CC_ROUNDS rounds.
+_CC_REDUCE_EDGES = 250_000
+_CC_SOLVE_EDGES = 4_000_000
+_CC_ROUNDS = 30
+
+
+def _partition_spanning_forest(und: DataFrame, num_partitions: int) -> DataFrame:
     """EXACT edge reduction for dense graphs: per partition, a
     union-find spanning forest keeps only the edges that first connect
     two nodes — every dropped edge closed a cycle WITHIN its partition,
@@ -56,12 +74,13 @@ def _partition_spanning_forest(und: DataFrame, target_edges_per_task: int = 250_
     graph with average degree d shrinks ~d/2× in one map-only pass.
 
     Scale shape: per-task memory is O(nodes in the partition) ≤ 2×
-    ``target_edges_per_task`` — bounded by construction, independent of
-    the global node count. Input may contain duplicate edges (a
-    duplicate never connects two new roots, union-find skips it), which
-    lets the caller feed RAW candidate pairs and drop its distinct
-    exchange. Partition count derives from the edge count over the
-    per-task target (data-scale, not core-count)."""
+    the edges per partition — the caller derives ``num_partitions``
+    from the edge count it already took over the per-task target
+    ``_CC_REDUCE_EDGES`` (data-scale, not core-count), so it is bounded
+    by construction, independent of the global node count. Input may
+    contain duplicate edges (a duplicate never connects two new roots,
+    union-find skips it), which lets the caller feed RAW candidate
+    pairs and drop its distinct exchange."""
     import pandas as pd
 
     def forest(it):
@@ -95,15 +114,13 @@ def _partition_spanning_forest(und: DataFrame, target_edges_per_task: int = 250_
                 keep[i] = True
         yield pd.DataFrame({"u": u[keep], "v": v[keep]})
 
-    n_edges = und.count()
-    n_red = max(1, -(-n_edges // target_edges_per_task))
-    return und.repartition(n_red).mapInPandas(forest, "u long, v long")
+    return und.repartition(num_partitions).mapInPandas(forest, "u long, v long")
 
 
 def _solve_components_one_task(red: DataFrame) -> DataFrame:
     """Single-task union-find labeling of a (reduced) edge list →
     (node, component=min node id). Caller guarantees the edge list is
-    bounded (≤ the reduction target); nodes present ≤ 2× edges."""
+    bounded (≤ ``_CC_SOLVE_EDGES``); nodes present ≤ 2× edges."""
     import pandas as pd
 
     def solve(it):
@@ -145,78 +162,67 @@ def _solve_components_one_task(red: DataFrame) -> DataFrame:
     return red.repartition(1).mapInPandas(solve, "node long, component long")
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-    pre_reduce: bool = False,
-) -> DataFrame:
+def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Components of the undirected graph → (node, component).
 
     ``component`` is the minimum node id in the node's component. Nodes
     are exactly the ids appearing in ``edges`` (isolated ids the caller
-    wants labeled can be passed as self-loops). Raises RuntimeError if
-    not converged after ``max_iter`` rounds (O(log n) suffices — the
-    guard exists so a mis-wired input fails loudly, not silently).
+    wants labeled can be passed as self-loops).
 
-    ``pre_reduce=True`` is the REDUCE-THEN-SOLVE path for graphs whose
-    NODE count fits one bounded task even when the edge count is huge
-    (the DBSCAN radius graph: 4.5M edges over 99k cores):
-    :func:`_partition_spanning_forest` rounds shrink the edges toward
-    n−1 exactly (components preserved), and once the forest fits the
-    per-task target a single union-find task emits the labels — the
-    Karloff-Suri-Vassilvitskii reduce-to-fit shape, O(1) passes
-    instead of O(log n) label-propagation rounds. (Feeding the forest
-    to label propagation instead is a TRAP, measured r6: tree diameter
-    is huge, rounds ballooned and the gate got slower.) If the forest
-    still exceeds the target after two reductions — node count too
-    large for one task — the default iterative path runs on the
-    ORIGINAL dense edge list, where propagation converges fastest.
-    Labels are identical on every path (min node id per component)."""
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    The edge count picks the plan (REDUCE-THEN-SOLVE, the
+    Karloff-Suri-Vassilvitskii reduce-to-fit shape): the edge list is
+    checkpointed and counted, and one union-find task labels it once it
+    holds at most ``_CC_SOLVE_EDGES`` edges. A larger list first goes
+    through up to two :func:`_partition_spanning_forest` rounds, which
+    shrink it toward n−1 exactly (components preserved) — O(1) passes
+    instead of O(log n) label-propagation rounds, e.g. for the DBSCAN
+    radius graph (4.5M edges over 99k cores). (Feeding the forest to
+    label propagation instead is a TRAP, measured r6: tree diameter is
+    huge, rounds ballooned and the gate got slower.) If the forest
+    still exceeds the solve budget — node count too large for one task
+    — an INFO record says so and the iterative rounds (module
+    docstring) run on the ORIGINAL dense edge list, where propagation
+    converges fastest; they raise RuntimeError if not converged after
+    ``_CC_ROUNDS`` rounds (O(log n) suffices — the guard exists so a
+    mis-wired input fails loudly, not silently). Labels are identical
+    on every path (min node id per component)."""
     # undirected, deduped edge list (both directions, self-edges dropped)
     a = edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
     both = a.unionByName(a.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if pre_reduce:
-        # two budgets: reduction tasks hold ≤ reduce_t edges (memory
-        # bound per task), the FINAL solve task absorbs up to solve_t
-        # (an in-memory union-find over a few-million-edge forest is
-        # seconds of one core — far cheaper than O(log n) propagation
-        # rounds over the dense graph). One forest round shrinks the
-        # edge list toward #partitions × (n − 1); since every partition
-        # of a dense graph touches most nodes, rounds stop shrinking
-        # once edges ≈ parts × n — if that floor is still above
-        # solve_t, n itself is too big for one task and the dense
-        # iterative path below takes over (same labels either way).
-        reduce_t, solve_t = 250_000, 4_000_000
-        red = a.filter(F.col("u") != F.col("v")).select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        ).transform(fresh_local_checkpoint, disk=True)
-        prev = None
-        for _ in range(3):
-            n = red.count()
-            if n <= solve_t:
-                solved = _solve_components_one_task(red)
-                nodes_all = both.select(F.col("u").alias("node")).distinct()
-                return (
-                    nodes_all.join(solved, "node", "left")
-                    .select(
-                        "node",
-                        F.coalesce(F.col("component"), F.col("node")).alias("component"),
-                    )
+    # One forest round shrinks the edge list toward #partitions × (n − 1);
+    # since every partition of a dense graph touches most nodes, rounds
+    # stop shrinking once edges ≈ parts × n — if that floor is still
+    # above the solve budget, n itself is too big for one task and the
+    # dense iterative path below takes over (same labels either way).
+    red = a.filter(F.col("u") != F.col("v")).select(
+        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+    ).transform(fresh_local_checkpoint, disk=True)
+    prev = None
+    for _ in range(3):
+        n = red.count()
+        if n <= _CC_SOLVE_EDGES:
+            solved = _solve_components_one_task(red)
+            nodes_all = both.select(F.col("u").alias("node")).distinct()
+            return (
+                nodes_all.join(solved, "node", "left")
+                .select(
+                    "node",
+                    F.coalesce(F.col("component"), F.col("node")).alias("component"),
                 )
-            if prev is not None and 2 * n > prev:
-                # a round that shrinks < 2× means edges ≈ parts × n
-                # already — more rounds cannot reach the solve budget,
-                # stop wasting passes (bounds the at-scale overhead of
-                # a mis-guessed pre_reduce to ~one map pass)
-                break
-            prev = n
-            red = fresh_local_checkpoint(_partition_spanning_forest(red, reduce_t))
-        # forest floor above the solve budget: node count too large
-        # for one task — iterate on the original dense edges below
+            )
+        if prev is not None and 2 * n > prev:
+            # a round that shrinks < 2× means edges ≈ parts × n already —
+            # more rounds cannot reach the solve budget, stop wasting
+            # passes (bounds the overhead on such graphs to ~one map pass)
+            break
+        prev = n
+        red = fresh_local_checkpoint(_partition_spanning_forest(red, -(-n // _CC_REDUCE_EDGES)))
+    _log.info(
+        "connected_components: spanning forest keeps %d edges, above the one-task "
+        "solve budget of %d; iterating label propagation on the full edge list",
+        n,
+        _CC_SOLVE_EDGES,
+    )
     e = both.filter(F.col("u") != F.col("v")).distinct().transform(fresh_local_checkpoint)
     # nodes come from the PRE-filter edge list so a self-loop registers
     # its node (the documented way to label isolated ids)
@@ -226,7 +232,7 @@ def connected_components(
         .select("node", F.col("node").alias("lbl"))
         .transform(fresh_local_checkpoint)
     )
-    for _ in range(max_iter):
+    for _ in range(_CC_ROUNDS):
         # 1. neighborhood minimum m_u = min(lbl over {u} ∪ N(u)) — the
         #    hash-min step (one edge⋈labels shuffle, map-side partials)
         nb = e.join(labels, e["v"] == labels["node"]).select(F.col("u").alias("node"), "lbl")
@@ -262,7 +268,7 @@ def connected_components(
         if changed == 0:
             break
     else:
-        raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
+        raise RuntimeError(f"connected_components: no convergence in {_CC_ROUNDS} rounds")
     return labels.select("node", F.col("lbl").alias("component"))
 
 
@@ -825,7 +831,6 @@ def stitch_lines(
     a_col: str = "a",
     b_col: str = "b",
     weight_col: str | None = None,
-    max_iter: int = 30,
 ) -> DataFrame:
     """Polyline stitching (line merge): group line segments into maximal
     connected chains by SHARED ENDPOINT NODE ID, one row per chain —
@@ -849,11 +854,11 @@ def stitch_lines(
       are neither and the caller sees them via ``max_degree``,
     - ``total_weight`` = exact integer sum of ``weight_col`` if given.
 
-    Physical shape: the O(log n) min-label + pointer-jumping
-    ``connected_components`` over the endpoint graph (its documented
-    bounded driver loop), then two map-side-combined rollups (segment
+    Physical shape: ``connected_components`` over the endpoint graph
+    (one union-find task once its edge count fits, else its bounded
+    driver loop), then two map-side-combined rollups (segment
     counts/weights; node degrees) joined on the chain key — no
-    per-chain collect, no Python, all counts exact int64.
+    per-chain collect, all counts exact int64.
     """
     cols = [
         F.col(seg_id).alias("_sid"),
@@ -863,7 +868,7 @@ def stitch_lines(
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("long").alias("_w"))
     e = segments.select(*cols)
-    cc = connected_components(e, "_a", "_b", max_iter=max_iter, pre_reduce=True)
+    cc = connected_components(e, "_a", "_b")
 
     seg_lab = e.join(cc.withColumnRenamed("node", "_a"), "_a")
     seg_aggs = [F.count(F.lit(1)).alias("n_segments")]
@@ -1166,7 +1171,7 @@ def boruvka_mst(
         # accumulated MST instead would hand label propagation a tree
         # of ever-growing diameter (observed: non-convergence at 10k
         # points), the classic Boruvka implementation mistake.
-        sub = connected_components(best, src="pu", dst="pv", pre_reduce=True).select(
+        sub = connected_components(best, src="pu", dst="pv").select(
             F.col("node").alias("_oc"), F.col("component").alias("_nc")
         )
         comp = (

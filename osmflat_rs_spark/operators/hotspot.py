@@ -17,8 +17,9 @@ Scale shape, in order:
 2. neighbor-edge generation by exploding each core cell to its 8
    neighbor keys and equi-joining against the core set (cells, not
    points — typically 10^3-10^6 rows at 100 TB);
-3. :func:`connected_components` over the cell graph — O(log n) rounds
-   of bounded shuffles on (cell, label) rows;
+3. :func:`connected_components` over the cell graph — one union-find
+   task while the cell graph fits its solve budget, else O(log n)
+   rounds of bounded shuffles on (cell, label) rows;
 4. one equi-join of the original points against (cell -> cluster).
 
 Labels are deterministic: a cluster's id is the MINIMUM cell key it
@@ -231,8 +232,8 @@ def dbscan(
     1. one exact self radius-join (`knn.radius_join` cell-cover
        machinery) — the only O(pairs) stage;
     2. per-point neighbor counts (map-side-combined agg) → core set;
-    3. `graph.connected_components` on core-core edges (O(log n)
-       min-label + pointer-jumping rounds), isolated cores via
+    3. `graph.connected_components` on core-core edges (spanning-forest
+       reduction, then one union-find task), isolated cores via
        self-loops;
     4. border assignment = one semi-filtered join + min-agg.
     """
@@ -278,10 +279,10 @@ def dbscan(
     cc_in = core_edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         core.select(F.col("cid").alias("src"), F.col("cid").alias("dst"))
     )
-    # pre_reduce: the core-core radius graph is DENSE (avg degree ≈
-    # 2·min_pts or far more), exactly the shape the spanning-forest
-    # reduction collapses before the label-propagation rounds
-    labels = connected_components(cc_in, pre_reduce=True)  # (node, component)
+    # the core-core radius graph is DENSE (avg degree ≈ 2·min_pts or
+    # far more), exactly the shape connected_components' spanning-forest
+    # reduction collapses before its one-task solve
+    labels = connected_components(cc_in)  # (node, component)
     cores_out = labels.select(
         F.col("node").alias(id_col),
         F.col("component").alias("cluster"),
@@ -363,7 +364,6 @@ def geometric_median(
     lat: str = "lat",
     lon: str = "lon",
     iters: int = 5,
-    broadcast_medians: bool = True,
 ) -> DataFrame:
     """Per-group GEOMETRIC MEDIAN (the L1/Fermat point — the robust
     companion of `mean_center`: minimizes the SUM of distances, so one
@@ -379,11 +379,9 @@ def geometric_median(
     mean-center init resolve typical clouds to ~1e-6 of the fixpoint.
 
     Scale shape per round: one join of the one-row-per-group medians
-    table onto the points (broadcast by default — pass
-    ``broadcast_medians=False`` when the group count itself is huge)
-    + one map-side-combined aggregate. Init = exact-decimal mean center
-    (the `mean_center` discipline). → (group, n, med_lat, med_lon),
-    fixed-point doubles."""
+    table onto the points (broadcast) + one map-side-combined
+    aggregate. Init = exact-decimal mean center (the `mean_center`
+    discipline). → (group, n, med_lat, med_lon), fixed-point doubles."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     dec = "decimal(38,0)"
@@ -404,8 +402,7 @@ def geometric_median(
         (F.col("_sx").cast("double") / F.col("n").cast("double")).alias("_cx"),
     )
     for _ in range(iters):
-        m = F.broadcast(med) if broadcast_medians else med
-        j = base.join(m, "_g")
+        j = base.join(F.broadcast(med), "_g")
         dx = F.col("_x").cast("double") - F.col("_cx")
         dy = F.col("_y").cast("double") - F.col("_cy")
         d = F.sqrt(dx * dx + dy * dy)

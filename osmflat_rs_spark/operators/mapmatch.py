@@ -56,7 +56,6 @@ def map_match(
     ts_col: str = "ts",
     point_id: str = "event_id",
     cell_size: int = 1 << 16,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """→ (entity, step, point_id, sid, snap_lon, snap_lat): the
     Viterbi-optimal segment assignment per (matched) trajectory point.
@@ -82,7 +81,6 @@ def map_match(
         radius=radius,
         cell_size=cell_size,
         k=max(int(k), 2),  # k=1 path has no rank col; Viterbi wants >=2 anyway
-        broadcast_queries=broadcast_queries,
     ).filter(F.col("rank") <= int(k))
     j = cand.join(
         slim.withColumnRenamed("pid", "query_id"), "query_id"

@@ -16,8 +16,8 @@ made distributed without any global-order window:
    minima — the same windowless two-pass as the dense index, NOT a
    `Window.orderBy` that would collapse to one partition at 10^12
    rows);
-3. join the tiny (x, ymin, prefmin) dimension back (broadcast by
-   default) and keep rows where NOT (prefmin ≤ y ∨ ymin < y).
+3. broadcast the tiny (x, ymin, prefmin) dimension back and keep rows
+   where NOT (prefmin ≤ y ∨ ymin < y).
 
 Step 3's predicate is the exact dominance test: a strictly-smaller-x
 column dominates p iff its best y is ≤ p.y (strictness supplied by
@@ -43,29 +43,24 @@ def skyline_2d(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    broadcast_dim: bool = True,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Rows of ``df`` on the (minimize x, minimize y) Pareto front.
 
     Exact for integer-valued criteria (both are cast to long — the
-    engine-wide exact-int discipline). ``broadcast_dim=False`` degrades
-    the join back to shuffle-hash for a pathological distinct-x count
-    (the dimension is |distinct x| rows — usually tiny next to the
-    corpus)."""
+    engine-wide exact-int discipline). The dimension is |distinct x|
+    rows — tiny next to the input — and always broadcasts."""
     x, y = F.col(x_col).cast("long"), F.col(y_col).cast("long")
     base = df.withColumn("_sx", x).withColumn("_sy", y)
     colmin = base.groupBy("_sx").agg(F.min("_sy").alias("_ymin"))
     dim = exclusive_prefix_min(
         colmin, "_sx", "_ymin", out_col="_pref", num_partitions=num_partitions
     )
-    if broadcast_dim:
-        dim = F.broadcast(dim)
     dominated = (F.col("_pref").isNotNull() & (F.col("_pref") <= F.col("_sy"))) | (
         F.col("_ymin") < F.col("_sy")
     )
     return (
-        base.join(dim, "_sx")
+        base.join(F.broadcast(dim), "_sx")
         .filter(~dominated)
         .drop("_sx", "_sy", "_ymin", "_pref")
     )

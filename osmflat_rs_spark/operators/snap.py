@@ -77,7 +77,6 @@ def nearest_segment_join(
     point_id: str = "query_id",
     seg_id: str = "sid",
     exact_fallback: bool = False,
-    broadcast_queries: bool = True,
     k: int = 1,
 ) -> DataFrame:
     """→ (point_id, seg_id, d2, t, snap_lon, snap_lat): the nearest
@@ -156,11 +155,8 @@ def nearest_segment_join(
     )
     # The cover side is an explode fan-out with inflated size estimates —
     # hint the query side explicitly so Spark never broadcast-builds the
-    # multi-M-row cover; pass broadcast_queries=False for query sets too
-    # big to broadcast (the join degrades to a shuffle equi-join on
-    # cell, same results).
-    q_side = F.broadcast(q_cells) if broadcast_queries else q_cells
-    cand = q_side.join(seg_cells, "cell")
+    # multi-M-row cover.
+    cand = F.broadcast(q_cells).join(seg_cells, "cell")
     d2, tc, qx, qy = _seg_distance_cols_pre(
         F.col("px"), F.col("py"), F.col("x1"), F.col("y1"),
         F.col("dxd"), F.col("dyd"), F.col("len2"),
@@ -207,7 +203,6 @@ def linear_reference(
     point_id: str = "query_id",
     cell_size: int = 1 << 16,
     max_seq: int = 1_000_000,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """LINEAR REFERENCING (milepost / route-offset location): snap each
     point to its nearest in-radius route segment and return the
@@ -258,7 +253,6 @@ def linear_reference(
         cell_size=cell_size,
         point_id=point_id,
         seg_id="sid",
-        broadcast_queries=broadcast_queries,
     )
     meta = seg.select(
         "sid", F.col("_rid").alias(route_id), F.col("_seq").alias("seq"),

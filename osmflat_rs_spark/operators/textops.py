@@ -355,9 +355,7 @@ def contamination(
     )
 
 
-def unigram_logprob(
-    docs: DataFrame, id_col: str, text_col: str, broadcast_vocab: bool = True
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Corpus-unigram-LM quality score (the CCNet-style cheap perplexity
     proxy — Wenzek et al. 2020 use a real LM; the unigram form is the
     standard cheap stand-in) → (id, n_tokens, avg_neg_log2p), where
@@ -366,20 +364,18 @@ def unigram_logprob(
     rare-token soup). Empty docs keep a row with NULL score.
 
     Plan shape: ONE token explode feeds both the vocabulary aggregate
-    (map-side-combined groupBy(tok)) and the scoring join; with
-    ``broadcast_vocab`` the vocabulary (distinct corpus tokens — small
-    vs the corpus, but set False beyond ~10^8 tokens) broadcasts so the
-    corpus-side token stream joins without an exchange, leaving the
-    per-doc mean as the only corpus-keyed shuffle (combined partials).
+    (map-side-combined groupBy(tok)) and the scoring join; the
+    vocabulary (distinct corpus tokens — small vs the corpus)
+    broadcasts so the corpus-side token stream joins without an
+    exchange, leaving the per-doc mean as the only corpus-keyed shuffle
+    (combined partials).
     """
     toks = docs.select(
         F.col(id_col), F.explode(words_expr(F.col(text_col))).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count("*").alias("_cnt"))
     total = vocab.agg(F.sum("_cnt").alias("_total"))
-    v = vocab.crossJoin(F.broadcast(total))
-    if broadcast_vocab:
-        v = F.broadcast(v)
+    v = F.broadcast(vocab.crossJoin(F.broadcast(total)))
     scored = (
         toks.join(v, "tok")
         .groupBy(id_col)
@@ -544,9 +540,7 @@ def pii_scrub(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(F.col(id_col), cur.alias("text_clean"), *counts)
 
 
-def bigram_logprob(
-    docs: DataFrame, id_col: str, text_col: str, broadcast_vocab: bool = True
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Corpus-bigram-LM quality score with add-one smoothing → (id,
     n_bigrams, avg_neg_log2p): the sequence-aware step up from
     `unigram_logprob` (word-salad text scores high here even when its
@@ -559,10 +553,8 @@ def bigram_logprob(
     codegen, no self-join on token position), then ONE explode feeds
     both the count aggregates and the scoring join, exactly the
     unigram operator's shape. The bigram table is Zipf-shaped but
-    distinct-bounded; with ``broadcast_vocab`` both count tables
-    broadcast so scoring adds zero exchanges beyond the per-doc mean
-    (set False when distinct bigrams outgrow the broadcast budget —
-    then it's two shuffle joins keyed by w1w2/w1).
+    distinct-bounded; both count tables broadcast so scoring adds zero
+    exchanges beyond the per-doc mean.
     """
     w = words_expr(F.col(text_col))
     n = F.size(w)
@@ -577,10 +569,8 @@ def bigram_logprob(
     ).select(id_col, F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
     toks = docs.select(F.explode(words_expr(F.col(text_col))).alias("tok"))
     vsize = toks.agg(F.count_distinct("tok").alias("_v"))
-    bcnt = bg.groupBy("w1", "w2").agg(F.count("*").alias("_cb"))
-    ccnt = bg.groupBy("w1").agg(F.count("*").alias("_c1"))
-    if broadcast_vocab:
-        bcnt, ccnt = F.broadcast(bcnt), F.broadcast(ccnt)
+    bcnt = F.broadcast(bg.groupBy("w1", "w2").agg(F.count("*").alias("_cb")))
+    ccnt = F.broadcast(bg.groupBy("w1").agg(F.count("*").alias("_c1")))
     scored = (
         bg.join(bcnt, ["w1", "w2"]).join(ccnt, "w1").crossJoin(F.broadcast(vsize))
         .groupBy(id_col)
@@ -696,7 +686,6 @@ def frequent_pairs(
     text_col: str,
     min_support: int | None = None,
     min_support_frac: tuple | None = None,
-    broadcast_items: bool = True,
 ) -> DataFrame:
     """Frequent co-occurring token pairs (2-itemsets, Apriori-pruned) →
     (item_a, item_b, n_docs, support_a, support_b, lift): the
@@ -713,8 +702,7 @@ def frequent_pairs(
     in-row-deduped tokens feeds the item-support aggregate; (2) items
     below threshold are dropped BEFORE any pair is formed (a pair of
     infrequent items can't be frequent — the monotonicity lemma), via a
-    broadcast semi-join (``broadcast_items=False`` for a shuffle join
-    when the frequent vocabulary outgrows the broadcast budget); (3)
+    broadcast semi-join; (3)
     pairs come from a self-equi-join of the PRUNED (doc, item) table on
     doc — whole-stage codegen, no per-row Python, fan-out bounded by
     per-doc FREQUENT-item counts, with AQE handling doc skew; (4) one
@@ -742,8 +730,7 @@ def frequent_pairs(
             F.col("support") * F.lit(den) >= F.lit(num) * F.col("_n")
         ).select("item", "support")
         thr = None  # applied below with the joined _n column
-    fr = F.broadcast(freq) if broadcast_items else freq
-    pruned = toks.join(fr.select("item"), "item").select("_id", "item")
+    pruned = toks.join(F.broadcast(freq).select("item"), "item").select("_id", "item")
     a = pruned.select("_id", F.col("item").alias("item_a"))
     b = pruned.select("_id", F.col("item").alias("item_b"))
     pairs = (
@@ -761,8 +748,8 @@ def frequent_pairs(
     sa = freq.select(F.col("item").alias("item_a"), F.col("support").alias("support_a"))
     sb = freq.select(F.col("item").alias("item_b"), F.col("support").alias("support_b"))
     return (
-        pairs.join(F.broadcast(sa) if broadcast_items else sa, "item_a")
-        .join(F.broadcast(sb) if broadcast_items else sb, "item_b")
+        pairs.join(F.broadcast(sa), "item_a")
+        .join(F.broadcast(sb), "item_b")
         .select(
             "item_a",
             "item_b",
@@ -1558,7 +1545,6 @@ def pmi_collocations(
     id_col: str,
     text_col: str,
     min_count: int = 5,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Pointwise-mutual-information collocations (Church & Hanks 1990)
     → one row per adjacent bigram with c_xy ≥ min_count: (w1, w2,
@@ -1576,9 +1562,8 @@ def pmi_collocations(
 
     Plan shape: bigrams in-row (two slices zipped, zero self-join),
     ONE explode shared by the bigram and unigram reduces, both
-    map-side combined; the unigram table joins back twice — broadcast
-    when the vocab fits (``broadcast_vocab``), else two shuffle joins
-    keyed by the word. Scalar N's ride a 1-row broadcast. Output is
+    map-side combined; the unigram table joins back twice, broadcast.
+    Scalar N's ride a 1-row broadcast. Output is
     distinct-bigram-bounded (Zipf-truncated by min_count), never
     corpus-row-bounded."""
     if min_count < 1:
@@ -1599,10 +1584,8 @@ def pmi_collocations(
     nuni = toks.agg(F.count(F.lit(1)).alias("n_uni"))
     bcnt = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_xy"))
     nbi = bg.agg(F.count(F.lit(1)).alias("n_bi"))
-    u1 = uni.select(F.col("tok").alias("w1"), F.col("c").alias("c_x"))
-    u2 = uni.select(F.col("tok").alias("w2"), F.col("c").alias("c_y"))
-    if broadcast_vocab:
-        u1, u2 = F.broadcast(u1), F.broadcast(u2)
+    u1 = F.broadcast(uni.select(F.col("tok").alias("w1"), F.col("c").alias("c_x")))
+    u2 = F.broadcast(uni.select(F.col("tok").alias("w2"), F.col("c").alias("c_y")))
     cand = bcnt.filter(F.col("c_xy") >= min_count)
     j = (
         cand.join(u1, "w1")

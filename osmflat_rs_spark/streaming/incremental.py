@@ -196,8 +196,8 @@ def stream_coloc_assign(
     (radius, window_us), exactly once, by composing the verified batch
     kernel (operators/coloc.py:coloc_join) onto a streaming source. The
     stream side carries the stateless 27x neighborhood explode and the
-    reference side is broadcast (``broadcast_right=True``), so the plan
-    is Project -> explode -> BroadcastHashJoin -> Filter — append mode,
+    reference side is broadcast (``coloc_join`` always broadcasts it), so
+    the plan is Project -> explode -> BroadcastHashJoin -> Filter — append mode,
     no state store; the checkpoint tracks only source progress. The
     live form of the geofence/proximity-alert workload ("which arriving
     pings are near a known asset, at the right time").
@@ -218,7 +218,6 @@ def stream_coloc_assign(
         lat_col=lat,
         lon_col=lon,
         res=res,
-        broadcast_right=True,
     )
     return (
         pairs.writeStream.format("parquet")

@@ -1,8 +1,8 @@
 """Round-6 machinery: stats-reset checkpoint (the BigInt snowball fix)
 and its disk-only form, operators and ordered scans leaving no
 CacheManager entry,
-partition-spanning-forest reduction, the CC reduce-then-solve path, and
-the signed-zero ROUND restoration."""
+partition-spanning-forest reduction, the CC branches the edge count
+picks, and the signed-zero ROUND restoration."""
 
 import math
 import random
@@ -10,6 +10,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from osmflat_rs_spark.operators import graph
 from osmflat_rs_spark.operators.graph import (
     _partition_spanning_forest,
     _solve_components_one_task,
@@ -123,17 +124,27 @@ def _docs(spark):
 
 
 def _path_cc_one_round(spark):
-    # a path needs several rounds, so max_iter=1 raises mid-loop
+    # a path forced onto the iterative rounds needs several of them, so
+    # a one-round budget raises mid-loop
     path = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
-    with pytest.raises(RuntimeError, match="no convergence"):
-        connected_components(path, max_iter=1).count()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "_CC_SOLVE_EDGES", 0)
+        mp.setattr(graph, "_CC_ROUNDS", 1)
+        with pytest.raises(RuntimeError, match="no convergence"):
+            connected_components(path).count()
+
+
+def _cc_forced_iteration(spark):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "_CC_SOLVE_EDGES", 0)
+        connected_components(_edges(spark)).count()
 
 
 @pytest.mark.parametrize(
     "call",
     [
         lambda s: connected_components(_edges(s)).count(),
-        lambda s: connected_components(_edges(s), pre_reduce=True).count(),
+        _cc_forced_iteration,
         lambda s: label_propagation(_edges(s)).count(),
         lambda s: dbscan(_points(s), 25_000, 4).count(),
         lambda s: boruvka_mst(_edges(s)).count(),
@@ -150,7 +161,7 @@ def _path_cc_one_round(spark):
         lambda s: assign_dense_index(_points(s), ["node_idx"], group_col="cat").count(),
     ],
     ids=[
-        "cc", "cc_pre_reduce", "lpa", "dbscan", "boruvka", "spatial_mi", "corpus_kl", "cc_raises",
+        "cc", "cc_forced_iteration", "lpa", "dbscan", "boruvka", "spatial_mi", "corpus_kl", "cc_raises",
         "kaplan_meier", "concurrency_curve", "skyline_2d", "home_range", "pack_sequences",
         "exact_quantile", "dense_index", "dense_index_grouped",
     ],
@@ -189,7 +200,7 @@ def test_spanning_forest_preserves_components_with_duplicates(spark):
     edges = [(min(u, v), max(u, v)) for u, v in edges if u != v]
     edges += edges[:200]  # duplicates are part of the contract
     df = spark.createDataFrame(edges, "u long, v long").repartition(8)
-    red = _partition_spanning_forest(df, target_edges_per_task=300)
+    red = _partition_spanning_forest(df, -(-len(edges) // 300))
     kept = [(r["u"], r["v"]) for r in red.collect()]
     # bound is Σ_p (nodes_p − 1), not the unique-edge count: a duplicate
     # split across partitions may be kept twice (harmless — union-find
@@ -202,18 +213,62 @@ def test_spanning_forest_preserves_components_with_duplicates(spark):
     assert solved == model
 
 
-def test_connected_components_pre_reduce_matches_default(spark):
+def test_connected_components_branches_match_union_find(spark, monkeypatch, caplog):
+    """Every branch the edge count can pick gives the union-find labels:
+    the default one-task solve, a solve after a forced forest reduction
+    (small per-task target, the forest fits the budget), and the
+    iterative rounds (solve budget 0, the only branch that logs)."""
     rng = random.Random(11)
     edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(1500)]
     edges += [(n, n) for n in (777, 888)]  # isolated self-loop nodes
     df = spark.createDataFrame(edges, "src long, dst long")
-    base = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    fast = {
-        r["node"]: r["component"]
-        for r in connected_components(df, pre_reduce=True).collect()
-    }
-    assert base == fast
-    assert fast[777] == 777 and fast[888] == 888
+    want = _model_components(edges)
+    assert want[777] == 777 and want[888] == 888
+
+    def run():
+        caplog.clear()
+        with caplog.at_level("INFO", logger=graph.__name__):
+            got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+        return got, len([r for r in caplog.records if r.name == graph.__name__])
+
+    assert run() == (want, 0)
+    monkeypatch.setattr(graph, "_CC_REDUCE_EDGES", 600)
+    monkeypatch.setattr(graph, "_CC_SOLVE_EDGES", 1000)
+    assert run() == (want, 0)
+    monkeypatch.setattr(graph, "_CC_SOLVE_EDGES", 0)
+    assert run() == (want, 1)
+    assert connected_components(df.filter(F.lit(False))).count() == 0
+
+
+def _cc_jobs(spark, df):
+    """Spark jobs one connected_components call runs while building its
+    plan (its checkpoints and counts)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"cc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one connected_components call")
+    try:
+        connected_components(df)
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_reduction_counts_once(spark, monkeypatch):
+    """A forest reduction runs its checkpoint and one count of its
+    output, two jobs each (the exchange's map stage, then the result):
+    the reduction reuses the count the loop already took of its input
+    instead of counting that input again, which cost two jobs more."""
+    rng = random.Random(3)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(1500)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    solved = _cc_jobs(spark, df)
+    # 1500 edges > 1000: one reduction into ceil(1500/600) = 3 forests of
+    # at most 3·299 = 897 edges, which fit the solve budget
+    monkeypatch.setattr(graph, "_CC_REDUCE_EDGES", 600)
+    monkeypatch.setattr(graph, "_CC_SOLVE_EDGES", 1000)
+    assert _cc_jobs(spark, df) == solved + 4
 
 
 def test_xtrack_round_restores_duckdb_signed_zero(spark, tmp_path):

@@ -256,7 +256,7 @@ def test_coloc_join_two_table_matches_bruteforce(spark):
     r, w = 400_000, 1_000_000_000_000
     got = coloc_join(
         spark.createDataFrame(pts), spark.createDataFrame(ref),
-        radius=r, window_us=w, broadcast_right=True,
+        radius=r, window_us=w,
     ).toPandas()
     want = set()
     for a in pts.itertuples():
@@ -314,7 +314,7 @@ def test_stream_coloc_assign_matches_batch_exactly_once(spark, tmp_path):
 
 
 def test_coloc_join_broadcast_plan_never_shuffles_left(spark):
-    """With broadcast_right=True the big/streaming side must reach the
+    """The reference side broadcasts, so the big/streaming side must reach the
     join through Project/explode only — zero Exchange on the left path
     (the shape stream_coloc_assign relies on for stateless append mode)."""
     from osmflat_rs_spark.operators.coloc import coloc_join
@@ -322,7 +322,7 @@ def test_coloc_join_broadcast_plan_never_shuffles_left(spark):
     pts = spark.createDataFrame(_synth_points(200, seed=41))
     ref = spark.createDataFrame(_synth_points(20, seed=42).rename(columns={"event_id": "ref_id"}))
     plan = (
-        coloc_join(pts, ref, radius=100_000, window_us=3_600_000_000, broadcast_right=True)
+        coloc_join(pts, ref, radius=100_000, window_us=3_600_000_000)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan, plan[:3000]

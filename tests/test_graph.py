@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from osmflat_rs_spark.operators import graph
 from osmflat_rs_spark.operators.graph import (
     connected_components,
     dedup_cluster_representatives,
@@ -50,12 +51,15 @@ def test_matches_union_find_on_mixed_topology(spark):
     assert got2 == want
 
 
-def test_chain_converges_in_log_rounds(spark):
-    # a 140-node chain: plain neighbor-min needs ~140 rounds; pointer
-    # jumping must land it within the (tight) max_iter budget below
+def test_chain_converges_in_log_rounds(spark, monkeypatch):
+    # a 140-node chain forced onto the iterative path: plain neighbor-min
+    # needs ~140 rounds; pointer jumping must land it within the (tight)
+    # round budget below
+    monkeypatch.setattr(graph, "_CC_SOLVE_EDGES", 0)
+    monkeypatch.setattr(graph, "_CC_ROUNDS", 12)
     edges = [(i, i + 1) for i in range(140)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["component"] for r in connected_components(df, max_iter=12).collect()}
+    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert got == {i: 0 for i in range(141)}
 
 
@@ -72,14 +76,31 @@ def test_representatives_flag(spark):
     assert {n for n, r in rows.items() if r["is_representative"]} == {3, 20}
 
 
-def test_validation_and_guard(spark):
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError):
-        connected_components(df, max_iter=0)
+def test_validation_and_guard(spark, monkeypatch):
     # an honest non-convergence guard: 1 round cannot finish a chain
+    monkeypatch.setattr(graph, "_CC_SOLVE_EDGES", 0)
+    monkeypatch.setattr(graph, "_CC_ROUNDS", 1)
     chain = spark.createDataFrame([(i, i + 1) for i in range(50)], "src long, dst long")
-    with pytest.raises(RuntimeError):
-        connected_components(chain, max_iter=1)
+    with pytest.raises(RuntimeError, match="no convergence in 1 rounds"):
+        connected_components(chain)
+
+
+def test_iterative_fallback_is_logged(spark, monkeypatch, caplog):
+    """Falling back from the one-task solve to the iterative rounds
+    leaves one INFO record naming the edge count and the budget; the
+    default budget solves this graph in one task and logs nothing."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(30)], "src long, dst long")
+    with caplog.at_level("INFO", logger=graph.__name__):
+        connected_components(df)
+    assert not [r for r in caplog.records if r.name == graph.__name__]
+    monkeypatch.setattr(graph, "_CC_SOLVE_EDGES", 10)
+    with caplog.at_level("INFO", logger=graph.__name__):
+        got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    assert got == {i: 0 for i in range(31)}
+    recs = [r for r in caplog.records if r.name == graph.__name__]
+    assert len(recs) == 1 and recs[0].levelname == "INFO"
+    msg = recs[0].getMessage()
+    assert "30 edges" in msg and "budget of 10" in msg
 
 
 def _bf_model(edges, sources, max_hops):

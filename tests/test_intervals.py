@@ -154,13 +154,6 @@ def test_bbox_join_matches_bruteforce_any_cell_size(spark):
             for r in bbox_join(ldf, rdf, cell, left_id="la", right_id="rb").collect()
         }
         assert got == want, f"cell={cell}"
-    # broadcast path identical
-    got_b = {
-        tuple(r)
-        for r in bbox_join(ldf, rdf, 64, left_id="la", right_id="rb",
-                           broadcast_right=True).collect()
-    }
-    assert got_b == want
 
 
 def test_bbox_join_touching_containment_poison_validation(spark):

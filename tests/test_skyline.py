@@ -31,9 +31,6 @@ def test_skyline_matches_bruteforce(spark):
     got = {r["id"] for r in skyline_2d(df, "x", "y").collect()}
     assert got == want
     assert {500, 501} <= got
-    got_sh = {r["id"] for r in
-              skyline_2d(df.repartition(7), "x", "y", broadcast_dim=False).collect()}
-    assert got_sh == want
 
 
 def test_skyline_staircase_and_column_ties(spark):

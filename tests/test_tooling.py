@@ -1,8 +1,9 @@
 """Repository tooling checks: no dead module-level definitions in the
 package, bench.py or scripts/, no persist/cache calls in operators or
-plans, the gate registry's pinned oracle texts, and the gate checker
-(scripts/gate.py): its row canonicalization, multiset row diff, oracle
-type-widening check and per-gate verdicts."""
+plans, no plan-selector parameters on operators, the gate registry's
+pinned oracle texts, and the gate checker (scripts/gate.py): its row
+canonicalization, multiset row diff, oracle type-widening check and
+per-gate verdicts."""
 
 import ast
 import hashlib
@@ -61,6 +62,30 @@ def test_operators_do_not_persist():
             ):
                 found.append(f"{path.relative_to(REPO)}:{node.lineno} .{node.func.attr}(")
     assert not found, "persist/cache calls in operators or plans:\n" + "\n".join(found)
+
+
+def test_operators_take_no_plan_selector_options():
+    """An operator picks its own physical plan (from its input, or the one
+    branch its callers run), so no operator function takes a
+    ``pre_reduce`` or ``broadcast_*`` parameter. The one exception is
+    knn's ``broadcast_cover``: the bucketed-layout path keeps it until
+    its cover is reworked."""
+    allowed = {("knn.py", "broadcast_cover")}
+    found = []
+    for path in sorted((PACKAGE / "operators").rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            a = node.args
+            for arg in [*a.posonlyargs, *a.args, *a.kwonlyargs]:
+                name = arg.arg
+                if (name == "pre_reduce" or name.startswith("broadcast_")) and (
+                    path.name,
+                    name,
+                ) not in allowed:
+                    found.append(f"{path.relative_to(REPO)}:{arg.lineno} {name}")
+    assert not found, "plan-selector parameters in operators:\n" + "\n".join(found)
 
 
 def test_oracle_sql_fingerprints():

@@ -241,21 +241,6 @@ def test_decode_image_pil_fallback():
     assert img.shape == (3, 4) and (img == 77).all()
 
 
-def test_embedding_cosine_salt_invariance(spark):
-    """Triangle salting distributes hot-bucket work; results must be
-    byte-identical to the unsalted join."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = {
-        (r["id_a"], r["id_b"], round(r["cosine"], 9))
-        for r in dedup.embedding_cosine_pairs(emb, "vec_id", "embedding", "label", -1.0).collect()
-    }
-    salted = {
-        (r["id_a"], r["id_b"], round(r["cosine"], 9))
-        for r in dedup.embedding_cosine_pairs(emb, "vec_id", "embedding", "label", -1.0, salt=4).collect()
-    }
-    assert base == salted and len(base) > 0
-
-
 def test_embedding_neardup_srp_subset_and_recall(spark):
     """SRP-bucketed global near-dup (the scale escape from the all-pairs
     form): output must be a SUBSET of the exact global pair set (exact
@@ -448,22 +433,6 @@ def test_ivf_sample_repartition_invariant(spark):
     c2 = ann.train_ivf_centroids(emb.repartition(13), n_clusters=8, sample_size=200)
     c3 = ann.train_ivf_centroids(emb.coalesce(1), n_clusters=8, sample_size=200)
     assert np.array_equal(c1, c2) and np.array_equal(c1, c3)
-
-
-def test_ngram_jaccard_salt_invariance(spark):
-    """VERDICT r02 #9: triangle salting on the exact jaccard (both the
-    pair-enumeration and word-intersection joins) must be byte-identical
-    to the unsalted form — work spread, never dropped or duplicated."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dedup.ngram_jaccard_pairs(docs, "doc_id", "text", "lang", 0.2).collect()
-    }
-    salted = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dedup.ngram_jaccard_pairs(docs, "doc_id", "text", "lang", 0.2, salt=4).collect()
-    }
-    assert base == salted and len(base) > 0
 
 
 def test_minhash_signature_shapes_agree(spark):
@@ -661,11 +630,6 @@ def test_ngram_jaccard_prefix_method_identical(spark):
     assert (4, 5) in {(a, b) for a, b, _ in base}
     assert not any(6 in (a, b) for a, b, _ in base)
     assert not any({a, b} == {1, 8} for a, b, _ in base)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="salt"):
-        dedup.ngram_jaccard_pairs(crafted, "doc_id", "text", "lang", 0.6, salt=4, method="prefix")
 
 
 # ---------------------------------------------------------------------------
@@ -1622,15 +1586,14 @@ def test_frequent_pairs_matches_model(spark):
         for r in frequent_pairs(df, "doc_id", "text", min_support=abs_thr).collect()
     }
     assert got_abs == {k: v[0] for k, v in want.items()}
-    # shuffle-join prune path and partition layout: same answer
-    got_sh = {
+    # partition layout: same answer
+    got_rp = {
         (r["item_a"], r["item_b"]): (r["n_docs"], r["support_a"], r["support_b"], r["lift"])
         for r in frequent_pairs(
-            df.repartition(7), "doc_id", "text",
-            min_support_frac=(num, den), broadcast_items=False,
+            df.repartition(7), "doc_id", "text", min_support_frac=(num, den),
         ).collect()
     }
-    assert got_sh == want
+    assert got_rp == want
 
 
 def test_frequent_pairs_validation(spark):
@@ -1824,14 +1787,11 @@ def test_containment_pairs_asymmetric_and_model(spark):
             c = len(A & B) / len(A)
             if c >= 0.8:
                 want[(ia, ib)] = c
-    for salt in (None, 3):
-        got = {
-            (r["id_a"], r["id_b"]): r["containment"]
-            for r in containment_pairs(
-                df, "doc_id", "text", "source", threshold=0.8, salt=salt
-            ).collect()
-        }
-        assert got == want, f"salt={salt}"
+    got = {
+        (r["id_a"], r["id_b"]): r["containment"]
+        for r in containment_pairs(df, "doc_id", "text", "source", threshold=0.8).collect()
+    }
+    assert got == want
     # the asymmetry is the point: snippet->page yes, page->snippet no
     assert (1, 2) in want and (2, 1) not in want
     # near-equal sets give BOTH directions
@@ -2766,10 +2726,6 @@ def test_pmi_collocations_matches_counter_model(spark):
     assert set(got) == {k for k, c in bi.items() if c >= 5}
     # "new york" is a true collocation: pmi far above the independent pairs
     assert got[("new", "york")]["pmi"] > got[("aa", "bb")]["pmi"] + 0.5
-    # shuffle-join variant agrees exactly
-    got2 = {(r["w1"], r["w2"]): r["pmi"] for r in
-            pmi_collocations(df, "doc_id", "text", min_count=5, broadcast_vocab=False).collect()}
-    assert got2 == {k: v["pmi"] for k, v in got.items()}
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
